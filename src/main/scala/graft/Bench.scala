@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -15,13 +14,7 @@ object Bench {
     // so byte-based sizing starves it of cores). The r19 scaling
     // observation (sub-second tail faster at 8 cores) is scheduler
     // overhead on sub-second fixtures, not a recoverable win.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: JIT/codegen the scan, agg, join and window paths once so
     // the first timed query doesn't absorb several seconds of JVM warmup.

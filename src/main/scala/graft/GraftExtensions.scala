@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Session-extension entry point (`spark.sql.extensions=graft.GraftExtensions`
   * or `SparkSession.builder.withExtensions(new GraftExtensions)`): registers
@@ -25,4 +25,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.RewriteSelfDotToNormSq)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
+}
+
+object GraftExtensions {
+  /** The local session the mains (Bench, Verify, ScaleSmoke, ProfileOne,
+    * PlanDump) run on: `local[cpus]` with graft's extensions, one
+    * shuffle partition per core, UTC session time, no UI.
+    */
+  def localSession(cpus: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .withExtensions(new GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
 }

@@ -2,11 +2,7 @@ package graft
 /** Regenerates the round-3 sections of PLANS.md (dev tool, run manually). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftExtensions.localSession("32")
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
     args.foreach { name =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthetic 10× scale smoke (dev/maintenance main, not driver-run):
@@ -115,13 +114,7 @@ object ScaleSmoke {
     val only = sys.env.get("SPARK_GRAFT_SMOKE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val scaled = Q.scratchDir(s"scale_${reps}x_${new java.io.File(sfDir).getName}")

@@ -313,7 +313,9 @@ object Joins {
       // the demonstration). Results are the plain join, so the oracle is
       // ordinary SQL.
       (s, d) => {
-        val sfTag = new java.io.File(d).getName.replace('.', '_')
+        // table names take only [A-Za-z0-9_]: a fixture directory named
+        // `sf-0.001` must not become an unparseable identifier
+        val sfTag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9_]", "_")
         val ot = s"graft_orders_bkt_$sfTag"; val ct = s"graft_cust_bkt_$sfTag"
         // a fresh session's in-memory catalog is empty but the managed
         // location may persist from an earlier run — drop both

@@ -396,7 +396,7 @@ object Scans {
         TsStore.zorder(s, dir, clusterCols = Seq("user_id", "value"),
           uidCols = Seq("event_type"))
         val pred = col("user_id").between(3, 7) && col("value") <= 120.0
-        TsStore.load(s, dir, prune = Some(pred)).filter(pred)
+        TsStore.load(s, dir).filter(pred)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"))
           .orderBy(col("event_id"))
@@ -433,7 +433,7 @@ object Scans {
             .forall(f => !pre.files.contains(f)),
           "every in-scope file must be replaced")
         val pred = col("event_type") === "view" && col("user_id").between(3, 7)
-        TsStore.load(s, dir, prune = Some(pred)).filter(pred)
+        TsStore.load(s, dir).filter(pred)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"))
           .orderBy(col("event_id"))
@@ -550,10 +550,10 @@ object Scans {
       // Schema evolution through the store's MERGE: the upsert delta is
       // WIDER than the base (adds a `score` column) and touches only the
       // purchase partition. upsertPlan takes the UNION of the two schemas
-      // (base read mergeSchema, unionByName allowMissingColumns), so the
-      // rewritten partition carries the new column while the four
-      // untouched partitions keep their old footprint — a
-      // mergeSchema=true read surfaces score as null for them. No
+      // (unionByName allowMissingColumns), so the rewritten partition
+      // carries the new column while the four untouched partitions keep
+      // their old footprint — the upsert widens the declared schema, and
+      // a read surfaces score as null for them. No
       // table-format DDL, no full-store rewrite: at 100 TB adding a
       // column costs exactly the partitions the delta touches. The
       // arithmetic (value*2, value+0.5) is exact IEEE on both engines.
@@ -570,7 +570,7 @@ object Scans {
             (col("value") + 0.5).as("score"))
         TsStore.upsert(s, dir, delta, keyCols = Seq("event_id"),
           versionCol = "version", tsCol = "ts", uidCols = Seq("event_type"))
-        TsStore.load(s, dir, mergeSchema = true)
+        TsStore.load(s, dir)
           .select(col("event_id"), col("value"), col("score"), col("version"))
           .orderBy(col("event_id"))
       },
@@ -582,7 +582,7 @@ object Scans {
         "CAST(CASE WHEN event_type = 'purchase' AND event_id % 5 = 0 " +
         "THEN 2 ELSE 1 END AS BIGINT) AS version " +
         "FROM events ORDER BY event_id"),
-      "schema evolution: a wider upsert delta adds a column to touched partitions only; mergeSchema reads surface it as null elsewhere"),
+      "schema evolution: a wider upsert delta adds a column to touched partitions only; reads surface it as null elsewhere"),
 
     "store_incremental_view" -> DeclaredQuery(
       // Incremental materialized-view maintenance over the change feed
@@ -730,7 +730,7 @@ object Scans {
         TsStore.write(base, dir, tsCol = "ts", uidCols = Seq("event_type"))
         graft.sources.StoreLog.ensure(dir)
         val pred = col("v_q").isNull
-        TsStore.load(s, dir, prune = Some(pred)).filter(pred)
+        TsStore.load(s, dir).filter(pred)
           .select(col("event_id"), col("user_id"), col("event_type"))
           .orderBy(col("event_id"))
       },

@@ -34,9 +34,11 @@ class Bundles(spark: SparkSession, basePath: String,
     * `allowNewColumns = true` opts into the reference's dynamic-schema
     * behavior (chunks of one series may carry different column sets;
     * SURVEY §1.1): the append-time schema-drift guard is relaxed to a
-    * type-compatibility check on the SHARED columns only, and reads must
-    * pass `mergeSchema = true` to reassemble the union (absent columns
-    * come back null — the NaN analog).
+    * type-compatibility check on the SHARED columns only. Reads of a
+    * logged collection carry the union its declaration holds; reads of
+    * an unlogged one reassemble it when the session sets
+    * `spark.sql.parquet.mergeSchema` (absent columns come back null —
+    * the NaN analog).
     */
   def write(uid: String, df: DataFrame, collection: String = defaultCollection,
             tsCol: String = "ts",
@@ -67,18 +69,20 @@ class Bundles(spark: SparkSession, basePath: String,
     // far away, at merge-read time, with an opaque error).
     if (mode == SaveMode.Append) {
       try {
-        // Uniform collections (the common case) read ONE footer: the
-        // guard itself keeps every chunk's schema identical, so any
-        // footer is representative and the check is O(1) per append.
-        // Safety is deterministic: the fast path only ACCEPTS a chunk
-        // whose schema exactly matches an existing chunk's (such an
-        // append can never introduce new drift or type conflicts —
-        // whatever heterogeneity exists already existed). Any
-        // disagreement with the sampled footer falls through to the
-        // deterministic mergeSchema-union check, which is also what
-        // dynamic-schema appends always use (a single footer would miss
-        // columns and type conflicts living on other chunks).
-        def unionSchema = TsStore.load(spark, dir(collection), mergeSchema = true).schema
+        // A logged collection's schema is its declaration: the union
+        // of its chunks, O(1) to read. An unlogged one reads ONE
+        // footer, which for uniform collections (the common case) is
+        // representative — the guard itself keeps every chunk's schema
+        // identical. The fast path only ACCEPTS a chunk whose schema
+        // exactly matches that footer's (such an append can never
+        // introduce new drift or type conflicts); any disagreement, and
+        // every dynamic-schema append, falls through to the check
+        // against the union of all footers.
+        val d = dir(collection)
+        val sampled = TsStore.load(spark, d).schema
+        def unionSchema =
+          if (StoreLog.canLog(d) && StoreLog.exists(d)) sampled
+          else spark.read.option("mergeSchema", true).parquet(d).schema
         val incoming = tagged.schema
         def check(existing: org.apache.spark.sql.types.StructType): Boolean = {
           if (!allowNewColumns &&
@@ -86,9 +90,7 @@ class Bundles(spark: SparkSession, basePath: String,
           val exTypes = existing.fields.map(f => f.name -> f.dataType).toMap
           incoming.fields.forall(f => exTypes.get(f.name).forall(_ == f.dataType))
         }
-        val fastPath = !allowNewColumns &&
-          check(TsStore.load(spark, dir(collection)).schema)
-        if (!fastPath) {
+        if (allowNewColumns || !check(sampled)) {
           val merged = unionSchema
           if (!allowNewColumns) {
             require(merged.fieldNames.toSet == incoming.fieldNames.toSet,
@@ -119,12 +121,10 @@ class Bundles(spark: SparkSession, basePath: String,
            start: Option[java.sql.Timestamp] = None,
            end: Option[java.sql.Timestamp] = None,
            columns: Seq[String] = Seq.empty,
-           meta: Map[String, Any] = Map.empty,
-           mergeSchema: Boolean = false): DataFrame = {
+           meta: Map[String, Any] = Map.empty): DataFrame = {
     val cols = if (columns.nonEmpty) (Seq(tsCol) ++ columns).distinct else columns
     TsStore.read(spark, dir(collection), uid = Some((UidCol, uid)),
-      tsCol = tsCol, start = start, end = end, columns = cols, meta = meta,
-      mergeSchema = mergeSchema)
+      tsCol = tsCol, start = start, end = end, columns = cols, meta = meta)
   }
 
   /** Read several named series in one scan: the uid IN-list becomes a
@@ -136,10 +136,9 @@ class Bundles(spark: SparkSession, basePath: String,
                tsCol: String = "ts",
                start: Option[java.sql.Timestamp] = None,
                end: Option[java.sql.Timestamp] = None,
-               columns: Seq[String] = Seq.empty,
-               mergeSchema: Boolean = false): DataFrame = {
+               columns: Seq[String] = Seq.empty): DataFrame = {
     import org.apache.spark.sql.functions.col
-    var df = TsStore.load(spark, dir(collection), mergeSchema)
+    var df = TsStore.load(spark, dir(collection))
       .filter(col(UidCol).isin(uids: _*))
     start.foreach(s => df = df.filter(col(tsCol) >= s))
     end.foreach(e => df = df.filter(col(tsCol) <= e))
@@ -452,7 +451,7 @@ class Bundles(spark: SparkSession, basePath: String,
         // inflate the reported ratio on any store not yet vacuumed
         val before = snap.files.size.toLong
         val staging = TsStore.txnDir(dir(collection))
-        TsStore.write(TsStore.load(spark, dir(collection), mergeSchema = true),
+        TsStore.write(TsStore.load(spark, dir(collection)),
           staging, tsCol = tsCol, uidCols = Seq(UidCol))
         val (_, movedN) = StoreLog.withWriterLease(dir(collection)) { _ =>
           val moved =
@@ -557,7 +556,7 @@ class Bundles(spark: SparkSession, basePath: String,
         val snap = StoreLog.read(dir(collection), v)
         val before = snap.files.count(_.startsWith(partPrefix + "/")).toLong
         val staging = TsStore.txnDir(dir(collection))
-        val rows = TsStore.load(spark, dir(collection), mergeSchema = true)
+        val rows = TsStore.load(spark, dir(collection))
           .filter(org.apache.spark.sql.functions.col(UidCol) === uid)
         TsStore.write(rows, staging, tsCol = tsCol, uidCols = Seq(UidCol))
         val movedN = StoreLog.withWriterLease(dir(collection)) { _ =>

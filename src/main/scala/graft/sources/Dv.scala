@@ -139,28 +139,4 @@ object Dv {
     */
   def contains(positions: Array[Long], pos: Long): Boolean =
     java.util.Arrays.binarySearch(positions, pos) >= 0
-
-  /** The data file `rel`'s absolute path as Spark's scan metadata
-    * renders it: `_metadata.file_path` carries the URL-ENCODED URI of
-    * the file-system-qualified path (an escaped partition directory
-    * `uid=k 1%3Aa` reads back as `uid=k%201%253Aa`). Computed with the
-    * same Path→URI mechanics the scan uses, so a dictionary keyed by
-    * this rendering matches scan-side values EXACTLY — no suffix
-    * probing (pinned against escaped partition values in DvSpec).
-    */
-  def absUri(conf: Configuration, path: String, rel: String): String = {
-    val uri = {
-      val p = new HPath(s"$path/$rel")
-      p.getFileSystem(conf).makeQualified(p).toUri
-    }
-    // Path-style spelling of the qualified URI with the RAW (encoded)
-    // components: `file:/tmp/...`, `hdfs://host/...` — `URI.toString`
-    // would render an empty authority as `file:///`, which the scan's
-    // value never carries
-    val sb = new StringBuilder
-    if (uri.getScheme != null) sb.append(uri.getScheme).append(':')
-    if (uri.getRawAuthority != null) sb.append("//").append(uri.getRawAuthority)
-    sb.append(uri.getRawPath)
-    sb.toString
-  }
 }

@@ -532,6 +532,21 @@ object FileStats {
     }
   }
 
+  /** The file-keep rule of every manifest prune (the scan's static and
+    * stripe-lazy tiers, the scoped resolution of the delete verbs):
+    * `rel`'s recorded stats plus the partition pseudo-stats its
+    * directory values imply under `schema`
+    * ([[GraftTable.partPseudoStats]] — partition columns never appear
+    * in footer stats, so without them a partition predicate prunes
+    * nothing) may satisfy `node`. A file with no stats at all is kept.
+    */
+  def fileMayMatch(rel: String, stats: Option[FileStatsMap],
+                   schema: org.apache.spark.sql.types.StructType,
+                   node: org.apache.spark.sql.GraftShim.PNode): Boolean = {
+    val all = stats.getOrElse(Map.empty) ++ GraftTable.partPseudoStats(rel, schema)
+    all.isEmpty || mayMatch(all, node)
+  }
+
   /** Prune `files` to those that MAY hold a row matching `pred`. Files
     * without recorded stats are kept; so is everything when the
     * predicate has no prunable shape.

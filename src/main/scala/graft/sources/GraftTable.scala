@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
@@ -45,12 +46,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * executor touches a byte: (1) partition-value pruning — each file's
   * `name=value` directory segments become synthetic per-file bounds, so
   * a uid predicate drops whole partitions at plan time; (2) manifest-
-  * stat pruning — the same [[FileStats.mayMatch]] walk the Scala
-  * `TsStore.load(prune=)` path uses, dropping files whose recorded
-  * bounds exclude the predicate; (3) parquet row-group skipping — the
-  * surviving filters ride into Spark's own vectorized parquet reader
-  * (the identical `ParquetFileFormat` machinery `FileSourceScanExec`
-  * ships), which also consults the store's bloom filters. Column
+  * stat pruning — [[FileStats.fileMayMatch]], dropping files whose
+  * recorded bounds exclude the predicate; (3) parquet row-group
+  * skipping — the surviving filters ride into Spark's own vectorized
+  * parquet reader (the identical `ParquetFileFormat` machinery
+  * `FileSourceScanExec` ships), which also consults the store's bloom
+  * filters. Column
   * pruning flows through `pruneColumns` into the reader's required
   * schema. Reported statistics (manifest row counts + file sizes) feed
   * the planner's broadcast decision for free.
@@ -151,10 +152,9 @@ object GraftTable {
     * written carries one stable physical name per column, whatever the
     * declared (logical) name says today. `ALTER TABLE RENAME COLUMN`
     * is then a pure metadata commit: no file rewrite, no per-file era
-    * tracking, and the internal DataFrame machinery (mergeSchema
-    * reads, CDC, compaction, upsert) keeps operating on one coherent
-    * physical schema. Translation happens only at the DSv2 face:
-    * scans request physical names (positions carry the data, the
+    * tracking, and the internal DataFrame machinery (CDC, compaction,
+    * upsert) keeps operating on one coherent physical schema.
+    * Translation happens only at the DSv2 face: scans request physical names (positions carry the data, the
     * declared order is preserved), writers rename their schema fields
     * before parquet setup, and pushed filters/aggregates translate per
     * name. Partition columns and the time column refuse renames — the
@@ -169,10 +169,9 @@ object GraftTable {
     * parquet widening: int32→int64, float→double, same-scale decimal
     * precision growth), new writes land the declared wide type. The
     * field records its pre-widen type under this key, which doubles as
-    * the "this store mixes physical widths" marker: internal DataFrame
-    * reads then pass the declared schema EXPLICITLY instead of
-    * mergeSchema (parquet footer merging refuses int32/int64 mixes —
-    * the reader's upcast path is per-file and has no such limit).
+    * the "this store mixes physical widths" marker. Every read
+    * requests the declared schema, and the reader's upcast path is
+    * per-file (parquet footer MERGING would refuse int32/int64 mixes).
     * Narrowing and cross-family retypes refuse: they need data
     * rewrites this catalog deliberately doesn't hide behind DDL.
     */
@@ -183,18 +182,6 @@ object GraftTable {
     */
   def hasRetypes(schema: StructType): Boolean =
     schema.fields.exists(_.metadata.contains(PhysicalTypeKey))
-
-  /** The EXPLICIT read schema for internal frames of a retyped store:
-    * the declared schema under physical names. `None` when the
-    * snapshot declares no schema or no field was retyped — callers
-    * fall back to mergeSchema, byte-identical to the pre-widening
-    * behavior.
-    */
-  private[sources] def typedReadSchema(snap: StoreLog.Snapshot): Option[StructType] =
-    snap.props.get(SchemaProp)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .filter(hasRetypes)
-      .map(d => toPhysical(d, d))
 
   /** The parquet column name `f`'s data lives under (its name unless a
     * rename recorded an original).
@@ -298,35 +285,45 @@ object GraftTable {
       Some(t.references.head.fieldNames.head)
     else None
 
+  /** The [[SchemaProp]] declaration in a manifest's props, if any. */
+  private[graft] def declaredIn(props: Map[String, String]): Option[StructType] =
+    props.get(SchemaProp).map(j => DataType.fromJson(j).asInstanceOf[StructType])
+
   /** The store's schema: the declared [[SchemaProp]] when the (possibly
     * `asOf`-versioned) manifest carries one — the catalog contract,
     * which both honors ALTER ADD/DROP COLUMN (the prop is per-manifest,
     * so time travel reads the era's declaration) and protects declared
-    * types from partition-value-inference narrowing. Stores with no
-    * declaration (adopted / pure-Scala-API) infer from the live files.
+    * types from partition-value-inference narrowing. The commit that
+    * creates a store declares one ([[StoreLog.ensure]]), or else its
+    * first commit that adds files ([[widenedSchemaProp]]); manifests
+    * without one fall back to [[inferSchema]] over the live files.
     */
   private[sources] def resolveSchema(spark: SparkSession, path: String,
                                      asOf: Option[Long]): StructType = {
     // the declared schema lives in RAW manifest props — resolving it
-    // must never decode a million-file checkpoint sidecar; only
-    // declaration-less (adopted / pure-Scala) stores fall through to
-    // file inference, which reads footers anyway
+    // must never decode a million-file checkpoint sidecar
     val vOpt =
       if (StoreLog.canLog(path)) asOf.orElse(StoreLog.mainVersion(path))
       else None
     vOpt match {
       case Some(v) =>
-        StoreLog.propsAt(path, v).get(SchemaProp)
-          .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-          .getOrElse {
-            if (StoreLog.liveFileCount(path, v) == 0L)
-              throw new IllegalArgumentException(
-                s"store at $path has no data files and no declared schema")
-            TsStore.load(spark, path, asOf = asOf).schema
-          }
-      case _ => TsStore.load(spark, path, asOf = asOf).schema
+        declaredIn(StoreLog.propsAt(path, v))
+          .getOrElse(inferSchema(spark, path, StoreLog.read(path, v).files))
+      case _ => spark.read.parquet(path).schema
     }
   }
+
+  /** The one schema inference: the union of `files`' footers plus the
+    * partition columns their directory values imply (the types a plain
+    * `spark.read.parquet` of the store infers), in that order. A store's
+    * creating commit declares it once ([[StoreLog.ensure]]); later reads
+    * infer only for manifests written before that. Zero files raise
+    * Spark's UNABLE_TO_INFER_SCHEMA AnalysisException.
+    */
+  private[graft] def inferSchema(spark: SparkSession, path: String,
+                                 files: Seq[String]): StructType =
+    spark.read.option("mergeSchema", true).option("basePath", path)
+      .parquet(files.map(f => s"$path/$f"): _*).schema
 
   /** SET / DROP NOT NULL as one metadata commit — the engine behind
     * `CALL system.set_not_null` (Spark's analyzer hard-refuses `ALTER
@@ -367,15 +364,26 @@ object GraftTable {
     * the SAME commit (new fields at tail, nullable) — so Scala-API
     * writes and catalog DDL stay one coherent schema history. DROPped
     * tombstones stay dropped: re-writing such a column leaves its data
-    * undeclared until a rewrite retires the old files. No declaration,
-    * no change — file-inferred stores stay file-authoritative.
+    * undeclared until a rewrite retires the old files. A declared
+    * partition type widens too when a directory value of `addFiles`
+    * does not parse under it ([[widenPartitionTypes]]). A store with no
+    * declaration yet (a manifest from before declarations, or a store
+    * born empty) gets its first one here, inferred once over the files
+    * `liveAfter` the commit.
     */
-  private[graft] def widenedSchemaProp(parentProps: Map[String, String],
-                                       written: StructType): Map[String, String] =
+  private[graft] def widenedSchemaProp(path: String,
+                                       parentProps: Map[String, String],
+                                       written: StructType,
+                                       addFiles: Seq[String],
+                                       liveAfter: => Seq[String]): Map[String, String] =
     parentProps.get(SchemaProp) match {
-      case None => Map.empty
+      case None =>
+        val files = liveAfter
+        if (files.isEmpty) Map.empty
+        else Map(SchemaProp -> inferSchema(SparkSession.active, path, files).json)
       case Some(j) =>
-        val declared = DataType.fromJson(j).asInstanceOf[StructType]
+        val parentDeclared = DataType.fromJson(j).asInstanceOf[StructType]
+        val declared = widenPartitionTypes(parentDeclared, addFiles)
         // a column is "already declared" under its logical OR physical
         // name: internal rewrites (compaction staging read-back, sink
         // upsert) carry PHYSICAL frame names for renamed columns, and
@@ -384,10 +392,36 @@ object GraftTable {
           .flatMap(f => Seq(f.name, physicalName(f))).toSet
         val extra = written.fields.filter(f => !have.contains(f.name) &&
           !parentProps.contains(s"$DroppedPropPrefix${f.name}"))
-        if (extra.isEmpty) Map.empty
+        if (extra.isEmpty && (declared eq parentDeclared)) Map.empty
         else Map(SchemaProp ->
           StructType(declared.fields ++ extra.map(_.copy(nullable = true))).json)
     }
+
+  /** `declared` with each partition column's type widened until every
+    * directory value in `addFiles` parses under it. A type inferred at
+    * creation from numeric-looking values (`uid=7203` → int) goes to
+    * long when the new values fit one (`uid=3000000000`), else to
+    * string (`uid=AAPL`); a value no read could cast would otherwise
+    * fail every scan of its file. Returns `declared` itself when
+    * nothing widens.
+    */
+  private def widenPartitionTypes(declared: StructType,
+                                  addFiles: Seq[String]): StructType = {
+    def parses(dt: DataType, raw: String): Boolean = dt match {
+      case StringType => true
+      case IntegerType => raw.toIntOption.isDefined
+      case LongType => raw.toLongOption.isDefined
+      case _ => Cast(Literal(raw), dt, Some("UTC"), EvalMode.TRY).eval(null) != null
+    }
+    val fields = declared.fields.map { f =>
+      val vs = addFiles.flatMap(partSegRaw(_, physicalName(f)).flatten).distinct
+      if (vs.forall(parses(f.dataType, _))) f
+      else if (f.dataType == IntegerType && vs.forall(parses(LongType, _)))
+        f.copy(dataType = LongType)
+      else f.copy(dataType = StringType)
+    }
+    if (fields.sameElements(declared.fields)) declared else StructType(fields)
+  }
 
   /** Partition column names of the store's file layout (empty for an
     * unpartitioned or empty store; an empty store falls back to the
@@ -733,10 +767,15 @@ private[sources] object PartPredEval {
   * provenance column) — so `readStream → writeStream.format("graft-
   * store")` is a full store-to-store incremental sync with zero user
   * code.
+  *
+  * `pinned` fixes the snapshot every scan of the table reads — the
+  * internal reads of [[TsStore.readFilesDv]] name an exact (possibly
+  * file-restricted) snapshot instead of a version to resolve.
   */
 class GraftTable(val path: String, asOf: Option[Long],
                  declaredSchema: StructType, declaredParts: Seq[String],
-                 tsCol: String, startingVersion: Long = 1L)
+                 tsCol: String, startingVersion: Long = 1L,
+                 pinned: Option[StoreLog.Snapshot] = None)
   extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDeleteV2
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -931,7 +970,7 @@ class GraftTable(val path: String, asOf: Option[Long],
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(SparkSession.active, path, asOf, declaredSchema,
-      startingVersion)
+      startingVersion, pinned = pinned)
 
   /** The NATIVE batch write ([[GraftBatchWrite]]):
     * `RequiresDistributionAndOrdering` makes Spark range-partition +
@@ -981,7 +1020,8 @@ class GraftTable(val path: String, asOf: Option[Long],
 class GraftScanBuilder(spark: SparkSession, path: String, asOf: Option[Long],
                        fullSchema: StructType, startingVersion: Long = 1L,
                        rowLevel: Boolean = false,
-                       rowLevelDelta: Boolean = false)
+                       rowLevelDelta: Boolean = false,
+                       pinned: Option[StoreLog.Snapshot] = None)
   extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
@@ -1012,7 +1052,7 @@ class GraftScanBuilder(spark: SparkSession, path: String, asOf: Option[Long],
     * replaces.
     */
   private lazy val bigStore: Boolean =
-    StoreLog.canLog(path) && {
+    pinned.isEmpty && StoreLog.canLog(path) && {
       val vOpt = asOf.orElse(StoreLog.mainVersion(path))
       vOpt.exists(v =>
         StoreLog.liveFileCount(path, v) >= StoreLog.LazySnapshotThreshold)
@@ -1098,7 +1138,8 @@ class GraftScanBuilder(spark: SparkSession, path: String, asOf: Option[Long],
   // ----------------------------------------------------- agg pushdown
 
   private lazy val aggSnap: Option[StoreLog.Snapshot] =
-    (if (StoreLog.canLog(path))
+    (if (pinned.isDefined) pinned
+    else if (StoreLog.canLog(path))
       asOf.orElse(StoreLog.mainVersion(path)).map(v => StoreLog.read(path, v))
     else None)
       // renamed columns: stats are recorded under PHYSICAL names —
@@ -1673,7 +1714,7 @@ class GraftScanBuilder(spark: SparkSession, path: String, asOf: Option[Long],
         // snapshot the acceptance was judged on (a newer commit could
         // hold files the filter cannot decide) — snapshot isolation the
         // plan wants anyway
-        pinnedSnap = if (exactPart.nonEmpty) aggSnap else None)
+        pinnedSnap = pinned.orElse(if (exactPart.nonEmpty) aggSnap else None))
   }
 }
 
@@ -1830,16 +1871,12 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
         .map(f => GraftTable.physicalName(f) -> f.name)
         .filter { case (p, l) => p != l }.toMap
     val keep: StoreLog.FileEntry => Boolean = e =>
-      allowed.forall(_.contains(e.path)) && (node match {
-        case None => true
-        case Some(nd) =>
-          val raw = e.stats.getOrElse(Map.empty)
-          val logical =
-            if (back.isEmpty) raw
-            else raw.map { case (c, cs) => back.getOrElse(c, c) -> cs }
-          val stats = logical ++ GraftTable.partPseudoStats(e.path, fullSchema)
-          stats.isEmpty || FileStats.mayMatch(stats, nd)
-      })
+      allowed.forall(_.contains(e.path)) && node.forall { nd =>
+        val logical =
+          if (back.isEmpty) e.stats
+          else e.stats.map(_.map { case (c, cs) => back.getOrElse(c, c) -> cs })
+        FileStats.fileMayMatch(e.path, logical, fullSchema, nd)
+      }
     // the footer-of-footers skip: the summary's merged bounds cover
     // only columns EVERY file records, so mayMatch == false over them
     // proves NO checkpoint row can match — the whole payload's rows
@@ -2067,17 +2104,30 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
       case None => base0
       case Some(p) =>
         val node = org.apache.spark.sql.GraftShim.predTree(p)
-        val kept = base0.filter { f =>
-          val stats = snap.stats.getOrElse(f, Map.empty) ++
-            GraftTable.partPseudoStats(f, fullSchema)
-          stats.isEmpty || FileStats.mayMatch(stats, node)
-        }
         // zero-file scans are legal in DSv2 (empty partition array)
-        kept
+        base0.filter(f => FileStats.fileMayMatch(f, snap.stats.get(f), fullSchema, node))
     }
   }
 
   override def toBatch: Batch = this
+
+  /** Files and bytes the scan planned, reported as driver metrics under
+    * the file scan's own names (`numFiles`, `filesSize`).
+    */
+  @volatile private var filesRead: (Long, Long) = (0L, 0L)
+
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new GraftFilesMetric, new GraftBytesMetric)
+
+  override def reportDriverMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    def m(n: String, v: Long) = new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+    Array(m("numFiles", filesRead._1), m("filesSize", filesRead._2))
+  }
 
   /** File lengths for `files`: the manifest's recorded `sizes` first —
     * ZERO metadata RPCs on a stats-complete store, however many files
@@ -2126,6 +2176,7 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
     val files = plannedFiles
     if (files.isEmpty) return Array.empty
     val lens: Seq[(String, Long)] = lensFor(files)
+    filesRead = (lens.size.toLong, lens.map(_._2).sum)
     val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition
       .maxSplitBytes(spark, lens.map(_._2).sum)
     // splits in INPUT ORDER (per file: ascending offsets). A file with
@@ -2471,6 +2522,22 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
     override def numRows(): util.OptionalLong =
       rowsOpt.fold(util.OptionalLong.empty())(util.OptionalLong.of)
   }
+}
+
+/** The scan's driver metrics ([[GraftScan.reportDriverMetrics]]):
+  * top-level classes, because Spark instantiates a metric class by name
+  * to aggregate its values.
+  */
+private[sources] class GraftFilesMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "numFiles"
+  override def description(): String = "number of files read"
+}
+
+private[sources] class GraftBytesMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "filesSize"
+  override def description(): String = "size of files read"
 }
 
 /** A bin-packed file partition that also CARRIES its storage partition

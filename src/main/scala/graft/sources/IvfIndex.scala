@@ -477,7 +477,7 @@ object IvfIndex {
         .select(col("q_id"), col("q_emb"), col("nbr_id"))
       val ids = pool.select("nbr_id").distinct().collect().map(_.getLong(0)).toSeq
       val idPred = col("vec_id").isin(ids: _*)
-      val embs = TsStore.load(spark, s"$dir/cells", prune = Some(idPred))
+      val embs = TsStore.load(spark, s"$dir/cells")
         .filter(col("cell").isin(probedCells: _*) && idPred)
         .select(col("vec_id").as("nbr_id"), col("embedding"))
       val scored = broadcast(pool).join(embs, "nbr_id")

@@ -1473,6 +1473,10 @@ object StoreLog {
     * directory contents if not. Init races resolve through the same CAS:
     * both writers list the same committed files (staging dirs are
     * hidden), so the loser just adopts the winner's identical v1.
+    * Adopting files DECLARES the store's schema
+    * ([[GraftTable.SchemaProp]], unless `props` carries one): the
+    * schema a parquet read of the files infers, inferred this once so
+    * no later read has to.
     */
   def ensure(path: String,
              checkpointInterval: Int = CheckpointInterval,
@@ -1489,11 +1493,16 @@ object StoreLog {
         // yet to derive them from
         val (st, sz) = FileStats.forFilesWithSizes(path, files,
           digestCols = Some(bloomCols))
+        val declared =
+          if (files.isEmpty || props.contains(GraftTable.SchemaProp)) None
+          else org.apache.spark.sql.SparkSession.getActiveSession
+            .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+            .map(s => GraftTable.SchemaProp -> GraftTable.inferSchema(s, path, files).json)
         commit(path, 0L, Seq.empty, files,
           interval = Some(checkpointInterval),
           addStats = st, addSizes = sz,
           bloomCols = if (bloomCols.nonEmpty) Some(bloomCols) else None,
-          setProps = props); ()
+          setProps = props ++ declared); ()
       }
       catch { case _: CommitConflict => () }
       latest(path).get

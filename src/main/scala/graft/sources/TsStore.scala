@@ -118,18 +118,31 @@ object TsStore {
     val nulls = inExt.map(_.getAs[Long]("__in_nulls")).sum
     require(nulls == 0, s"$nulls null $tsCol values — refusing write")
     if (inExt.isEmpty) return Seq.empty
+    // the DSv2 face reads logged and unmanifested directories alike and
+    // names each row's store-relative file in `_file`
     val stored =
-      try load(spark, path)
+      try spark.read.format("graft").load(path)
       catch { case _: org.apache.spark.sql.AnalysisException => return Seq.empty }
-    val uidPred = keyPredicate(inExt.toSeq, uidCols)
+    // a key value the stored column's type cannot hold (`AAPL` against
+    // a uid column inferred int) names no stored series — and compared
+    // as it is, it would fail the ANSI cast of the IN-list
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+    val storedTypes = stored.schema.fields.map(f => f.name -> f.dataType).toMap
+    val keys = inExt.toSeq.filter(r => uidCols.indices.forall { i =>
+      r.get(i) == null || storedTypes.get(uidCols(i)).forall(t =>
+        Cast(Literal.create(r.get(i), incoming.schema(uidCols(i)).dataType), t,
+          Some("UTC"), EvalMode.TRY).eval() != null)
+    })
+    if (keys.isEmpty) return Seq.empty
+    val uidPred = keyPredicate(keys, uidCols)
     // keys compare as STRINGS: partition-column type inference can read
     // a numeric-looking string uid back as int ("123" → 123), and the
     // driver-side map lookup must not silently miss the overlap for it.
-    // Grouping by input file gives per-CHUNK extents (ts-sorted chunked
+    // Grouping by file gives per-CHUNK extents (ts-sorted chunked
     // writes make these tight); chunk count per uid is bounded by write
     // cadence, and compact() collapses it.
     val storedExt = stored.filter(uidPred)
-      .groupBy((uidCols.map(col) :+ input_file_name().as("__file")): _*)
+      .groupBy((uidCols.map(col) :+ col(GraftTable.FileColName)): _*)
       .agg(min(col(tsCol)).as("__st_min"), max(col(tsCol)).as("__st_max"))
       .collect()
       .groupBy(r => uidCols.indices.map(i => String.valueOf(r.get(i))).toSeq)
@@ -329,7 +342,8 @@ object TsStore {
                 removeFiles = Nil, addFiles = moved,
                 addStats = movedStats, addSizes = movedSizes,
                 tag = commitTag,
-                setProps = GraftTable.widenedSchemaProp(curProps, dfW.schema))
+                setProps = GraftTable.widenedSchemaProp(path, curProps, dfW.schema, moved,
+                  StoreLog.read(path, curV).files ++ moved))
             else {
               // REF-AWARE base: under an active branch the tip's file
               // list may be the OTHER ref's view — resolve the target
@@ -343,7 +357,8 @@ object TsStore {
                 tag = commitTag,
                 resetDvs = dvReset,
                 setProps =
-                  GraftTable.widenedSchemaProp(cur.props, dfW.schema) ++ refProps)
+                  GraftTable.widenedSchemaProp(path, cur.props, dfW.schema, moved,
+                    (cur.files ++ baseFiles ++ moved).distinct) ++ refProps)
             }
             committed = true
           } catch {
@@ -496,21 +511,14 @@ object TsStore {
     // composite-key predicate's reduce from seeing an empty collection)
     if (touched.isEmpty)
       return delta.withColumn("__src", lit(1)).transform(dedupLatest(keyCols, versionCol))
-    // mergeSchema: on a schema-evolved store the base schema must be the
-    // UNION of the live footers — a first-footer read could silently
-    // drop a column that only some partitions carry, and the rewrite
-    // below would then erase it from the touched partitions for good.
-    // The union is taken over the TOUCHED partitions' files only (the
-    // load is manifest-pruned to the delta's partition values BEFORE
-    // the relation resolves): they are the only files the rewrite
-    // covers, a column living solely in untouched partitions still
-    // surfaces through read-time mergeSchema afterwards, and on a
-    // million-file store this is the difference between O(touched)
-    // footer reads and an O(store) metadata pass per upsert.
+    // the base reads under the declared schema — the union of every
+    // era's columns, so a column only some partitions carry survives the
+    // rewrite of the touched ones — and the partition predicate pushes
+    // into the scan: untouched partitions are pruned at plan time (a
+    // million-file store resolves only the may-match files)
     val basePred = keyPredicate(touched.toSeq, uidCols)
     val base =
-      try load(spark, path, mergeSchema = true, prune = Some(basePred),
-        asOf = asOf)
+      try load(spark, path, asOf = asOf)
       catch { case _: org.apache.spark.sql.AnalysisException =>
         return delta.withColumn("__src", lit(1)).transform(dedupLatest(keyCols, versionCol)) }
     // UNION of the two schemas, not the delta's projection: a delta
@@ -518,9 +526,9 @@ object TsStore {
     // from the rewritten partitions (carried-over base rows keep their
     // values; delta rows get null for columns they didn't supply — the
     // whole-row MERGE UPDATE semantics). A wider delta adds its new
-    // columns the same way (schema evolution; older partitions surface
-    // them as null through mergeSchema reads). Same-name type conflicts
-    // still fail loudly in unionByName.
+    // columns the same way (schema evolution; the commit widens the
+    // declaration, so older partitions read them as null). Same-name
+    // type conflicts still fail loudly in unionByName.
     base.filter(basePred)
       .withColumn("__src", lit(0))
       .unionByName(delta.withColumn("__src", lit(1)), allowMissingColumns = true)
@@ -612,12 +620,15 @@ object TsStore {
             "validated against them; re-run the write")
       }
       try {
+        val removed = removeFilesOf(expectedV)
         return StoreLog.commitTransform(path, expectedV, replaced,
-          removeFilesOf(expectedV), moved,
+          removed, moved,
           addStats = movedStats, addSizes = movedSizes, addDvs = addDvs,
           tag = tag,
           setProps = schemaForWiden.fold(Map.empty[String, String])(sc =>
-            GraftTable.widenedSchemaProp(props, sc)) ++ extraProps)
+            GraftTable.widenedSchemaProp(path, props, sc, moved,
+              StoreLog.read(path, expectedV).files.filterNot(removed.toSet) ++ moved)) ++
+            extraProps)
       } catch {
         case c: StoreLog.CommitConflict =>
           attempts += 1
@@ -1131,7 +1142,7 @@ object TsStore {
     // scoped resolution: past the lazy threshold only the may-match
     // files (stats/sizes/dvs riding along) materialize — the takedown's
     // driver cost tracks its SCOPE on a million-file store
-    var base = scopedBase(path, baseV, pred)
+    val base = scopedBase(path, baseV, pred)
     if (base.files.isEmpty) return base.version
     // the FIND side of the copy-on-write: manifest-stat pruning first
     // (a delete by merge key on a stat-carrying store opens only the
@@ -1140,39 +1151,12 @@ object TsStore {
     // Pruning is conservative; stat-less files are always candidates.
     val candidates = FileStats.prune(base.files, base.stats, pred)
     if (candidates.isEmpty) return base.version
-    def readFiles(fs: Seq[String]) =
-      readFilesDv(spark, path, base, fs, mergeSchema = true)
-    // which candidate files hold matching rows — the copy-on-write unit.
-    // input_file_name() yields the scan's URL-ENCODED file URI; decoding
-    // it ONCE recovers the raw on-disk path byte-for-byte (Spark encoded
-    // the on-disk path once), so a suffix match against the manifest's
-    // relative paths is exact even for escaped partition values
-    // ('day=... 09%3A30%3A00' directories). Matching the file NAME alone
-    // would NOT be sound: one write job reuses 'part-00000-<jobuuid>'
-    // across every partition directory it writes, so a name key smears
-    // a one-partition delete over all of them. If a URI ever fails to
-    // parse, fall back to the name-key SUPERSET — correctness-safe (it
-    // only rewrites extra files' survivors), just wider IO. Driver
-    // cost: one string per affected file, the budget of a manifest
-    // delta.
-    def findAffected(fs: Seq[String]): Array[String] =
-      readFiles(fs).filter(pred)
-        .select(input_file_name().as("__f"))
-        .distinct().collect().map(_.getString(0))
-    val affectedUris =
-      try findAffected(candidates)
-      catch {
-        // a predicate column may exist only in pruned-away files'
-        // schemas (schema evolution) — resolve over the full live set
-        // instead (re-resolving a FILTERED base fully first); those
-        // extra files' rows are null on it and can't match, so the
-        // result is identical, just unpruned
-        case _: org.apache.spark.sql.AnalysisException =>
-          if (base.filtered) base = StoreLog.read(path, baseV)
-          findAffected(base.files)
-      }
-    if (affectedUris.isEmpty) return base.version
-    val affected = matchManifest(path, base, affectedUris)
+    // which candidate files hold matching rows — the copy-on-write
+    // unit, named by the scan's store-relative `_file`. Driver cost:
+    // one string per affected file, the budget of a manifest delta.
+    val affected = affectedFiles(candidates,
+      readFilesDv(spark, path, base, candidates, keepMeta = true).filter(pred))
+    if (affected.isEmpty) return base.version
     // conflict unit = the affected files' partition directories, read
     // off the manifest's own paths (never re-rendered from values)
     val prefixes: Set[String] = affected.map { f =>
@@ -1184,7 +1168,7 @@ object TsStore {
     // rows where pred is TRUE go; null-pred rows stay (SQL DELETE).
     // Dv-aware read: a replacement of an already-vectored file must not
     // resurrect its vectored rows (the new file carries no vector).
-    val survivors = readFilesDv(spark, path, base, affected, mergeSchema = true)
+    val survivors = readFilesDv(spark, path, base, affected)
       .filter(!coalesce(pred, lit(false)))
     val staging = txnDir(path)
     val rangeCols: Seq[Column] = uidCols.map(col) :+ col(tsCol)
@@ -1354,15 +1338,10 @@ object TsStore {
                               base: StoreLog.Snapshot, candidates: Seq[String],
                               matcher: DataFrame => DataFrame,
                               branch: Option[String] = None): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
-    // scan-rendered uri → (manifest rel, existing vector's abs path)
-    def uriMapOf(snap: StoreLog.Snapshot)(
-        fs: Seq[String]): Map[String, (String, Option[String])] =
-      fs.map(f => Dv.absUri(conf, path, f) ->
-        (f, snap.dvs.get(f).map(e => s"$path/${e.path}"))).toMap
+    val sconf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
     import spark.implicits._
-    // (file uri, row position, per-column isnull, stat-domain values)
+    // (file, row position, per-column isnull, stat-domain values)
     // of every matching LIVE row — dv-aware find, so an already-
     // vectored row is never re-deleted (and a file whose only matches
     // are already vectored is not touched again). The null flags and
@@ -1374,27 +1353,19 @@ object TsStore {
     // tags): integral→long, date→epoch days, timestamp→epoch micros,
     // string as-is; float/double and NTZ are never recorded (the
     // pushdown refuses them regardless).
-    def matches(snap: StoreLog.Snapshot, fs: Seq[String]) =
-      dvStatSelect(matcher(readFilesDv(spark, path, snap, fs,
-        mergeSchema = true, keepMeta = true)))
     val v = StoreLog.withWriterLease(path) { lease =>
-      val ((found, tags), uris, snapUsed) =
-        try (matches(base, candidates), uriMapOf(base)(candidates), base)
-        catch { // pred column only in pruned-away schemas — widen (a
-          // FILTERED base re-resolves fully for this corner)
-          case _: org.apache.spark.sql.AnalysisException =>
-            val full =
-              if (base.filtered) StoreLog.read(path, base.version) else base
-            (matches(full, full.files), uriMapOf(full)(full.files), full)
-        }
-      val urisB = spark.sparkContext.broadcast(uris)
+      val (found, tags) = dvStatSelect(matcher(
+        readFilesDv(spark, path, base, candidates, keepMeta = true)))
+      // existing vectors' absolute sidecar paths, by data file
+      val oldDvs = spark.sparkContext.broadcast(candidates.flatMap(f =>
+        base.dvs.get(f).map(e => f -> s"$path/${e.path}")).toMap)
       // one task group per affected file: union the new positions with
       // the file's existing vector and publish a fresh sidecar. A
       // retried/speculative task writes an orphan sidecar — vacuumable
       // garbage, exactly like an unadopted staged data file (the lease
       // held here keeps vacuum off the fresh ones meanwhile).
       val written: Array[(String, String, Long, DvStatRaw)] =
-        found.groupByKey(_._1).mapGroups { (uri, it) =>
+        found.groupByKey(_._1).mapGroups { (dataRel, it) =>
           val freshB = Array.newBuilder[Long]
           val acc = new DvStatAcc
           it.foreach { case (_, p, ns, dl, dsv) =>
@@ -1402,24 +1373,21 @@ object TsStore {
             acc.add(ns, dl, dsv)
           }
           val fresh = freshB.result()
-          val old = urisB.value.get(uri).flatMap(_._2)
+          val old = oldDvs.value.get(dataRel)
             .map(Dv.read(sconf.value, _)).getOrElse(Array.empty[Long])
           val rel = Dv.newRelPath()
           val n = Dv.write(sconf.value, s"$path/$rel", old ++ fresh)
-          (uri, rel, n, acc.result)
+          (dataRel, rel, n, acc.result)
         }.collect()
       if (written.isEmpty) base.version
       else {
         val entries: Map[String, Dv.Entry] = written.map {
-          case (uri, rel, n, raw) =>
-          val (dataRel, _) = uris.getOrElse(uri, throw new IllegalStateException(
-            s"scan uri '$uri' matches no planned file of $path — " +
-              "Dv.absUri rendering diverged from the scan's"))
+          case (dataRel, rel, n, raw) =>
           // union with a pre-existing vector: summed counts / combined
           // bounds where BOTH entries know them, dropped where either
           // doesn't (a legacy entry without them stays unknowable —
           // exact-or-refuse)
-          val (merged, mergedBounds) = mergeDvStats(snapUsed.dvs.get(dataRel),
+          val (merged, mergedBounds) = mergeDvStats(base.dvs.get(dataRel),
             raw.nulls, raw.bounds(tags))
           dataRel -> Dv.Entry(rel, n, merged, mergedBounds)
         }.toMap
@@ -1455,7 +1423,7 @@ object TsStore {
   }
 
   /** The deleted-row STAT PROJECTION shared by every dv writer: per
-    * matching live row — (scan uri, position, per-column isnull map,
+    * matching live row — (file, position, per-column isnull map,
     * long-domain values, string-domain values) — capped at the stats
     * cap (schema order): the pushdowns can only use nulls/bounds
     * alongside the file's MANIFEST STATS, which
@@ -1471,7 +1439,8 @@ object TsStore {
         Map[String, Long], Map[String, String])],
       Map[String, String]) = {
     import df.sparkSession.implicits._
-    val dataCols = df.columns.filterNot(c => c == "__file" || c == "__pos")
+    val dataCols = df.columns.filterNot(c =>
+        c == GraftTable.FileColName || c == GraftTable.PosColName)
       .take(FileStats.MaxStatsCols).toSeq
     import org.apache.spark.sql.types._
     val tags: Map[String, String] = df.schema.fields.iterator
@@ -1505,7 +1474,7 @@ object TsStore {
     }, typedLit(Map.empty[String, Long]))
     val strVals = nonNullMap(strDom.flatMap(c => Seq(lit(c), col(c))),
       typedLit(Map.empty[String, String]))
-    val ds = df.select(col("__file"), col("__pos"),
+    val ds = df.select(col(GraftTable.FileColName), col(GraftTable.PosColName),
         map(dataCols.flatMap(c => Seq(lit(c), col(c).isNull)): _*).as("__nulls"),
         longVals.as("__dlong"), strVals.as("__dstr"))
       .as[(String, Long, Map[String, Boolean], Map[String, Long], Map[String, String])]
@@ -1601,7 +1570,7 @@ object TsStore {
     * moves nothing), so the read-back is always sound; cost is one
     * column-pruned scan of exactly the touched files. Exact-or-refuse:
     * a file whose aggregated row count mismatches its fragments'
-    * position count (scan/rendering divergence) drops its stats.
+    * position count drops its stats.
     *
     * `fragsByFile`: data-file rel → (adopted fragment ABSOLUTE paths,
     * expected fresh position count). Returns rel → (nulls, bounds).
@@ -1611,44 +1580,30 @@ object TsStore {
       fragsByFile: Map[String, (Seq[String], Long)])
       : Map[String, (Map[String, Long], Map[String, Dv.Bound])] = {
     if (fragsByFile.isEmpty) return Map.empty
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val sconf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
     import spark.implicits._
-    val files = fragsByFile.keys.toSeq.sorted
-    val fidOf: Map[String, Int] = files.zipWithIndex.toMap
-    val relOfUri: Map[String, String] =
-      files.map(f => Dv.absUri(conf, path, f) -> f).toMap
-    val posDf = spark.createDataset(
-        fragsByFile.toSeq.map { case (f, (frags, _)) => (fidOf(f), frags) })
-      .flatMap { case (fid, frags) =>
+    val posDf = spark.createDataset(fragsByFile.toSeq.map { case (f, (frags, _)) => (f, frags) })
+      .flatMap { case (f, frags) =>
         frags.iterator.flatMap(p => Dv.read(sconf.value, p).iterator)
-          .map(p => (fid, p)) }
-      .toDF("__dv_fid", "__dv_pos")
-    val fidDf = files.map(f => (Dv.absUri(conf, path, f), fidOf(f)))
-      .toDF("__uri", "__jfid")
+          .map(p => (f, p)) }
+      .toDF("__dv_file", "__dv_pos")
     // the PRE-commit live view of the touched files: old vectors are
     // subtracted by readFilesDv, and this commit's fresh positions are
     // disjoint from them by construction (the operation scanned only
     // live rows)
-    val df0 = readFilesDv(spark, path, base, files, mergeSchema = true,
+    val df0 = readFilesDv(spark, path, base, fragsByFile.keys.toSeq.sorted,
       keepMeta = true)
-    val totalFresh = fragsByFile.valuesIterator.map(_._2).sum
-    val capBytes = spark.conf.getOption("spark.graft.dv.broadcastBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val posSide = if (totalFresh * 24L <= capBytes) broadcast(posDf) else posDf
-    val joined = df0
-      .join(broadcast(fidDf), df0("__file") === col("__uri"), "inner")
-      .drop("__uri")
-      .join(posSide, col("__jfid") === col("__dv_fid") &&
-        col("__pos") === col("__dv_pos"), "inner")
-      .drop("__jfid", "__dv_fid", "__dv_pos")
+    val joined = df0.join(posDf, col(GraftTable.FileColName) === col("__dv_file") &&
+        col(GraftTable.PosColName) === col("__dv_pos"), "inner")
+      .drop("__dv_file", "__dv_pos")
     val (ds, tags) = dvStatSelect(joined)
     val got: Map[String, DvStatRaw] =
-      ds.groupByKey(_._1).mapGroups { (uri, it) =>
+      ds.groupByKey(_._1).mapGroups { (f, it) =>
         val acc = new DvStatAcc
         it.foreach { case (_, _, ns, dl, dsv) => acc.add(ns, dl, dsv) }
-        (uri, acc.result)
-      }.collect().toMap.map { case (uri, raw) => relOfUri(uri) -> raw }
+        (f, acc.result)
+      }.collect().toMap
     fragsByFile.map { case (f, (_, expected)) =>
       got.get(f) match {
         case Some(raw) if raw.n == expected =>
@@ -1661,50 +1616,14 @@ object TsStore {
     }
   }
 
-  /** Map the find scan's `input_file_name()` URIs back to manifest
-    * entries — shared by [[delete]] and [[deleteKeys]]. O(scanned +
-    * manifest), not a nested suffix scan: probe the manifest SET with
-    * each raw path's trailing components (rel depth is partition-dirs +
-    * filename, a small constant). Decoding the URL-encoded URI once
-    * recovers the on-disk path byte-for-byte, so the suffix match is
-    * exact even for escaped partition values; a file-NAME key alone
-    * would NOT be sound (one write job reuses `part-00000-<jobuuid>`
-    * across every partition directory it writes). A pathological layout
-    * where a shallow rel is also a deeper rel's suffix over-matches and
-    * trips the size require — loud. On an unparseable URI, fall back to
-    * the name-key SUPERSET — correctness-safe (extra files' survivors
-    * are rewritten unchanged), just wider IO.
+  /** The `candidates` (in manifest order) holding a row of `matched`
+    * — a keepMeta read narrowed to the rows a copy-on-write delete
+    * removes. Shared by [[delete]] and [[deleteKeys]].
     */
-  private def matchManifest(path: String, base: StoreLog.Snapshot,
-                            affectedUris: Array[String]): Seq[String] = {
-    def nameOf(rel: String) = rel.substring(rel.lastIndexOf('/') + 1)
-    try {
-      val relSet = base.files.toSet
-      val maxDepth = base.files.iterator.map(_.count(_ == '/')).max + 1
-      val rawPaths = affectedUris.map(u => new java.net.URI(u).getPath).toSeq
-      val hitSet = scala.collection.mutable.LinkedHashSet[String]()
-      rawPaths.foreach { raw =>
-        var idx = raw.length
-        var d = 0
-        while (d < maxDepth && idx > 0) {
-          idx = raw.lastIndexOf('/', idx - 1)
-          if (idx >= 0) {
-            val cand = raw.substring(idx + 1)
-            if (relSet.contains(cand)) hitSet += cand
-          }
-          d += 1
-        }
-      }
-      val hit = base.files.filter(hitSet.contains)
-      require(hit.size == rawPaths.size,
-        s"delete matched ${rawPaths.size} scan files but ${hit.size} " +
-          s"manifest entries at $path — scan outside the live snapshot?")
-      hit
-    } catch {
-      case _: java.net.URISyntaxException =>
-        val names = affectedUris.map(nameOf).toSet
-        base.files.filter(f => names.contains(nameOf(f)))
-    }
+  private def affectedFiles(candidates: Seq[String], matched: DataFrame): Seq[String] = {
+    val hit = matched.select(GraftTable.FileColName).distinct()
+      .collect().map(_.getString(0)).toSet
+    candidates.filter(hit)
   }
 
   /** Join-based bulk takedown — [[delete]]'s large-batch twin: remove
@@ -1769,26 +1688,11 @@ object TsStore {
     }
     lastTakedownCandidates = candidates.size
     if (candidates.isEmpty) return base.version
-    def readFiles(s: StoreLog.Snapshot, fs: Seq[String]) =
-      readFilesDv(spark, path, s, fs, mergeSchema = true)
-    def findAffected(s: StoreLog.Snapshot, fs: Seq[String]): Array[String] =
-      readFiles(s, fs).join(broadcast(k), keyCols, "inner")
-        .filter(col(versionCol) <= col("__del_v"))
-        .select(input_file_name().as("__f"))
-        .distinct().collect().map(_.getString(0))
-    val (affectedUris, snapUsed) =
-      try (findAffected(base, candidates), base)
-      catch {
-        // a key/version column may exist only in pruned-away files'
-        // schemas (schema evolution) — re-resolve over the FULL live
-        // set (a filtered base widens here too)
-        case _: org.apache.spark.sql.AnalysisException =>
-          val full =
-            if (base.filtered) StoreLog.read(path, base.version) else base
-          (findAffected(full, full.files), full)
-      }
-    if (affectedUris.isEmpty) return base.version
-    val affected = matchManifest(path, snapUsed, affectedUris)
+    val affected = affectedFiles(candidates,
+      readFilesDv(spark, path, base, candidates, keepMeta = true)
+        .join(broadcast(k), keyCols, "inner")
+        .filter(col(versionCol) <= col("__del_v")))
+    if (affected.isEmpty) return base.version
     val prefixes: Set[String] = affected.map { f =>
       val i = f.lastIndexOf('/')
       require(i > 0, s"live file '$f' is not under a partition directory")
@@ -1796,7 +1700,7 @@ object TsStore {
     }.toSet
     // survivors: rows with no matching delete key, or reinserted ABOVE
     // the key's delete version
-    val survivors = readFiles(snapUsed, affected)
+    val survivors = readFilesDv(spark, path, base, affected)
       .join(broadcast(k), keyCols, "left_outer")
       .filter(col("__del_v").isNull || col(versionCol) > col("__del_v"))
       .drop("__del_v")
@@ -1878,7 +1782,7 @@ object TsStore {
     val touched = byPrefix.map(_._1)
     // dv-aware: compaction MATERIALIZES deletion vectors — the rewrite
     // reads only live rows and the replaced files' vectors die with them
-    val rows = readFilesDv(spark, path, base, targets, mergeSchema = true)
+    val rows = readFilesDv(spark, path, base, targets)
     val staging = txnDir(path)
     val rangeCols: Seq[Column] = uidCols.map(col) :+ col(tsCol)
     writeFiles(rows.repartitionByRange(rangeCols: _*)
@@ -2334,7 +2238,7 @@ object TsStore {
     }
     if (targetFiles.isEmpty) return base.version
     val prefixes: Seq[String] = targetFiles.map(prefixOf).distinct
-    val rows = readFilesDv(spark, path, base, targetFiles, mergeSchema = true)
+    val rows = readFilesDv(spark, path, base, targetFiles)
     val bs = graft.functions.ZOrder.boundaries(rows, clusterCols, buckets)
     val z = graft.functions.ZOrder.zValue(bs, clusterCols)
     // Explicit partition count (AQE would coalesce a default-count range
@@ -2524,7 +2428,6 @@ object TsStore {
     */
   def changes(spark: SparkSession, path: String, fromV: Long, toV: Long,
               keyCols: Seq[String], versionCol: String,
-              mergeSchema: Boolean = false,
               preimages: Boolean = false): DataFrame = {
     require(keyCols.nonEmpty, "changes needs the store's merge-key columns")
     require(fromV <= toV, s"changes needs fromV <= toV, got $fromV > $toV")
@@ -2534,11 +2437,12 @@ object TsStore {
     // file whose dv CHANGED inside the window (a merge-on-read delete —
     // no add/remove to diff) counts as replaced: read on BOTH sides, the
     // (key, version) anti-joins below cancel the survivors and emit the
-    // newly-vectored rows as deletes
+    // newly-vectored rows as deletes. Each side also reads under ITS
+    // snapshot's declared schema — the era's own columns
     def readFrom(fs: Seq[String]): DataFrame =
-      readFilesDv(spark, path, fromSnap, fs, mergeSchema)
+      readFilesDv(spark, path, fromSnap, fs)
     def readTo(fs: Seq[String]): DataFrame =
-      readFilesDv(spark, path, toSnap, fs, mergeSchema)
+      readFilesDv(spark, path, toSnap, fs)
     val fromSet = fromSnap.files.toSet
     val toSet = toSnap.files.toSet
     val dvChanged = toSnap.files.filter(f =>
@@ -2547,7 +2451,7 @@ object TsStore {
     val goneFiles = fromSnap.files.filterNot(toSet) ++ dvChanged
     // empty diff → empty frame with the store's schema + change_type
     if (newFiles.isEmpty && goneFiles.isEmpty)
-      return load(spark, path, mergeSchema, asOf = Some(toV))
+      return load(spark, path, asOf = Some(toV))
         .withColumn("change_type", lit("")).limit(0)
     val keyEq = keyCols.map(c => col(s"n.$c") <=> col(s"o.$c")).reduce(_ && _)
     (newFiles, goneFiles) match {
@@ -2561,8 +2465,7 @@ object TsStore {
         // PIN both sides ONCE (the shared-subtree rule, guide §5): the
         // insert/update/delete (+preimage) branches below fan `n` and
         // `o` into up to six join inputs, and each branch would
-        // otherwise replay its side's whole readFilesDv lineage (file
-        // scan + dv anti-join) AND carry a duplicated subtree through
+        // otherwise replay its side's whole readFilesDv lineage AND carry a duplicated subtree through
         // the optimizer — measured ~0.9 s of driver-side PLANNING per
         // MatView refresh before the pin, plus the repeated scans. Both
         // sides are bounded by the window's commit footprint, never the
@@ -2584,7 +2487,10 @@ object TsStore {
         val newKeys = n.select(keyCols.map(col): _*).distinct()
         val deletes = o.as("n").join(newKeys.as("o"), keyEq, "left_anti")
           .withColumn("change_type", lit("delete"))
-        val base = inserts.unionByName(updates).unionByName(deletes)
+        // an old row carries its era's columns: ones added since read
+        // null on it
+        val base = inserts.unionByName(updates)
+          .unionByName(deletes, allowMissingColumns = true)
         if (!preimages) base
         else {
           // an updated key's OLD row: on the old side, not a carried-over
@@ -2593,45 +2499,8 @@ object TsStore {
             keyEq && col(s"n.$versionCol") <=> col(s"o.$versionCol"), "left_anti")
           val updatePre = oldFresh.as("n").join(newKeys.as("o"), keyEq, "left_semi")
             .withColumn("change_type", lit("update_preimage"))
-          base.unionByName(updatePre)
+          base.unionByName(updatePre, allowMissingColumns = true)
         }
-    }
-  }
-
-  /** Read `files` of the store at `snap`, applying any DELETION VECTORS
-    * the snapshot associates with them — the one chokepoint every
-    * internal DataFrame read rides, so a vectored row can never
-    * resurrect through a rewrite, a CDC diff, or a maintenance pass.
-    *
-    * Clean files stream through the ordinary parquet scan (columnar,
-    * pushdown intact). Vectored files additionally read Spark's
-    * `_metadata` (file_path, row_index) and LEFT ANTI join the deleted
-    * (file, position) set — built DISTRIBUTED from the sidecars, and
-    * broadcast while the manifest-recorded total stays small, so the
-    * data side neither shuffles nor loses its columnar scan. Join keys
-    * use [[Dv.absUri]]'s rendering of each file (pinned equal to
-    * `_metadata.file_path` in DvSpec, escaped partition values
-    * included).
-    */
-  /** The conservative may-match keep for `pred` over a version's
-    * files: footer stats PLUS partition pseudo-stats (from the declared
-    * schema when one exists — partition columns never appear in footer
-    * stats, so without them a partition-value predicate prunes
-    * nothing). Shared by [[load]]'s prune and the maintenance verbs'
-    * scoped resolution.
-    */
-  private def predKeep(path: String, v: Long, pred: Column)
-      : (String, Option[FileStats.FileStatsMap]) => Boolean = {
-    val node = org.apache.spark.sql.GraftShim.predTree(pred)
-    val declared: Option[org.apache.spark.sql.types.StructType] =
-      StoreLog.propsAt(path, v).get(GraftTable.SchemaProp)
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-    (f, st) => {
-      val stats = st.getOrElse(Map.empty) ++
-        declared.fold(Map.empty[String, FileStats.ColStat])(sc =>
-          GraftTable.partPseudoStats(f, sc))
-      stats.isEmpty || FileStats.mayMatch(stats, node)
     }
   }
 
@@ -2639,16 +2508,19 @@ object TsStore {
     * stripe-lazily FILTERED to the may-match files past the lazy
     * threshold (their stats/sizes/dvs ride along — everything the find
     * scan and the dv union need), the ordinary full resolution below
-    * it. A `filtered` result is a strict subset view; callers that hit
-    * a schema-widening corner re-resolve fully.
+    * it. The keep is the scan's own ([[FileStats.fileMayMatch]] under
+    * the version's declared schema, whose partition types the pseudo-
+    * stats need).
     */
   private def scopedBase(path: String, v: Long, pred: Column,
       extraKeep: Option[FileStats.FileStatsMap] => Boolean = _ => true)
       : StoreLog.Snapshot =
     if (StoreLog.liveFileCount(path, v) >= StoreLog.LazySnapshotThreshold) {
-      val keep = predKeep(path, v, pred)
+      val node = org.apache.spark.sql.GraftShim.predTree(pred)
+      val declared = GraftTable.declaredIn(StoreLog.propsAt(path, v))
+        .getOrElse(new org.apache.spark.sql.types.StructType())
       StoreLog.readFiltered(path, v)(e =>
-        keep(e.path, e.stats) && extraKeep(e.stats))
+        FileStats.fileMayMatch(e.path, e.stats, declared, node) && extraKeep(e.stats))
     } else StoreLog.read(path, v)
 
   /** Candidate-file count of the last keyed takedown's find scan —
@@ -2745,138 +2617,69 @@ object TsStore {
       }
     }
 
+  /** Read `files` of the store at `snap` — the one chokepoint every
+    * internal read rides: the DSv2 scan ([[GraftScan]]) pinned to `snap`
+    * restricted to `files`, so the snapshot's DELETION VECTORS filter
+    * column batches (a vectored row can never resurrect through a
+    * rewrite, a CDC diff, or a maintenance pass) and filters on the
+    * frame prune files and row groups. The schema is `snap`'s declared
+    * one — its era's columns; files lacking one read it as null (an
+    * undeclared manifest infers it over all of `snap`'s live files).
+    * `keepMeta` adds the scan's store-relative `_file` and the row's
+    * parquet `_pos`: the file and row identities the delete verbs act on.
+    */
   private[graft] def readFilesDv(spark: SparkSession, path: String,
       snap: StoreLog.Snapshot, files: Seq[String],
-      mergeSchema: Boolean, keepMeta: Boolean = false): DataFrame = {
-    // a TYPE-WIDENED store mixes physical widths (old int32 files under
-    // a declared bigint, say): parquet footer MERGING refuses those, so
-    // internal frames read with the declared schema EXPLICITLY and the
-    // reader's native per-file upcast does the rest. Never-retyped
-    // stores (no PhysicalTypeKey anywhere) keep the mergeSchema path
-    // byte-identically.
-    val typed = GraftTable.typedReadSchema(snap)
-    def plain(fs: Seq[String]) = {
-      val r = spark.read.option("mergeSchema", mergeSchema)
-        .option("basePath", path)
-      typed.fold(r)(r.schema).parquet(fs.map(f => s"$path/$f"): _*)
-    }
-    def withMetaCols(df: DataFrame) = df
-      .withColumn("__file", col("_metadata.file_path"))
-      .withColumn("__pos", col("_metadata.row_index"))
-    val dvd = files.filter(snap.dvs.contains)
-    if (dvd.isEmpty)
-      return if (keepMeta) withMetaCols(plain(files)) else plain(files)
-    val clean = files.filterNot(snap.dvs.contains)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
-    import spark.implicits._
-    // Integer file ids keep the anti-join's build side COMPACT: the
-    // broadcast rows carry (int fid, long pos) — ~20 B of unsafe row —
-    // instead of repeating each file's full absolute URI string per
-    // deleted position (hundreds of MB at the old 4M-row cap). The
-    // uri→fid attach is a broadcast of dvd.size TINY rows on the data
-    // side, which keeps the parquet scan columnar and shuffle-free.
-    val fidOf: Map[String, Int] = dvd.zipWithIndex.toMap
-    val dvList: Seq[(Int, String)] =
-      dvd.map(f => (fidOf(f), s"$path/${snap.dvs(f).path}"))
-    val posDf = spark.createDataset(dvList)
-      .flatMap { case (fid, dvAbs) =>
-        Dv.read(sconf.value, dvAbs).map(p => (fid, p)) }
-      .toDF("__dv_fid", "__dv_pos")
-    val fidDf = dvd.map(f => (Dv.absUri(conf, path, f), fidOf(f)))
-      .toDF("__uri", "__fid")
-    val withMeta = withMetaCols(plain(dvd))
-    // LEFT join + loud null-fid guard, not an inner join: if the scan's
-    // `_metadata.file_path` rendering ever diverged from [[Dv.absUri]]
-    // (the exact divergence the delete path guards with
-    // IllegalStateException), an inner join would silently DROP every
-    // live row of that file — strictly worse than the old anti-join's
-    // resurrect-deleted-rows failure mode. The guard rides the join key
-    // itself (evaluated per row, never pruned away), so divergence
-    // fails the read instead of corrupting it.
-    val withFid = withMeta
-      .join(broadcast(fidDf), withMeta("__file") === fidDf("__uri"), "left")
-      .withColumn("__fid",
-        when(col("__fid").isNotNull, col("__fid"))
-          .otherwise(raise_error(concat(
-            lit("graft dv read: scan file "), col("__file"),
-            lit(s" matches no vectored file of $path — Dv.absUri rendering " +
-              "diverged from the scan's")))))
-      .drop("__uri")
-    // the dv side's exact cardinality is manifest metadata — broadcast
-    // while the ESTIMATED BYTES fit under a configurable cap (default
-    // 32 MB ≈ 1.3M positions at ~24 B/row), shuffle a genuinely huge
-    // backlog (which is compaction's cue anyway) — never a fixed row
-    // count that can silently OOM the driver
-    val totalDvRows = dvd.iterator.map(f => snap.dvs(f).rows).sum
-    val capBytes = spark.conf.getOption("spark.graft.dv.broadcastBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val dvSide =
-      if (totalDvRows * 24L <= capBytes) broadcast(posDf) else posDf
-    val filtered0 = withFid.join(dvSide,
-        withFid("__fid") === dvSide("__dv_fid") &&
-          withFid("__pos") === dvSide("__dv_pos"), "left_anti")
-      .drop("__fid")
-    val filtered = if (keepMeta) filtered0 else filtered0.drop("__file", "__pos")
-    if (clean.isEmpty) filtered
-    else {
-      val cleanDf = if (keepMeta) withMetaCols(plain(clean)) else plain(clean)
-      cleanDf.unionByName(filtered, allowMissingColumns = true)
-    }
+      keepMeta: Boolean = false): DataFrame =
+    scanFrame(spark, path, snap.version,
+      GraftTable.declaredIn(snap.props).getOrElse(GraftTable.inferSchema(spark, path,
+        if (snap.filtered) StoreLog.read(path, snap.version).files else snap.files)),
+      Some(snap.copy(files = files)), keepMeta)
+
+  /** The store at version `v` as a DSv2 relation over [[GraftScan]] (an
+    * exact `pinned` snapshot, or `v` resolved at planning — stripe-lazily
+    * under filters on a million-file store). Columns come back as a
+    * parquet read of the store infers them: data columns, then
+    * partition columns, under their PHYSICAL names — internal rewrites
+    * of a renamed store write back what they read.
+    */
+  private def scanFrame(spark: SparkSession, path: String, v: Long,
+      schema: org.apache.spark.sql.types.StructType,
+      pinned: Option[StoreLog.Snapshot], keepMeta: Boolean): DataFrame = {
+    val rel = org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+      new GraftTable(path, Some(v), schema, Nil, "ts", pinned = pinned), None, None)
+    val parts = GraftTable.partCols(path).toSet
+    val (partFields, dataFields) = schema.fields.toSeq.partition(f => parts(f.name))
+    def ref(n: String) = col(s"`${n.replace("`", "``")}`")
+    val meta =
+      if (keepMeta) Seq(col(GraftTable.FileColName), col(GraftTable.PosColName)) else Nil
+    org.apache.spark.sql.GraftShim.ofRows(spark, rel).select((dataFields ++ partFields)
+      .map(f => ref(f.name).as(GraftTable.physicalName(f))) ++ meta: _*)
   }
 
-  /** Manifest-aware dataset load: a logged store reads exactly the live
-    * (or `asOf`-versioned) file set; an unlogged one reads the directory
-    * as before. `basePath` keeps partition-column inference identical in
-    * both modes, so predicates on uid columns prune the same way. A
-    * snapshot with ZERO files (the v1 a fresh-path upsert commits)
+  /** The store as a DataFrame: a logged store reads exactly the live (or
+    * `asOf`-versioned) snapshot through [[scanFrame]] under that
+    * version's declared schema, so filters on the frame prune
+    * partitions, manifest stats and row groups before a footer opens.
+    * An unlogged directory reads as plain parquet: one footer's schema
+    * unless the session sets `spark.sql.parquet.mergeSchema`. A version
+    * with zero files and no declared schema (the v1 a fresh-path upsert commits)
     * surfaces as UNABLE_TO_INFER_SCHEMA — deliberately the same
     * AnalysisException an empty unlogged directory read raises, which
     * is what [[upsertPlan]]'s empty-base catch keys on.
     */
-  def load(spark: SparkSession, path: String, mergeSchema: Boolean = false,
-           asOf: Option[Long] = None, prune: Option[Column] = None): DataFrame = {
-    if (!StoreLog.canLog(path)) {
-      require(asOf.isEmpty, s"asOf needs a manifest log; '$path' cannot carry one")
-      return spark.read.option("mergeSchema", mergeSchema).parquet(path)
-    }
-    val vOpt = asOf.orElse(StoreLog.mainVersion(path))
+  def load(spark: SparkSession, path: String,
+           asOf: Option[Long] = None): DataFrame = {
+    val vOpt =
+      if (StoreLog.canLog(path)) asOf.orElse(StoreLog.mainVersion(path))
+      else {
+        require(asOf.isEmpty, s"asOf needs a manifest log; '$path' cannot carry one")
+        None
+      }
     vOpt match {
-      case Some(v) =>
-        // manifest-stat pruning: drop files whose recorded column bounds
-        // prove no row can match `prune` — BEFORE Spark opens a footer.
-        // The caller still applies the predicate to the rows (pruning is
-        // conservative, file-level). An all-pruned list keeps one file:
-        // a zero-path parquet read cannot even infer the schema, and the
-        // row filter drops everything anyway. BIG stores with a prune
-        // predicate resolve STRIPE-LAZILY: only the may-match files
-        // (plus their stats/sizes/dvs) materialize driver-side
-        // ([[StoreLog.readFiltered]]) — identical keep rule, bounded
-        // allocations.
-        prune match {
-          case Some(p) =>
-            val keepEntry = predKeep(path, v, p)
-            if (StoreLog.liveFileCount(path, v) >= StoreLog.LazySnapshotThreshold) {
-              val s = StoreLog.readFiltered(path, v)(e => keepEntry(e.path, e.stats))
-              if (s.files.isEmpty) {
-                // all-pruned corner: fall back to the full resolution for
-                // the one-live-file schema anchor (rare by construction —
-                // the predicate excluded the whole store)
-                val full = StoreLog.read(path, v)
-                readFilesDv(spark, path, full, full.files.take(1), mergeSchema)
-              } else readFilesDv(spark, path, s, s.files, mergeSchema)
-            } else {
-              val s = StoreLog.read(path, v)
-              val kept = s.files.filter(f => keepEntry(f, s.stats.get(f)))
-              val files = if (kept.isEmpty) s.files.take(1) else kept
-              readFilesDv(spark, path, s, files, mergeSchema)
-            }
-          case None =>
-            val s = StoreLog.read(path, v)
-            readFilesDv(spark, path, s, s.files, mergeSchema)
-        }
-      case None =>
-        spark.read.option("mergeSchema", mergeSchema).parquet(path)
+      case Some(v) => scanFrame(spark, path, v,
+        GraftTable.resolveSchema(spark, path, Some(v)), pinned = None, keepMeta = false)
+      case None => spark.read.parquet(path)
     }
   }
 
@@ -3089,7 +2892,8 @@ object TsStore {
           addSizes = carrySizes ++ movedSizes,
           addDvs = addDvs, resetDvs = dvReset,
           setProps = schemaForWiden.fold(Map.empty[String, String])(sc =>
-            GraftTable.widenedSchemaProp(cur.props, sc)) +
+            GraftTable.widenedSchemaProp(path, cur.props, sc, moved,
+              (cur.files ++ newFiles).distinct)) +
             (StoreLog.BranchPropPrefix + b -> (cur.version + 1).toString) +
             // branch activity: advance the age-expiry touch stamp
             (StoreLog.BranchTouchPrefix + b ->
@@ -3336,13 +3140,13 @@ object TsStore {
            end: Option[java.sql.Timestamp] = None,
            columns: Seq[String] = Seq.empty,
            meta: Map[String, Any] = Map.empty,
-           mergeSchema: Boolean = false,
            asOf: Option[Long] = None): DataFrame = {
-    // mergeSchema ≙ the reference's dynamic-schema read (SURVEY §1.1:
-    // chunks of one uid may carry different column sets; read reassembles
-    // the union, missing columns → null/NaN). Off by default: the footer
-    // merge is a per-file metadata pass worth paying only for collections
-    // that actually evolved. `asOf` time-travels a LOGGED store to the
+    // the reference's dynamic-schema read (SURVEY §1.1: chunks of one uid
+    // may carry different column sets; read reassembles the union,
+    // missing columns → null/NaN) is every logged read here: the
+    // declared schema is the union (an unlogged directory merges its
+    // footers under `spark.sql.parquet.mergeSchema`). `asOf`
+    // time-travels a LOGGED store to the
     // named manifest version (upserted-away rows come back; requires the
     // version inside the vacuum retention window).
     val preds: Seq[Column] =
@@ -3352,11 +3156,10 @@ object TsStore {
       // metadata key/values ≙ corintick's **meta kwargs on read: plain
       // equality predicates on attribute columns, pushed to the scan.
       meta.map { case (c, v) => col(c) === lit(v) }
-    // the same predicates prune FILES via the manifest's recorded bounds
-    // (a ts-slice on a many-file store opens only time-overlapping
-    // files) and then filter ROWS on what remains
-    var df = load(spark, path, mergeSchema, asOf,
-      prune = preds.reduceOption(_ && _))
+    // the same predicates prune FILES in the scan via the manifest's
+    // recorded bounds (a ts-slice on a many-file store opens only
+    // time-overlapping files) and then filter ROWS on what remains
+    var df = load(spark, path, asOf)
     preds.foreach(p => df = df.filter(p))
     if (columns.nonEmpty) df = df.select(columns.map(col): _*)
     df

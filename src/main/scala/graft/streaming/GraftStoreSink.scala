@@ -266,7 +266,8 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
                     addStats = movedStats, addSizes = movedSizes,
                     tag = Some(tag),
                     setProps = graft.sources.GraftTable
-                      .widenedSchemaProp(curProps, writeSchema) +
+                      .widenedSchemaProp(path, curProps, writeSchema, moved,
+                        StoreLog.read(path, curV).files ++ moved) +
                       (graft.sources.GraftTable.LayoutSortedProp -> "false"))
                 else {
                   val cur = StoreLog.read(path, curV)
@@ -290,7 +291,9 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
                     resetDvs = dvReset,
                     tag = if (replaceAll) None else Some(tag),
                     setProps = graft.sources.GraftTable
-                      .widenedSchemaProp(cur.props, writeSchema) ++ refProps +
+                      .widenedSchemaProp(path, cur.props, writeSchema, moved,
+                        (if (replaceAll) files else cur.files ++ files).distinct) ++
+                      refProps +
                       // the hashed epoch writer lands rows in ARRIVAL
                       // order — the store's layout-order contract is gone
                       (graft.sources.GraftTable.LayoutSortedProp -> "false"))

@@ -211,10 +211,13 @@ class BundlesSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("type conflict"))
 
     // merge-read: union schema, absent column null on the older chunk
-    val merged = ct.read("AAPL", mergeSchema = true).orderBy("ts")
-    assert(merged.columns.toSet == Set("ts", "bid", "ask", "__uid"))
-    val rows = merged.select($"bid", $"ask").as[(Double, Option[Double])].collect()
-    assert(rows.toSeq == Seq((100.0, None), (101.0, Some(101.5))))
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      val merged = ct.read("AAPL").orderBy("ts")
+      assert(merged.columns.toSet == Set("ts", "bid", "ask", "__uid"))
+      val rows = merged.select($"bid", $"ask").as[(Double, Option[Double])].collect()
+      assert(rows.toSeq == Seq((100.0, None), (101.0, Some(101.5))))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
     // non-merged read keeps working (first-footer schema)
     assert(ct.read("AAPL").count() == 2)
   }

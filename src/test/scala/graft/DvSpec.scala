@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{Dv, StoreLog, Tables, TsStore}
 
 /** Deletion vectors — merge-on-read DELETE (Dv.scala, TsStore
-  * .deleteVectors, readFilesDv). Pins the sidecar format, the
-  * scan-uri rendering contract, read/DML/CDC/maintenance interplay,
-  * and vacuum's dv reclaim.
+  * .deleteVectors; every read subtracts vectors in the DSv2 scan that
+  * readFilesDv builds). Pins the sidecar format, read/DML/CDC/
+  * maintenance interplay, and vacuum's dv reclaim.
   */
 class DvSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -24,6 +24,22 @@ class DvSpec extends AnyFunSuite {
     dir
   }
 
+  /** A copy of `src`'s live files under a manifest with no declared
+    * schema — how stores were adopted before declarations existed. */
+  private def undeclaredCopy(src: String): String = {
+    val dir = Files.createTempDirectory("graft_dv_legacy").toString
+    val files = StoreLog.latest(src).get.files
+    files.foreach { f =>
+      val to = java.nio.file.Paths.get(dir, f)
+      Files.createDirectories(to.getParent)
+      Files.copy(java.nio.file.Paths.get(src, f), to)
+    }
+    val (st, sz) = graft.sources.FileStats.forFilesWithSizes(dir, files)
+    StoreLog.commit(dir, 0L, Seq.empty, files, addStats = st, addSizes = sz)
+    assert(!StoreLog.latest(dir).get.props.contains(graft.sources.GraftTable.SchemaProp))
+    dir
+  }
+
   test("sidecar round-trip: sorted, deduplicated, binary-searchable") {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = Files.createTempDirectory("graft_dvbin").toString + "/dv.bin"
@@ -32,23 +48,6 @@ class DvSpec extends AnyFunSuite {
     val back = Dv.read(conf, p)
     assert(back.toSeq === Seq(0L, 3L, 7L, 9L))
     assert(Dv.contains(back, 7L) && !Dv.contains(back, 8L))
-  }
-
-  test("Dv.absUri renders exactly what the scan's _metadata.file_path carries") {
-    // escaped partition value (space + colon) — the rendering contract
-    // the anti-join and the delete's uri→rel mapping both stand on
-    val dir = Files.createTempDirectory("graft_dvuri").toString
-    val df = Seq(("k 1:a", 1L), ("k 1:a", 2L), ("plain", 3L))
-      .toDF("uid", "v")
-    df.write.partitionBy("uid").parquet(dir + "/t")
-    val snap = StoreLog.ensure(dir + "/t")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rendered = snap.files.map(f => Dv.absUri(conf, dir + "/t", f)).toSet
-    val scanSeen = spark.read.option("basePath", dir + "/t").parquet(dir + "/t")
-      .select(col("_metadata.file_path")).distinct()
-      .as[String].collect().toSet
-    assert(rendered === scanSeen,
-      s"rendering diverged:\n  manifest: $rendered\n  scan:     $scanSeen")
   }
 
   test("deleteVectors matches copy-on-write delete row-for-row, moving no data file") {
@@ -75,6 +74,38 @@ class DvSpec extends AnyFunSuite {
     // and the vectored total equals the deleted row count
     val deleted = events.filter(pred).count()
     assert(snap.dvs.values.map(_.rows).sum === deleted)
+    // a predicate on a column added AFTER the matching files were
+    // written: manifest stats prune the find to the old files, which
+    // read the column as null under the declared schema
+    val late = events.filter(col("event_id") % 7 === 1).limit(20)
+      .select(cols.map(col): _*)
+      .withColumn("event_id", col("event_id") + 10000000L)
+      .withColumn("note", lit("late"))
+    Seq(dvDir, cowDir).foreach(d => TsStore.write(late, d, tsCol = "ts",
+      uidCols = Seq("event_type"), mode = org.apache.spark.sql.SaveMode.Append,
+      overlapPolicy = TsStore.OverlapPolicy.Allow))
+    // the same again on copies whose manifests declare no schema: the
+    // find still reads `note` over the pruned subset
+    val (dvLegacy, cowLegacy) = (undeclaredCopy(dvDir), undeclaredCopy(cowDir))
+    val pred2 = col("note").isNull && col("event_id") % 11 === 0
+    val cols2 = cols :+ "note"
+    // (the copy leaves dvDir's first vectors behind)
+    val dvLegacyWant = TsStore.load(spark, dvLegacy).filter(!pred2)
+      .select(cols2.map(col): _*).collect().toSet
+    TsStore.deleteVectors(spark, dvDir, pred2)
+    TsStore.delete(spark, cowDir, pred2, tsCol = "ts", uidCols = Seq("event_type"))
+    TsStore.deleteVectors(spark, dvLegacy, pred2)
+    TsStore.delete(spark, cowLegacy, pred2, tsCol = "ts", uidCols = Seq("event_type"))
+    val got2 = TsStore.load(spark, dvDir).select(cols2.map(col): _*)
+    val want2 = TsStore.load(spark, cowDir).select(cols2.map(col): _*)
+    assert(got2.count() === events.filter(!pred && !(col("event_id") % 11 === 0))
+      .count() + 20)
+    assert(got2.except(want2).count() === 0 && want2.except(got2).count() === 0)
+    assert(got2.filter(col("note") === "late").count() === 20)
+    val cowL = TsStore.load(spark, cowLegacy).select(cols2.map(col): _*)
+    assert(cowL.except(want2).count() === 0 && want2.except(cowL).count() === 0)
+    assert(TsStore.load(spark, dvLegacy).select(cols2.map(col): _*).collect().toSet ===
+      dvLegacyWant)
   }
 
   test("pre-delete version stays readable asOf; countAt subtracts vectors") {

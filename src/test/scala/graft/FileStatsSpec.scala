@@ -89,10 +89,10 @@ class FileStatsSpec extends AnyFunSuite {
       val rows = df.collect()
       assert(rows.length === 1000, s"slice returned ${rows.length} rows")
       assert(rows.forall(_.getAs[Long]("event_id") / 1000 == 2))
-      val scans = df.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }
-      val filesRead = scans.map(_.metrics("numFiles").value).sum
+      val filesRead = df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.asInstanceOf[graft.sources.GraftScan].plannedFiles.size
+      }.sum
       assert(filesRead === overlapping,
         s"ts-slice read $filesRead files; stats admit only $overlapping of $total")
       assert(filesRead < total, "no file was pruned by manifest stats")
@@ -216,7 +216,7 @@ class FileStatsSpec extends AnyFunSuite {
     assert(FileStats.prune(snap.files, snap.stats, col("v").isNotNull)
       === snap.files)
     // and the pruned read returns exactly the right rows
-    assert(TsStore.load(spark, dir, prune = Some(col("v").isNull))
+    assert(TsStore.load(spark, dir)
       .filter(col("v").isNull).count() === 20L)
   }
 

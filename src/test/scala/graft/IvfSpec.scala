@@ -13,6 +13,14 @@ class IvfSpec extends AnyFunSuite {
   private lazy val emb = Tables.embeddings(spark, TestSpark.sf001)
     .select(col("vec_id"), col("embedding"))
 
+  /** The store scans of `df`'s executed plan over an index's cells. */
+  private def cellScans(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+        if b.table.name().contains("cells") =>
+        b.scan.asInstanceOf[graft.sources.GraftScan]
+    }
+
   test("broadcast-join assignment is bit-equal to the literal path at K=64") {
     // K=64 > LiteralKMax: the public API takes the join path; force the
     // literal expression for the same centroids and compare cells. Any
@@ -130,20 +138,15 @@ class IvfSpec extends AnyFunSuite {
     try {
       val probed = IvfIndex.probe(spark, dir, q, nprobe = 1, topK = 1)
       probed.collect()
-      val scans = probed.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.metadata("Location").contains("cells") => f
-      }
-      assert(scans.nonEmpty)
-      val filesRead = scans.map(_.metrics("numFiles").value).sum
+      val planned = cellScans(probed).flatMap(_.plannedFiles)
       val probedCell = cellsBefore(20L)
       // only the probed cell's LIVE manifest files — the directory also
       // holds the dead pre-add file, which the manifest read must skip
       val live = graft.sources.StoreLog.latest(s"$dir/cells").get.files
-        .count(_.startsWith(s"cell=$probedCell/"))
-      assert(filesRead === live,
-        s"probe read $filesRead files, expected only cell $probedCell's $live live files")
-      assert(live < partFiles(probedCell).size,
+        .filter(_.startsWith(s"cell=$probedCell/"))
+      assert(planned.sorted === live.sorted,
+        s"probe planned $planned, expected only cell $probedCell's live files $live")
+      assert(live.size < partFiles(probedCell).size,
         "expected the replaced pre-add file to still sit (dead) in the partition dir")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
 
@@ -223,8 +226,8 @@ class IvfSpec extends AnyFunSuite {
       val mig = IvfIndex.migrations(spark, dir, assigned)
       assert(mig.count() === 0)
       val scans = mig.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.metadata("Location").contains("cells") => f
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.table.name().contains("cells") => b
       }
       assert(scans.nonEmpty)
       val scanRows = scans.map(_.metrics("numOutputRows").value).sum
@@ -306,12 +309,14 @@ class IvfSpec extends AnyFunSuite {
     // rerankFactor <= 0 forces the float path even on a quantized index
     assert(f === result(dirQ, 0))
     // IO pin: the approximate scoring pass reads the CODES column and
-    // never the float embeddings — visible as a scan whose ReadSchema
-    // carries q_code without embedding
-    val plan = IvfIndex.probe(spark, dirQ, queries, nprobe = 2, topK = 5)
-      .queryExecution.executedPlan.toString
-    val scanLines = plan.linesIterator.filter(_.contains("ReadSchema")).toSeq
-    assert(scanLines.exists(l => l.contains("q_code") && !l.contains("embedding")),
-      s"no codes-only scan found:\n${scanLines.mkString("\n")}")
+    // never the float embeddings — visible as a cells scan whose read
+    // schema carries q_code without embedding
+    val reads = IvfIndex.probe(spark, dirQ, queries, nprobe = 2, topK = 5)
+      .queryExecution.sparkPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.table.name().contains("cells") => b.scan.readSchema().fieldNames.toSeq
+      }
+    assert(reads.exists(r => r.contains("q_code") && !r.contains("embedding")),
+      s"no codes-only scan found: $reads")
   }
 }

@@ -344,8 +344,7 @@ class LazySnapshotSpec extends AnyFunSuite {
     assert(StoreLog.replacedAt(dir, v2) === Seq("uid=7777777"))
     assert(StoreLog.liveFileCount(dir, v2) === n0 + 1)
     // the merged row reads back (and only it — latest-wins took v=9.0)
-    val got = TsStore.load(spark, dir,
-      prune = Some(col("uid") === 7777777L))
+    val got = TsStore.load(spark, dir)
       .filter(col("uid") === 7777777L).collect()
     assert(got.length === 1 && got.head.getAs[Double]("v") === 9.0)
     // dv TAKEDOWN: the scoped find resolves only the may-match files
@@ -360,7 +359,7 @@ class LazySnapshotSpec extends AnyFunSuite {
     val rawJson = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "_graft_log", f"v$v3%08d.json")), "UTF-8")
     assert(rawJson.contains("\"dvs\""), "the dv commit must carry its vector entry")
-    assert(TsStore.load(spark, dir, prune = Some(col("uid") === 7777777L))
+    assert(TsStore.load(spark, dir)
       .filter(col("uid") === 7777777L).count() === 0L)
     assert(StoreLog.liveFileCount(dir, v3) === n0 + 1)
   }

@@ -47,11 +47,14 @@ class PlanSpec extends AnyFunSuite {
     graft.sources.TsStore.write(events, dir, tsCol = "ts", uidCols = Seq("event_type"))
     val sliced = graft.sources.TsStore.read(spark, dir,
       uid = Some(("event_type", "purchase")))
-    val scan = sliced.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters"), scan.take(500))
-    val pf = scan.linesIterator.find(_.contains("PartitionFilters")).get
-    assert(pf.contains("event_type"), pf)
-    // pruning proof: the scan reads strictly fewer files than a full read
+    // pruning proof: the scan plans exactly the purchase partition's files
+    val planned = sliced.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan.asInstanceOf[graft.sources.GraftScan].plannedFiles
+    }.flatten
+    val live = graft.sources.StoreLog.latest(dir).get.files
+    assert(planned.sorted === live.filter(_.startsWith("event_type=purchase/")).sorted &&
+      planned.size < live.size, planned)
     assert(sliced.count() === events.filter(col("event_type") === "purchase").count())
   }
 
@@ -141,6 +144,21 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("SortMergeJoin"), p)
     // the only Exchange allowed is the final orderBy's range partitioning
     assert(!p.contains("Exchange hashpartitioning"), p)
+  }
+
+  test("join_bucketed runs on a fixture directory whose name holds '-'") {
+    import org.apache.spark.sql.functions.col
+    // the query derives its table names from the directory name
+    val root = java.nio.file.Files.createTempDirectory("graft_bkt_dash")
+    val d = java.nio.file.Files.createSymbolicLink(root.resolve("sf-0.001"),
+      java.nio.file.Paths.get(TestSpark.sf001)).toString
+    val got = Registry.all("join_bucketed").fn(spark, d).collect().toSeq
+    val want = sources.Tables.orders(spark, d)
+      .join(sources.Tables.customer(spark, d), col("o_custkey") === col("c_custkey"))
+      .select(col("o_orderkey"), col("o_custkey"), col("c_mktsegment"),
+        col("o_totalprice"))
+      .orderBy(col("o_orderkey")).collect().toSeq
+    assert(got.nonEmpty && got === want)
   }
 
   test("win_ewma plans ONE window pass over one key shuffle (no self-join)") {
@@ -331,15 +349,30 @@ class PlanSpec extends AnyFunSuite {
     // cell partitions, and touch the base embeddings only to fetch the 8
     // query vectors — candidate generation never rescans the corpus.
     val df = Registry.all("llm_ann_ivf_indexed").fn(spark, TestSpark.sf001)
-    val scans = df.queryExecution.sparkPlan.collect {
+    val plan = df.queryExecution.sparkPlan
+    val index = plan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+        if b.table.name().contains("ivf_idx_") => b.scan
+    }
+    val base = plan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
-    val (index, base) = scans.partition(_.metadata("Location").contains("ivf_idx_"))
     assert(index.size === 1 && base.size === 1,
-      s"expected one index scan + one query-vector scan, got ${scans.map(_.metadata("Location"))}")
-    val pf = index.head.metadata("PartitionFilters")
-    assert(pf.contains("cell") && pf.contains("IN"),
-      s"cells read is not plan-time partition-pruned: $pf")
+      s"expected one index scan + one query-vector scan, got $index / $base")
+    // the probed cells are the IN-list the probe put on the partition
+    // column; the cells scan plans exactly their live manifest files
+    val probed = df.queryExecution.analyzed.flatMap(_.expressions).flatMap(_.collect {
+      case org.apache.spark.sql.catalyst.expressions.In(v, list)
+        if v.references.exists(_.name == "cell") => list.map(_.eval().toString)
+    }.flatten).toSet
+    val cellsDir = graft.Q.scratchDir(
+      s"ivf_idx_${new java.io.File(TestSpark.sf001).getName}") + "/cells"
+    val live = graft.sources.StoreLog.latest(cellsDir).get.files
+    val expected = live.filter(f => probed.exists(c => f.startsWith(s"cell=$c/")))
+    val planned = index.head.asInstanceOf[graft.sources.GraftScan].plannedFiles
+    assert(probed.nonEmpty && planned.sorted === expected.sorted &&
+      planned.size < live.size,
+      s"cells read is not plan-time partition-pruned to cells $probed: $planned")
   }
 
   test("ts_ewm_vol: both EWMA recurrences fuse into ONE window pass above the lag stage") {

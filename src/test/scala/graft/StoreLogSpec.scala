@@ -320,13 +320,14 @@ class StoreLogSpec extends AnyFunSuite {
         col("value"), col("props"), lit(3L).as("version"), lit("fixup").as("note"))
     TsStore.upsert(spark, dir, wide, keyCols = Seq("event_id"),
       versionCol = "version", tsCol = "ts", uidCols = Seq("event_type"))
-    val afterWide = TsStore.read(spark, dir, mergeSchema = true)
+    val afterWide = TsStore.read(spark, dir)
     assert(afterWide.filter(col("note") === "fixup").count() === wide.count())
     assert(afterWide.filter(col("version") < 3L && col("note").isNotNull).count() === 0)
     // a SECOND narrow upsert on the evolved partition must not erase the
     // evolved column from carried-over rows: the merge reads the base
-    // with mergeSchema — a single-footer schema (e.g. an un-evolved
-    // file listed first) would silently drop `note` from the rewrite
+    // under the declared schema (the union) — a single-footer schema
+    // (e.g. an un-evolved file listed first) would silently drop `note`
+    // from the rewrite
     val narrow2 = events.filter(col("event_type") === "click" && col("event_id") % 17 === 0)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"), lit(5L).as("version"))
@@ -335,7 +336,7 @@ class StoreLogSpec extends AnyFunSuite {
     val keptNotes = wide.select("event_id")
       .except(narrow2.select("event_id")).count()
     assert(keptNotes > 0, "fixture degenerate: every wide row re-updated")
-    assert(TsStore.read(spark, dir, mergeSchema = true)
+    assert(TsStore.read(spark, dir)
       .filter(col("note") === "fixup").count() === keptNotes,
       "narrow upsert erased the evolved column from carried-over rows")
   }
@@ -1110,11 +1111,11 @@ class StoreLogSpec extends AnyFunSuite {
     }
   }
 
-  test("delete on a TIMESTAMP-partitioned store: URI-decoded file matching survives escaped paths") {
+  test("delete on a TIMESTAMP-partitioned store: file identity survives escaped paths") {
     import spark.implicits._
     // partition dirs like 'day=2024-01-01 09%3A30%3A00' — the raw
-    // on-disk name has literal '%' and ' ', so the scan-file-to-manifest
-    // match must decode input_file_name()'s URI exactly once
+    // on-disk name has literal '%' and ' ', and the find scan's `_file`
+    // must name the manifest's own entry
     val dir = Files.createTempDirectory("graft_tsdel").toString
     def day(s: String) = java.sql.Timestamp.valueOf(s)
     val b = Seq((1L, day("2024-01-01 09:30:00"), 10.0),

