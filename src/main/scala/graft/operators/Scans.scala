@@ -493,7 +493,7 @@ object Scans {
       // SCATTERED keyed takedown with MANIFEST-LEVEL key digests: the
       // store declares a bloom column, so every committed file records
       // its distinct-value fingerprint set (derived from the parquet
-      // dictionary the commit's footer pass already holds). A GDPR-
+      // dictionary the write task's footer read already holds). A GDPR-
       // shaped key set — uncorrelated with the (uid, ts) layout, so
       // the [min,max] extent gate keeps EVERY file — prunes at the
       // manifest instead: only files whose digest may hold a key join

@@ -392,7 +392,7 @@ class Bundles(spark: SparkSession, basePath: String,
       // per attempt from the rebased parent) serializes after it
       StoreLog.withWriterLease(path) { lease =>
         TsStore.commitTransformWithRebase(path, lease, curV,
-          moved = Seq.empty, replaced = Seq(partPrefix),
+          moved = GraftWriteTaskResult.empty, replaced = Seq(partPrefix),
           removeFilesOf = seriesFiles,
           abortOnAppendsUnder = false,
           abortOnReplaced = false)
@@ -450,28 +450,27 @@ class Bundles(spark: SparkSession, basePath: String,
         // dead time-traveled chunks from prior upserts, which would
         // inflate the reported ratio on any store not yet vacuumed
         val before = snap.files.size.toLong
-        val staging = TsStore.txnDir(dir(collection))
-        TsStore.write(TsStore.load(spark, dir(collection)),
-          staging, tsCol = tsCol, uidCols = Seq(UidCol))
-        val (_, movedN) = StoreLog.withWriterLease(dir(collection)) { _ =>
-          val moved =
-            try StoreLog.adoptStaged(dir(collection), staging)
-            finally StoreLog.deleteStaging(staging)
+        val staged = GraftBatchWrite.stage(
+          TsStore.canonical(TsStore.load(spark, dir(collection)), Seq(UidCol), tsCol),
+          dir(collection), Seq(UidCol), tsCol, snap.bloomCols,
+          GraftBatchWrite.MaxRecordsPerFile)
+        val movedN = StoreLog.withWriterLease(dir(collection)) { _ =>
+          val moved = staged.adopt()
           val replaced = snap.files.filter(_.contains("/"))
             .map(f => f.substring(0, f.lastIndexOf('/'))).distinct.sorted
           // a parentless commit would silently reset a store's
-          // configured per-store checkpoint cadence to the default —
-          // carry the snapshot's interval through the full listing
-          val (mStats, mSizes) = FileStats.forFilesWithSizes(dir(collection), moved)
-          try StoreLog.commit(dir(collection), v, replaced, moved,
+          // configured per-store checkpoint cadence and bloom columns —
+          // carry the snapshot's through the full listing
+          try StoreLog.commit(dir(collection), v, replaced, moved.files,
             interval = Some(snap.checkpointInterval),
-            addStats = mStats, addSizes = mSizes)
+            bloomCols = Some(snap.bloomCols),
+            addStats = moved.stats, addSizes = moved.sizes)
           catch {
             case c: StoreLog.CommitConflict =>
-              StoreLog.deleteDataFiles(dir(collection), moved)
+              StoreLog.deleteDataFiles(dir(collection), moved.files)
               throw c
           }
-          (v, moved.size.toLong)
+          moved.files.size.toLong
         }
         (before, movedN)
       case None =>
@@ -555,27 +554,25 @@ class Bundles(spark: SparkSession, basePath: String,
         // time-travelable until vacuum.
         val snap = StoreLog.read(dir(collection), v)
         val before = snap.files.count(_.startsWith(partPrefix + "/")).toLong
-        val staging = TsStore.txnDir(dir(collection))
         val rows = TsStore.load(spark, dir(collection))
           .filter(org.apache.spark.sql.functions.col(UidCol) === uid)
-        TsStore.write(rows, staging, tsCol = tsCol, uidCols = Seq(UidCol))
+        val staged = GraftBatchWrite.stage(
+          TsStore.canonical(rows, Seq(UidCol), tsCol), dir(collection),
+          Seq(UidCol), tsCol, snap.bloomCols, GraftBatchWrite.MaxRecordsPerFile)
         val movedN = StoreLog.withWriterLease(dir(collection)) { _ =>
-          val moved =
-            try StoreLog.adoptStaged(dir(collection), staging)
-            finally StoreLog.deleteStaging(staging)
-          require(moved.forall(_.startsWith(partPrefix + "/")),
-            s"compactSeries staged files outside $partPrefix: ${moved.take(3)}")
+          val moved = staged.adopt()
+          require(moved.files.forall(_.startsWith(partPrefix + "/")),
+            s"compactSeries staged files outside $partPrefix: ${moved.files.take(3)}")
           val kept = snap.files.filterNot(_.startsWith(partPrefix + "/"))
-          val (mStats, mSizes) = FileStats.forFilesWithSizes(dir(collection), moved)
-          try StoreLog.commit(dir(collection), v, Seq(partPrefix), kept ++ moved,
+          try StoreLog.commit(dir(collection), v, Seq(partPrefix), kept ++ moved.files,
             parent = Some(snap),
-            addStats = mStats, addSizes = mSizes)
+            addStats = moved.stats, addSizes = moved.sizes)
           catch {
             case c: StoreLog.CommitConflict =>
-              StoreLog.deleteDataFiles(dir(collection), moved)
+              StoreLog.deleteDataFiles(dir(collection), moved.files)
               throw c
           }
-          moved.size.toLong
+          moved.files.size.toLong
         }
         (before, movedN)
       case None =>

@@ -11,9 +11,10 @@ import scala.jdk.CollectionConverters._
   * build the candidate file list driver-side BEFORE Spark opens a single
   * footer — O(manifest) metadata work instead of O(store) IO.
   *
-  * Collection is free-riding: the committing writer just PRODUCED the
-  * files, so their parquet footers are hot; [[forFiles]] reads min/max
-  * straight out of the row-group metadata (no data pages, no Spark job).
+  * Collection is free-riding: each write task opens the footers of the
+  * files it just PRODUCED ([[ofFile]]) and returns their stats with its
+  * commit message, reading min/max straight out of the row-group
+  * metadata (no data pages, no driver pass, no Spark job).
   *
   * Pruning ([[mayMatch]]) is CONSERVATIVE by construction: a file is
   * dropped only when its recorded bounds prove no row can satisfy the
@@ -66,59 +67,53 @@ object FileStats {
 
   // ---------------------------------------------------------------- write
 
-  /** Read per-file column bounds from the parquet footers of
-    * store-relative `rels` (driver-side, metadata-only; cost is
-    * O(committed files), the same budget as the manifest delta that
-    * names them). A column is recorded only when EVERY row group carries
-    * usable stats for it; files that fail to open are skipped (the
-    * manifest simply carries no stats for them — reads stay correct,
-    * just unpruned).
+  /** One parquet file's column bounds (None when no column qualifies)
+    * and its BYTE LENGTH, off its footer — metadata-only, no data pages
+    * ([[org.apache.parquet.hadoop.util.HadoopInputFile]] stats the file
+    * to find the footer, so the length costs no extra RPC). A column is
+    * recorded only when EVERY row group carries usable stats for it;
+    * `digestCols` are the file's parquet-bloom columns, which also get
+    * a key digest. The store's task writer calls this on each file it
+    * just wrote, so a commit's stats come from its own tasks; an open
+    * failure propagates.
     */
-  def forFiles(path: String, rels: Seq[String]): Map[String, FileStatsMap] =
-    forFilesWithSizes(path, rels)._1
+  private[graft] def ofFile(file: String,
+                            conf: org.apache.hadoop.conf.Configuration,
+                            digestCols: Set[String]): (Option[FileStatsMap], Long) = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new org.apache.hadoop.fs.Path(file), conf)
+    val len = in.getLength
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try {
+      val fs = fromFooter(reader.getFooter, digestCols, reader)
+      (if (fs.nonEmpty) Some(fs) else None, len)
+    } finally reader.close()
+  }
 
-  /** [[forFiles]] plus each file's BYTE LENGTH — free-riding on the
-    * same footer open ([[org.apache.parquet.hadoop.util.HadoopInputFile]]
-    * stats the file to find the footer, so the length costs zero extra
-    * RPCs). Committed into the manifest as the `sizes` index, it lets
-    * scan planning and the planner's sizeInBytes answer metadata-only.
+  /** [[ofFile]] over the store-relative `rels` of `path`, with sizes —
+    * the one driver-side footer pass left: [[StoreLog.ensure]] indexing
+    * files it ADOPTS from an existing directory (written before the
+    * store had a log, so no task reported their stats). Files that fail
+    * to open are skipped (the manifest carries no stats for them —
+    * reads stay correct, just unpruned).
     */
   def forFilesWithSizes(path: String, rels: Seq[String],
-                        digestCols: Option[Seq[String]] = None)
+                        digestCols: Seq[String])
       : (Map[String, FileStatsMap], Map[String, Long]) = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val conf = org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
-    // key-digest columns default to the store's own declared bloom
-    // columns (one raw manifest probe) — the same "keys worth indexing"
-    // declaration drives the parquet blooms and the manifest digests
-    val dcols: Set[String] = digestCols.getOrElse(
-      if (StoreLog.canLog(path))
-        StoreLog.latestVersion(path)
-          .map(v => StoreLog.bloomColsAt(path, v)).getOrElse(Nil)
-      else Nil).toSet
+    val dcols = digestCols.toSet
     // Footer opens are independent per file and IO-bound — run them on a
-    // bounded pool instead of serially on the committing thread (a commit
-    // adding hundreds of small files otherwise stalls the driver for the
-    // sum of the opens; the pool keeps the pass O(files / parallelism)).
+    // bounded pool instead of serially on the committing thread (adopting
+    // hundreds of small files otherwise stalls the driver for the sum of
+    // the opens; the pool keeps the pass O(files / parallelism)).
     // Results are folded back in input order, so the maps are identical
     // to the sequential build.
-    def statOne(rel: String)
-        : (String, Option[FileStatsMap], Option[Long]) =
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new HPath(s"$path/$rel"), conf)
-        val len = in.getLength
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val fs = fromFooter(reader.getFooter, dcols, reader)
-          (rel, if (fs.nonEmpty) Some(fs) else None, Some(len))
-        } finally reader.close()
-      } catch {
-        case scala.util.control.NonFatal(_) => (rel, None, None)
-      }
-    val results: Seq[(String, Option[FileStatsMap], Option[Long])] =
+    def statOne(rel: String): Option[(Option[FileStatsMap], Long)] =
+      try Some(ofFile(s"$path/$rel", conf, dcols))
+      catch { case scala.util.control.NonFatal(_) => None }
+    val results: Seq[Option[(Option[FileStatsMap], Long)]] =
       if (rels.size <= 4) rels.map(statOne)
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -126,19 +121,15 @@ object FileStats {
         try {
           val futs = rels.map(rel =>
             pool.submit(new java.util.concurrent.Callable[
-              (String, Option[FileStatsMap], Option[Long])] {
+              Option[(Option[FileStatsMap], Long)]] {
               def call() = statOne(rel)
             }))
           futs.map(_.get())
         } finally pool.shutdown()
       }
-    val stats = Map.newBuilder[String, FileStatsMap]
-    val sizes = Map.newBuilder[String, Long]
-    results.foreach { case (rel, fs, len) =>
-      fs.foreach(stats += rel -> _)
-      len.foreach(sizes += rel -> _)
-    }
-    (stats.result(), sizes.result())
+    val read = rels.zip(results).collect { case (rel, Some(r)) => rel -> r }
+    (read.collect { case (rel, (Some(fs), _)) => rel -> fs }.toMap,
+      read.map { case (rel, (_, len)) => rel -> len }.toMap)
   }
 
   /** Digest caps: a column with more distinct values than this per
@@ -306,9 +297,7 @@ object FileStats {
                 tag != "ts" && tag != "tn")) null
           // guarded on its own: a dictionary-read failure (odd/corrupt
           // dictionary page) must cost only the DIGEST, never the
-          // file's whole stats map — without this the per-file catch in
-          // forFilesWithSizes drops min/max/nulls for every column and
-          // the file stays un-prunable for the store's life
+          // file's whole stats map (or, in a write task, the write)
           else try digestOf(reader, footer, name, tag).orNull
           catch { case scala.util.control.NonFatal(_) => null }
         Some(name -> ColStat(tag, lo, hi, nulls, rows, dg))

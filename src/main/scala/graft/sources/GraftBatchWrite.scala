@@ -5,13 +5,17 @@ import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriterCommitMessage}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.types.StructType
 
@@ -21,16 +25,17 @@ import org.apache.spark.sql.types.StructType
   * CANONICAL layout to Spark's planner via
   * [[RequiresDistributionAndOrdering]], so the engine itself
   * range-partitions and sorts the incoming rows by (uid..., ts) BEFORE
-  * any writer task runs — the same
-  * `repartitionByRange(uid, ts).sortWithinPartitions` shape
-  * [[TsStore.write]] builds by hand, now arriving for free on every
-  * SQL `INSERT INTO`. The resulting files carry the same tight
-  * per-file ts bounds (manifest stats) the Scala write path produces,
+  * any writer task runs. The Scala verbs build that shape themselves
+  * (`repartitionByRange(uid, ts).sortWithinPartitions`) and run the
+  * same task writer over it ([[GraftBatchWrite.stage]]), so every
+  * store file — SQL or Scala, append or rewrite — comes out of one
+  * writer with the same tight per-file ts bounds (manifest stats),
   * which is what makes every later ts-slice prunable.
   *
   * Commit protocol: tasks write parquet into a txn-private staging
-  * directory (UUID-named files — no coordination needed); the driver's
-  * [[BatchWrite.commit]] adopts the staged files and publishes ONE
+  * directory (UUID-named files — no coordination needed) and return
+  * the files' names and footer stats; the driver's
+  * [[BatchWrite.commit]] adopts the named files and publishes ONE
   * manifest version under a writer lease, with the same CAS-rebase
   * retry as the Scala append (pure file additions serialize after any
   * concurrent commit). A crash before the publish leaves the previous
@@ -60,7 +65,7 @@ class GraftBatchWrite(path: String, writeSchema: StructType,
     val spark = SparkSession.active
     val staging = TsStore.txnDir(path)
     val (factory, conf, maxRecords) =
-      GraftBatchWrite.parquetSetup(spark, path, writeSchema, uids)
+      GraftBatchWrite.storeSetup(spark, path, writeSchema, uids)
     val boundSet = Constraints.forStore(path)
     val checks = Constraints.bind(spark, writeSchema, boundSet)
     new GraftBatchWriteExec(path, staging, writeSchema, uids, tsCol,
@@ -71,47 +76,111 @@ class GraftBatchWrite(path: String, writeSchema: StructType,
 }
 
 private[graft] object GraftBatchWrite {
-  /** Shared parquet write setup for the native batch AND streaming
-    * writes — the Scala path's geometry: micros timestamps (INT96 has
-    * no stats), zstd, 16 MB row groups, the store's bloom columns.
+  /** Parquet row-group size of every store write — the unit of
+    * ts-slice skipping, ≙ the reference's 16 MB BSON chunk cap
+    * (`serialization.py` ~L90–110): a 128 MB default row group makes a
+    * 1-minute slice read 128 MB per file.
     */
-  def parquetSetup(spark: SparkSession, path: String,
-                   writeSchema: StructType, uids: Seq[String])
-      : (OutputWriterFactory, GraftSerializableConf, Long) = {
+  val RowGroupBytes: Long = 16L << 20
+
+  /** Default file roll: bounds single-file blowup so one hot series
+    * cannot produce a file whose footer stalls planning.
+    */
+  val MaxRecordsPerFile: Long = 8L << 20
+
+  /** Parquet write setup shared by every store write: INT64 micros
+    * timestamps (INT96 columns carry no min/max stats, which would
+    * strip the manifest's ts index from every file), zstd (≙ the
+    * reference's LZ4 column blobs — at 100 TB the ratio IS the IO
+    * budget), `rowGroupBytes` row groups, and a parquet bloom filter per
+    * `bloomCols` column (min/max only skip range-correlated keys; a
+    * bloom answers "absent" per row group for a scattered merge key).
+    * `dataSchema` is the files' schema under PHYSICAL names, partition
+    * columns excluded. Everything is set on the write's own Hadoop
+    * conf — no store write touches the session conf.
+    */
+  def parquetSetup(spark: SparkSession, dataSchema: StructType,
+                   bloomCols: Seq[String], rowGroupBytes: Long)
+      : (OutputWriterFactory, GraftSerializableConf) = {
     val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
     val conf = job.getConfiguration
-    // COLUMN MAPPING: a renamed column writes its ORIGINAL parquet
-    // name ([[GraftTable.PhysicalKey]]) so every file of the store
-    // carries one stable physical schema — a pure field rename here
-    // (rows are positional), applied from the store's declared schema
-    val declared = if (StoreLog.canLog(path))
-      StoreLog.latestVersion(path)
-        .flatMap(v => StoreLog.propsAt(path, v).get(GraftTable.SchemaProp))
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[StructType])
-      else None
-    val physSchema = declared.filter(GraftTable.hasRenames)
-      .map(d => GraftTable.toPhysical(writeSchema, d))
-      .getOrElse(writeSchema)
-    val dataSchema = StructType(
-      physSchema.fields.filterNot(f => uids.contains(f.name)))
     val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
       .prepareWrite(spark, job, Map("compression" -> "zstd"), dataSchema)
-    // AFTER prepareWrite (which pins the session's value): INT64 micros,
-    // never INT96 — INT96 columns carry no parquet min/max stats, which
-    // would silently strip the manifest's ts index from every write
+    // AFTER prepareWrite, which copies the session's timestamp type in
     conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.setLong("parquet.block.size", 16L << 20)
-    val blooms =
-      if (StoreLog.canLog(path))
-        StoreLog.latestVersion(path)
-          .map(v => StoreLog.bloomColsAt(path, v)).getOrElse(Nil)
-      else Nil
-    blooms.foreach(c => conf.set(s"parquet.bloom.filter.enabled#$c", "true"))
-    val maxRecords = spark.conf
-      .getOption("spark.graft.write.maxRecordsPerFile").map(_.toLong)
-      .getOrElse(8L << 20)
-    (factory, new GraftSerializableConf(conf), maxRecords)
+    conf.setLong("parquet.block.size", rowGroupBytes)
+    bloomCols.foreach(c => conf.set(s"$BloomKeyPrefix$c", "true"))
+    (factory, new GraftSerializableConf(conf))
+  }
+
+  /** Hadoop-conf key prefix that enables a parquet bloom filter per
+    * column — also how a write task knows which of its columns get a
+    * key digest.
+    */
+  val BloomKeyPrefix = "parquet.bloom.filter.enabled#"
+
+  /** [[parquetSetup]] for a SQL or streaming write into the store at
+    * `path`, whose rows arrive under the DECLARED names: a renamed
+    * column writes its ORIGINAL parquet name ([[GraftTable.PhysicalKey]])
+    * so every file of the store carries one stable physical schema — a
+    * pure field rename (rows are positional) — plus the store's bloom
+    * columns and the session's `spark.graft.write.maxRecordsPerFile`.
+    */
+  def storeSetup(spark: SparkSession, path: String,
+                 writeSchema: StructType, uids: Seq[String])
+      : (OutputWriterFactory, GraftSerializableConf, Long) = {
+    val v = if (StoreLog.canLog(path)) StoreLog.latestVersion(path) else None
+    val physSchema = v
+      .flatMap(v => GraftTable.declaredIn(StoreLog.propsAt(path, v)))
+      .filter(GraftTable.hasRenames)
+      .map(d => GraftTable.toPhysical(writeSchema, d))
+      .getOrElse(writeSchema)
+    val (factory, conf) = parquetSetup(spark,
+      StructType(physSchema.fields.filterNot(f => uids.contains(f.name))),
+      v.map(StoreLog.bloomColsAt(path, _)).getOrElse(Nil), RowGroupBytes)
+    (factory, conf, sessionMaxRecords(spark))
+  }
+
+  /** The session's `spark.graft.write.maxRecordsPerFile` file roll. */
+  def sessionMaxRecords(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.write.maxRecordsPerFile").map(_.toLong)
+      .getOrElse(MaxRecordsPerFile)
+
+  /** Stage a Scala verb's write into a fresh txn dir of `path`: run
+    * `sorted` — already range-partitioned and sorted by (uids..., ts),
+    * or by (uids..., any key) — through the task writer
+    * ([[GraftDataWriter]]: one file per task and partition directory,
+    * rolled at `maxRecords`). Each task returns its files' names, sizes
+    * and footer stats, so nothing on the driver walks the staging dir
+    * or reopens a footer. A failed job removes the staging dir. The
+    * files reach the store only through [[Staged.adopt]].
+    */
+  def stage(sorted: DataFrame, path: String, uids: Seq[String],
+            tsCol: String, bloomCols: Seq[String], maxRecords: Long,
+            rowGroupBytes: Long = RowGroupBytes): Staged = {
+    val schema = sorted.schema
+    val (factory, conf) = parquetSetup(sorted.sparkSession,
+      StructType(schema.fields.filterNot(f => uids.contains(f.name))),
+      bloomCols, rowGroupBytes)
+    val staging = TsStore.txnDir(path)
+    val writers = new GraftDataWriterFactory(staging, schema, uids, tsCol,
+      factory, conf, maxRecords)
+    val qe = sorted.queryExecution
+    val messages =
+      try SQLExecution.withNewExecutionId(qe, Some(s"graft-stage:$path")) {
+        qe.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+          val w = writers.createWriter(pid, TaskContext.get().taskAttemptId())
+          try {
+            rows.foreach(w.write)
+            Iterator.single(w.commit())
+          } catch {
+            case t: Throwable => w.abort(); throw t
+          } finally w.close()
+        }.collect()
+      } catch {
+        case t: Throwable => StoreLog.deleteStaging(staging); throw t
+      }
+    Staged(path, staging, GraftWriteTaskResult.of(messages.toSeq))
   }
 
   /** The (uid..., ts) ascending sort — the store's canonical order,
@@ -141,16 +210,9 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
       maxRecordsPerFile, checks)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // adopt ONLY the files the committed task attempts NAMED — the
-    // staging dir may also hold failed/speculative attempts' files
-    // (torn footers, duplicate rows); those die with the staging dir
-    val named = messages.toSeq.collect {
-      case GraftWriteTaskResult(fs) => fs }.flatten
+    val staged = Staged(path, staging, GraftWriteTaskResult.of(messages.toSeq))
     StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStagedNamed(path, staging, named)
-        finally StoreLog.deleteStaging(staging)
-      val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
+      val moved = staged.adopt()
       var committed = false
       var attempts = 0
       while (!committed) {
@@ -165,7 +227,7 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
         // the constraint's whole-table certification
         val addedChecks = Constraints.addedSince(boundSet, curProps)
         if (addedChecks.nonEmpty) {
-          StoreLog.deleteDataFiles(path, moved)
+          StoreLog.deleteDataFiles(path, moved.files)
           throw new StoreLog.CommitConflict(
             s"CHECK constraint(s) ${addedChecks.map(_.name).mkString(", ")} " +
               s"added concurrently at $path — re-run the INSERT")
@@ -179,7 +241,7 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
         // take the O(commit) transform path when branchless; OVERWRITE
         // replaces a view wholesale and refuses while a branch is open.
         if (truncate && curProps.contains(StoreLog.MainRefProp)) {
-          StoreLog.deleteDataFiles(path, moved)
+          StoreLog.deleteDataFiles(path, moved.files)
           throw new IllegalStateException(
             s"store at $path has open branch(es) — INSERT OVERWRITE " +
               "refuses while a branch is open; publish or drop it first")
@@ -187,22 +249,22 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
         try {
           if (!truncate && !curProps.contains(StoreLog.MainRefProp))
             StoreLog.commitTransform(path, curV, Seq.empty,
-              removeFiles = Nil, addFiles = moved,
-              addStats = movedStats, addSizes = movedSizes)
+              removeFiles = Nil, addFiles = moved.files,
+              addStats = moved.stats, addSizes = moved.sizes)
           else {
             val cur = StoreLog.read(path, curV)
             val (baseFiles, refProps, carryStats, carrySizes, dvReset) =
               TsStore.refAppendBase(path, cur, None)
             val (replaced, files) =
               if (truncate)
-                ((cur.files ++ moved).map { f =>
+                ((cur.files ++ moved.files).map { f =>
                   val i = f.lastIndexOf('/')
                   if (i > 0) f.substring(0, i) else f
-                }.distinct.sorted, moved)
-              else (Seq.empty[String], baseFiles ++ moved)
+                }.distinct.sorted, moved.files)
+              else (Seq.empty[String], baseFiles ++ moved.files)
             StoreLog.commit(path, cur.version, replaced, files,
-              parent = Some(cur), addStats = carryStats ++ movedStats,
-              addSizes = carrySizes ++ movedSizes,
+              parent = Some(cur), addStats = carryStats ++ moved.stats,
+              addSizes = carrySizes ++ moved.sizes,
               resetDvs = if (truncate) None else dvReset,
               // an OVERWRITE redefines the whole store with canonically
               // sorted files — (re)establish the layout-order contract;
@@ -224,8 +286,43 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
     StoreLog.deleteStaging(staging)
 }
 
-private[graft] case class GraftWriteTaskResult(files: Seq[String])
+/** One task's staged files (store-relative) with the stats and byte
+  * sizes read off the footers it just wrote — what a commit needs to
+  * name the files and index them in the manifest.
+  */
+private[graft] final case class GraftWriteTaskResult(files: Seq[String],
+    stats: Map[String, FileStats.FileStatsMap], sizes: Map[String, Long])
   extends WriterCommitMessage
+
+private[graft] object GraftWriteTaskResult {
+  val empty: GraftWriteTaskResult = GraftWriteTaskResult(Nil, Map.empty, Map.empty)
+
+  /** The committed task attempts' results as one. Only files a
+    * committed attempt NAMED may reach the manifest — the staging dir
+    * may also hold failed/speculative attempts' files (torn footers,
+    * duplicate rows); those die with it.
+    */
+  def of(messages: Seq[WriterCommitMessage]): GraftWriteTaskResult = {
+    val rs = messages.collect { case r: GraftWriteTaskResult => r }
+    GraftWriteTaskResult(rs.flatMap(_.files), rs.flatMap(_.stats).toMap,
+      rs.flatMap(_.sizes).toMap)
+  }
+}
+
+/** A write's files in the txn dir `staging` of the store at `path`, as
+  * its tasks named them.
+  */
+private[graft] final case class Staged(path: String, staging: String,
+                                       written: GraftWriteTaskResult) {
+  /** Move the named files into the store — present on disk but
+    * invisible until a commit names them — and drop the staging dir
+    * with whatever else is in it. Run under the writer lease of the
+    * commit that follows (see [[StoreLog.WriterLease]]).
+    */
+  def adopt(): GraftWriteTaskResult =
+    try written.copy(files = StoreLog.adoptStagedNamed(path, staging, written.files))
+    finally StoreLog.deleteStaging(staging)
+}
 
 private[sources] class GraftDataWriterFactory(staging: String,
     writeSchema: StructType, uids: Seq[String], tsCol: String,
@@ -239,7 +336,7 @@ private[sources] class GraftDataWriterFactory(staging: String,
 
 /** Shared task-writer base: the projections, the hive-style
   * `name=value` path rendering (Spark's own escaping and UTC string
-  * cast — byte-identical to the dynamic-partition writer's layout),
+  * cast — the dynamic-partition writer's directory names),
   * the null-ts guard, file naming, and the commit message. Subclasses
   * supply only the OPEN-FILE policy (sorted single-writer vs hashed
   * map).
@@ -282,13 +379,13 @@ private[graft] abstract class GraftWriterBase(staging: String,
     new TaskAttemptContextImpl(conf, attemptId)
   }
 
+  // null AND "" render as `__HIVE_DEFAULT_PARTITION__` (partition
+  // discovery refuses an empty value); names and values are escaped
   protected def partitionDir(row: InternalRow): String =
     uids.zip(segCasts).map { case (name, cast) =>
       val v = cast.eval(row)
-      val seg =
-        if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else ExternalCatalogUtils.escapePathName(v.toString)
-      s"$name=$seg"
+      ExternalCatalogUtils.getPartitionPathString(name,
+        if (v == null) null else v.toString)
     }.mkString("/")
 
   /** Open the next uniquely-named file under `dir` ("" = staging root). */
@@ -309,9 +406,24 @@ private[graft] abstract class GraftWriterBase(staging: String,
 
   protected def closeOpenWriters(): Unit
 
+  /** Close the files and read each one's stats off the footer just
+    * written, with digests for the bloom columns it was written with —
+    * the commit runs no footer pass of its own. A footer that does not
+    * read back fails the task.
+    */
   override def commit(): WriterCommitMessage = {
     closeOpenWriters()
-    GraftWriteTaskResult(written.result())
+    val files = written.result()
+    val digestCols = conf.getPropsWithPrefix(GraftBatchWrite.BloomKeyPrefix)
+      .asScala.collect { case (c, "true") => c }.toSet
+    val stats = Map.newBuilder[String, FileStats.FileStatsMap]
+    val sizes = Map.newBuilder[String, Long]
+    files.foreach { rel =>
+      val (fs, len) = FileStats.ofFile(s"$staging/$rel", conf, digestCols)
+      fs.foreach(stats += rel -> _)
+      sizes += rel -> len
+    }
+    GraftWriteTaskResult(files, stats.result(), sizes.result())
   }
 
   override def abort(): Unit = closeOpenWriters()

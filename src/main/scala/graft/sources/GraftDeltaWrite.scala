@@ -134,7 +134,7 @@ private[sources] class GraftDeltaWrite(path: String, rowSchema: StructType,
     val spark = SparkSession.active
     val staging = TsStore.txnDir(path)
     val (factory, conf, maxRecords) =
-      GraftBatchWrite.parquetSetup(spark, path, rowSchema, uids)
+      GraftBatchWrite.storeSetup(spark, path, rowSchema, uids)
     // a pure DELETE's row schema is empty and never inserts — nothing
     // to gate (removing rows cannot violate a CHECK constraint). The
     // same holds per-constraint for a delete-only MERGE: its row schema
@@ -180,7 +180,7 @@ private[sources] class GraftDeltaBatchWrite(path: String, staging: String,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val msgs = messages.toSeq.collect { case m: GraftDeltaTaskResult => m }
-    val inserts = msgs.flatMap(_.files)
+    val inserts = GraftWriteTaskResult.of(msgs.map(_.inserts))
     val frags = msgs.flatMap(_.frags)
     val scan = scanOf().getOrElse(throw new IllegalStateException(
       "delta write committed without its operation scan"))
@@ -190,11 +190,12 @@ private[sources] class GraftDeltaBatchWrite(path: String, staging: String,
       // else in staging (failed/speculative attempts) dies with it
       val moved =
         try {
-          val m = StoreLog.adoptStagedNamed(path, staging, inserts)
+          val m = inserts.copy(
+            files = StoreLog.adoptStagedNamed(path, staging, inserts.files))
           StoreLog.adoptStagedNamed(path, staging, frags.map(_.rel))
           m
         } finally StoreLog.deleteStaging(staging)
-      if (moved.isEmpty && frags.isEmpty) ()
+      if (moved.files.isEmpty && frags.isEmpty) ()
       else {
         // final vector per touched file: a single fresh fragment IS the
         // sidecar; multiple fragments (a file's mutations split across
@@ -284,11 +285,11 @@ private[sources] class GraftDeltaBatchWrite(path: String, staging: String,
   */
 private[graft] final case class DvFrag(file: String, rel: String, rows: Long)
 
-/** One task's artifacts: staged insert files + deletion-vector
-  * fragments.
+/** One task's artifacts: staged insert files (with their stats) +
+  * deletion-vector fragments.
   */
 private[graft] case class GraftDeltaTaskResult(
-    files: Seq[String], frags: Seq[DvFrag])
+    inserts: GraftWriteTaskResult, frags: Seq[DvFrag])
   extends WriterCommitMessage
 
 private[sources] class GraftDeltaWriterFactory(staging: String,
@@ -364,12 +365,12 @@ private[sources] class GraftDeltaDataWriter(staging: String,
   }
 
   override def commit(): WriterCommitMessage = {
-    val insertFiles =
-      if (!insertsOpened) Seq.empty[String]
-      else insertW.commit() match { case GraftWriteTaskResult(fs) => fs }
+    val inserts =
+      if (!insertsOpened) GraftWriteTaskResult.empty
+      else insertW.commit() match { case r: GraftWriteTaskResult => r }
     positions.foreach { case (file, buf) => flushFrag(file, buf) }
     positions.clear()
-    GraftDeltaTaskResult(insertFiles, frags.result())
+    GraftDeltaTaskResult(inserts, frags.result())
   }
 
   override def abort(): Unit = if (insertsOpened) insertW.abort()

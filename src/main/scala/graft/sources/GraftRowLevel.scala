@@ -91,7 +91,7 @@ private[sources] class GraftReplaceDataWrite(path: String,
     val spark = SparkSession.active
     val staging = TsStore.txnDir(path)
     val (factory, conf, maxRecords) =
-      GraftBatchWrite.parquetSetup(spark, path, writeSchema, uids)
+      GraftBatchWrite.storeSetup(spark, path, writeSchema, uids)
     // copy-on-write replacement rows = survivors + UPDATE/MERGE output:
     // survivors satisfied the constraints at their own write (ADD
     // validates existing data), so the per-row guard here gates exactly
@@ -104,9 +104,7 @@ private[sources] class GraftReplaceDataWrite(path: String,
           factory, conf, maxRecords, checks)
 
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        // only the committed attempts' named files (see GraftBatchWrite)
-        val named = messages.toSeq.collect {
-          case GraftWriteTaskResult(fs) => fs }.flatten
+        val staged = Staged(path, staging, GraftWriteTaskResult.of(messages.toSeq))
         val scan = scanOf().getOrElse(throw new IllegalStateException(
           "row-level write committed without its operation scan"))
         // the files the replacement rows were COMPUTED from — evaluated
@@ -118,10 +116,8 @@ private[sources] class GraftReplaceDataWrite(path: String,
           if (i > 0) f.substring(0, i) else f
         }.distinct.sorted
         StoreLog.withWriterLease(path) { lease =>
-          val moved =
-            try StoreLog.adoptStagedNamed(path, staging, named)
-            finally StoreLog.deleteStaging(staging)
-          if (removed.isEmpty && moved.isEmpty) ()
+          val moved = staged.adopt()
+          if (removed.isEmpty && moved.files.isEmpty) ()
           else {
             // transform commit: swap exactly the operation's planned
             // files for the rewrites — no parent file list materializes

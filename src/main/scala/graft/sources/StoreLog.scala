@@ -178,7 +178,7 @@ object StoreLog {
 
   /** Heartbeat cadence for [[withWriterLease]]'s auto-renewal thread —
     * well inside [[WriterLeaseMs]] so a writer stalled in a long merge
-    * (slow staging write, GC pause, big footer pass) keeps its lease
+    * (slow staging write, GC pause, slow commit IO) keeps its lease
     * fresh without any cooperation from the stalled code path. Test
     * seam: specs shrink it to exercise renewal quickly.
     */
@@ -1491,8 +1491,7 @@ object StoreLog {
         // stat-less and un-prunable for the store's whole life. Digest
         // cols come from THIS call's declaration: no manifest exists
         // yet to derive them from
-        val (st, sz) = FileStats.forFilesWithSizes(path, files,
-          digestCols = Some(bloomCols))
+        val (st, sz) = FileStats.forFilesWithSizes(path, files, bloomCols)
         val declared =
           if (files.isEmpty || props.contains(GraftTable.SchemaProp)) None
           else org.apache.spark.sql.SparkSession.getActiveSession
@@ -1508,10 +1507,17 @@ object StoreLog {
       latest(path).get
     }
 
-  /** Drop the log (used by mode=Overwrite writes: an overwrite is a new
-    * store; a stale manifest naming deleted files must not survive it).
+  /** Remove everything under `path` except `keep` (the staged files of
+    * an Overwrite, about to be adopted): the old store's log, data and
+    * any other writer's staging — an overwrite is a new store.
     */
-  def delete(path: String): Unit = io(path).deleteDir(logDir(path))
+  def clearExcept(path: String, keep: String): Unit = {
+    val fsio = io(path)
+    fsio.list(path).filterNot(e => s"$path/${e.name}" == keep).foreach { e =>
+      if (e.isDir) fsio.deleteDir(s"$path/${e.name}")
+      else fsio.deleteFile(s"$path/${e.name}")
+    }
+  }
 
   /** Delete previously-adopted data files by store-relative path — the
     * abort path of a failed commit (the files were staged, moved into
@@ -1602,7 +1608,7 @@ object StoreLog {
       (vs.takeRight(retainVersions) ++ aged ++ pinned).distinct.sorted
     }
     // Candidate collection must be SOUND against live writers. A writer
-    // holds its lease from before adoptStaged until after its commit,
+    // holds its lease from before adoptStagedNamed until after its commit,
     // so after candidates are listed, ONE recheck decides every case:
     //   - adopted after the data listing → not a candidate at all;
     //   - adopted before it, not yet committed → its lease is still
@@ -1636,7 +1642,7 @@ object StoreLog {
         deleted = candidates.filter { f =>
           // while a writer is live, a dead-looking file may be its
           // adopted-but-uncommitted output (mtime = adopt time, stamped
-          // by adoptStaged) — spare every candidate stamped at or after
+          // by adoptStagedNamed) — spare every candidate stamped at or after
           // the oldest fresh lease's BIRTH (a long-stalled writer's
           // adoption can be arbitrarily old in wall-clock terms; the
           // heartbeat vouches for it as long as the lease stays fresh),
@@ -1795,32 +1801,17 @@ object StoreLog {
     deleted.size
   }
 
-  /** Move every staged data file from `stagingDir` (a txn-private
-    * directory Spark wrote with the store's partitioning) into the store
-    * root, preserving partition subpaths. Returns the moved files'
-    * store-relative paths. Filenames are unique per Spark write job
-    * (UUID-stamped), so moves cannot collide; files surface in the
-    * store directory but stay INVISIBLE to manifest readers until the
-    * commit that names them.
-    */
-  def adoptStaged(path: String, stagingDir: String): Seq[String] = {
-    val fsio = io(path)
-    val staged = Seq.newBuilder[String]
-    def walk(dir: String, prefix: String): Unit =
-      fsio.list(dir).filterNot(e => hiddenName(e.name)).foreach { e =>
-        if (e.isDir) walk(s"$dir/${e.name}", s"$prefix${e.name}/")
-        else if (e.name.endsWith(".parquet")) staged += s"$prefix${e.name}"
-      }
-    walk(stagingDir, "")
-    adoptFiles(path, stagingDir, staged.result())
-  }
-
-  /** [[adoptStaged]] restricted to the EXPLICITLY NAMED staged files —
-    * the DSv2 write paths' adopt: a distributed write's staging dir may
-    * hold files from FAILED or SPECULATIVE task attempts (torn footers,
-    * duplicate rows) alongside the committed attempts' output; only the
-    * files the tasks' WriterCommitMessages named may ever reach the
-    * manifest. Everything else dies with the staging dir.
+  /** Move the EXPLICITLY NAMED staged files (store-relative paths
+    * under `stagingDir`, a txn-private directory the task writer filled
+    * with the store's partitioning) into the store root, preserving
+    * partition subpaths. Returns them sorted. A distributed write's
+    * staging dir may hold files from FAILED or SPECULATIVE task attempts
+    * (torn footers, duplicate rows) alongside the committed attempts'
+    * output; only the files the tasks' WriterCommitMessages named may
+    * ever reach the manifest. Everything else dies with the staging
+    * dir. Filenames are UUID-stamped per task, so moves cannot collide;
+    * files surface in the store directory but stay INVISIBLE to
+    * manifest readers until the commit that names them.
     */
   def adoptStagedNamed(path: String, stagingDir: String,
                        rels: Seq[String]): Seq[String] =

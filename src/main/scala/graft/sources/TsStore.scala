@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *   - chunk `start`/`end` bounds → parquet row-group min/max stats on `ts`
   *     (rows are range-partitioned + sorted on write so row groups carry
   *     tight bounds → data skipping ≙ the Mongo compound index)
-  *   - per-column LZ4 blob       → parquet column chunks (codec from conf)
+  *   - per-column LZ4 blob       → parquet column chunks (zstd)
   *   - metadata key/values       → ordinary columns; filters are predicates
   *
   * At 100 TB: writes shuffle once (`repartitionByRange`) producing
@@ -182,30 +182,37 @@ object TsStore {
   /** Chunked columnar write. Range-partition by (uid, ts) so each output
     * file covers a contiguous time slice of few uids (tight row-group
     * stats), sort within partitions by ts (monotonic chunks, as the
-    * reference requires of its input), then write partitioned parquet.
+    * reference requires of its input), then write partitioned parquet
+    * through the store's task writer ([[GraftBatchWrite.stage]]), whose
+    * tasks also refuse a null ts.
     *
     * Chunk geometry is PINNED, not left to cluster defaults — the
     * reference splits chunks under the 16 MB BSON document cap
     * (`serialization.py` ~L90–110) because chunk size is what makes a
     * sliced read touch little data. Here the same role is played by the
-    * parquet row group: `rowGroupBytes` (default 16 MB ≙ the BSON cap)
-    * bounds the unit of ts-slice skipping — a 128 MB default row group
-    * makes a 1-minute slice read 128 MB per file — and
-    * `maxRecordsPerFile` (default 8M rows) bounds single-file blowup so
-    * one hot series cannot produce a file whose footer/metadata stalls
-    * planning. Both are per-write options, not session mutations.
+    * parquet row group: `rowGroupBytes` (default
+    * [[GraftBatchWrite.RowGroupBytes]]) bounds the unit of ts-slice
+    * skipping, and `maxRecordsPerFile` bounds single-file blowup. Both
+    * are per-write options set on the write's own Hadoop conf, like its
+    * INT64-micros timestamps; the session conf is never touched.
+    *
+    * The path must be one a log can commit to ([[StoreLog.canLog]]).
+    * Overwrite creates a new logged store; Append commits to a logged
+    * store, or adds plain files to a directory without a log.
     */
   def write(df: DataFrame, path: String, tsCol: String = "ts",
             uidCols: Seq[String] = Seq.empty,
             mode: SaveMode = SaveMode.Overwrite,
-            codec: String = "zstd",
             overlapPolicy: OverlapPolicy = OverlapPolicy.Warn,
-            rowGroupBytes: Long = 16L << 20,
-            maxRecordsPerFile: Long = 8L << 20,
+            rowGroupBytes: Long = GraftBatchWrite.RowGroupBytes,
+            maxRecordsPerFile: Long = GraftBatchWrite.MaxRecordsPerFile,
             commitTag: Option[String] = None,
             bloomKeys: Seq[String] = Nil,
             checkpointInterval: Int = StoreLog.CheckpointInterval,
             branch: Option[String] = None): Unit = {
+    // fails here, with the log's own message, on a scheme that has no
+    // atomic publish primitive (CommitIo.forPath)
+    val logged = StoreLog.exists(path)
     // branch target: append-only onto a logged store's named branch
     // ([[TsStore.branch]]) — the write-audit-publish ingest shape. The
     // overlap guard (below) reads the MAIN view; branch-vs-branch
@@ -213,20 +220,16 @@ object TsStore {
     branch.foreach { b =>
       require(mode == SaveMode.Append,
         s"branch '$b' writes are append-only (Overwrite replaces the store)")
-      require(StoreLog.canLog(path) && StoreLog.exists(path),
-        s"branch '$b' needs a logged store at $path")
+      require(logged, s"branch '$b' needs a logged store at $path")
     }
-    if (mode == SaveMode.Overwrite && StoreLog.canLog(path) &&
-        StoreLog.exists(path))
+    if (mode == SaveMode.Overwrite && logged)
       require(StoreLog.branches(path).isEmpty,
         s"store at $path has open branch(es) " +
           s"${StoreLog.branches(path).keys.mkString(", ")} — an Overwrite " +
           "destroys the whole log; publish or drop them first")
     // write-time overlap guard (reference behavior): appending a chunk
     // whose time range intersects what's stored for the same series is
-    // almost always a double-write that silently duplicates rows. The
-    // pre-scan doubles as the null-ts validation (one job computes
-    // both), so `validate` runs separately only when the guard doesn't.
+    // almost always a double-write that silently duplicates rows.
     // NOTE each pre-write job re-executes the incoming frame's lineage —
     // callers appending from an expensive upstream pipeline should
     // .cache() it or pass OverlapPolicy.Allow.
@@ -242,25 +245,8 @@ object TsStore {
               else df
     val dfW = if (mode == SaveMode.Append) physicalFrame(dfC, physRenames(path))
               else dfC
-    val overlapChecked = mode == SaveMode.Append && uidCols.nonEmpty &&
-      overlapPolicy != OverlapPolicy.Allow
-    // Null-ts validation: the overlap pre-scan (when it runs) counts
-    // nulls in its own job. Otherwise the check rides INSIDE the write
-    // lineage as a codegen'd assert_true filter (the Constraints.guard
-    // pattern) — one pass over the input instead of a dedicated
-    // full-scan job before the write. Exception: an Overwrite onto an
-    // EXISTING logged store still pre-scans, because the overwrite
-    // deletes the log before writing and a refusal must land BEFORE
-    // that destruction, not mid-job.
-    val mustPreScan = !overlapChecked && mode == SaveMode.Overwrite &&
-      StoreLog.canLog(path) && StoreLog.exists(path)
-    if (mustPreScan)
-      require(validate(dfW, tsCol, uidCols) == 0, s"null $tsCol values — refusing write")
-    val dfV =
-      if (overlapChecked || mustPreScan) dfW
-      else dfW.filter(assert_true(col(tsCol).isNotNull,
-        lit(s"null $tsCol values — refusing write")).isNull)
-    if (overlapChecked) {
+    if (mode == SaveMode.Append && uidCols.nonEmpty &&
+        overlapPolicy != OverlapPolicy.Allow) {
       val bad = overlappingSeries(dfW.sparkSession, path, dfW, tsCol, uidCols)
       if (bad.nonEmpty) {
         val msg = s"append overlaps stored time ranges for ${bad.size} series " +
@@ -272,48 +258,53 @@ object TsStore {
         else log.warn(msg)
       }
     }
-    val rangeCols: Seq[Column] = uidCols.map(col) :+ col(tsCol)
-    val sorted = dfV.repartitionByRange(rangeCols: _*)
-      .sortWithinPartitions(rangeCols: _*)
-    // Manifest handling applies to paths whose backend has an atomic
-    // publish primitive (local, file:, HDFS-likes — CommitIo.forPath);
-    // other schemes take the plain write, and upsert/ensure on such a
-    // path fail loudly inside StoreLog instead.
+    val blooms =
+      if (bloomKeys.nonEmpty || mode == SaveMode.Overwrite || !logged) bloomKeys
+      else StoreLog.bloomColsAt(path, StoreLog.latestVersion(path).get)
+    val staged = GraftBatchWrite.stage(canonical(dfW, uidCols, tsCol), path,
+      uidCols, tsCol, blooms, maxRecordsPerFile, rowGroupBytes)
     if (mode == SaveMode.Overwrite) {
-      // an overwrite is a NEW store — a stale manifest naming deleted
-      // files must not survive it
-      if (StoreLog.canLog(path)) StoreLog.delete(path)
-      writeFiles(sorted, path, uidCols, mode, codec, rowGroupBytes,
-        maxRecordsPerFile, bloomKeys)
-      // adopt-commit the fresh store RIGHT HERE, while provenance is
-      // known: every file just written is (uid..., ts)-sorted, so the
-      // manifest records the layout-order contract (the scan's
-      // sort-elision license) plus the ts column and any bloom columns
-      // — properties later rewrites inherit or deliberately clear
-      if (StoreLog.canLog(path))
-        StoreLog.ensure(path, checkpointInterval = checkpointInterval,
-          bloomCols = bloomKeys,
-          props = Map(GraftTable.LayoutSortedProp -> "true",
-            GraftTable.TsColProp -> tsCol))
-    } else if (StoreLog.canLog(path) && StoreLog.exists(path)) {
+      // an overwrite is a NEW store. It declares the schema a parquet
+      // read of the staged files infers (partition types from directory
+      // names), or the frame's own when no row was written
+      val schema =
+        try {
+          if (staged.written.files.nonEmpty)
+            GraftTable.inferSchema(dfW.sparkSession, staged.staging,
+              staged.written.files)
+          else org.apache.spark.sql.types.StructType(
+            (dfW.schema.filterNot(f => uidCols.contains(f.name)) ++
+              uidCols.map(dfW.schema(_))).map(_.copy(nullable = true)))
+        } catch {
+          case t: Throwable => StoreLog.deleteStaging(staged.staging); throw t
+        }
+      // The old log and data go only now, with the new files staged and
+      // their schema known: a refused write (a null ts fails its task)
+      // or a failed inference leaves the old store intact
+      StoreLog.clearExcept(path, staged.staging)
+      val moved = staged.adopt()
+      // the creating commit, while provenance is known: every file just
+      // written is (uid..., ts)-sorted, so the manifest records the
+      // layout-order contract (the scan's sort-elision license) plus
+      // the ts column and any bloom columns — properties later rewrites
+      // inherit or deliberately clear
+      StoreLog.commit(path, 0L, Seq.empty, moved.files,
+        interval = Some(checkpointInterval),
+        addStats = moved.stats, addSizes = moved.sizes,
+        bloomCols = if (bloomKeys.nonEmpty) Some(bloomKeys) else None,
+        setProps = Map(GraftTable.LayoutSortedProp -> "true",
+          GraftTable.TsColProp -> tsCol, GraftTable.SchemaProp -> schema.json))
+    } else if (!logged) {
+      // a directory without a log: the files just join it
+      staged.adopt()
+    } else {
       // logged store: appended files must be NAMED by a manifest commit
-      // or manifest readers never see them. Stage to a txn-private dir,
-      // move into place (invisible until committed), publish. A pure
+      // or manifest readers never see them. Staged to a txn-private dir,
+      // moved into place (invisible until committed), published. A pure
       // file ADDITION serializes after any concurrent commit, so a CAS
       // loss always rebases onto the winner's file list.
-      val staging = txnDir(path)
-      val appendBlooms =
-        if (bloomKeys.nonEmpty) bloomKeys
-        else StoreLog.latestVersion(path)
-          .map(v => StoreLog.bloomColsAt(path, v)).getOrElse(Nil)
-      writeFiles(sorted, staging, uidCols, SaveMode.Overwrite, codec,
-        rowGroupBytes, maxRecordsPerFile, appendBlooms)
       StoreLog.withWriterLease(path) { lease =>
-        val moved =
-          try StoreLog.adoptStaged(path, staging)
-          finally StoreLog.deleteStaging(staging)
-        val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved,
-          digestCols = Some(appendBlooms))
+        val moved = staged.adopt()
         var committed = false
         var attempts = 0
         while (!committed) {
@@ -327,7 +318,7 @@ object TsStore {
           // [[Constraints.addedSince]]; the CAS totally orders us)
           val added = Constraints.addedSince(appendChecks, curProps)
           if (added.nonEmpty) {
-            StoreLog.deleteDataFiles(path, moved)
+            StoreLog.deleteDataFiles(path, moved.files)
             throw new StoreLog.CommitConflict(
               s"CHECK constraint(s) ${added.map(_.name).mkString(", ")} added " +
                 s"concurrently at $path — re-run the append")
@@ -339,11 +330,11 @@ object TsStore {
               // ([[StoreLog.commitTransform]]; the writer-side twin of
               // the stripe-lazy read on million-file stores)
               StoreLog.commitTransform(path, curV, Seq.empty,
-                removeFiles = Nil, addFiles = moved,
-                addStats = movedStats, addSizes = movedSizes,
+                removeFiles = Nil, addFiles = moved.files,
+                addStats = moved.stats, addSizes = moved.sizes,
                 tag = commitTag,
-                setProps = GraftTable.widenedSchemaProp(path, curProps, dfW.schema, moved,
-                  StoreLog.read(path, curV).files ++ moved))
+                setProps = GraftTable.widenedSchemaProp(path, curProps, dfW.schema,
+                  moved.files, StoreLog.read(path, curV).files ++ moved.files))
             else {
               // REF-AWARE base: under an active branch the tip's file
               // list may be the OTHER ref's view — resolve the target
@@ -351,14 +342,14 @@ object TsStore {
               val cur = StoreLog.read(path, curV)
               val (baseFiles, refProps, carryStats, carrySizes, dvReset) =
                 TsStore.refAppendBase(path, cur, branch)
-              StoreLog.commit(path, cur.version, Seq.empty, baseFiles ++ moved,
-                parent = Some(cur), addStats = carryStats ++ movedStats,
-                addSizes = carrySizes ++ movedSizes,
+              StoreLog.commit(path, cur.version, Seq.empty, baseFiles ++ moved.files,
+                parent = Some(cur), addStats = carryStats ++ moved.stats,
+                addSizes = carrySizes ++ moved.sizes,
                 tag = commitTag,
                 resetDvs = dvReset,
                 setProps =
-                  GraftTable.widenedSchemaProp(path, cur.props, dfW.schema, moved,
-                    (cur.files ++ baseFiles ++ moved).distinct) ++ refProps)
+                  GraftTable.widenedSchemaProp(path, cur.props, dfW.schema, moved.files,
+                    (cur.files ++ baseFiles ++ moved.files).distinct) ++ refProps)
             }
             committed = true
           } catch {
@@ -367,8 +358,16 @@ object TsStore {
           }
         }
       }
-    } else writeFiles(sorted, path, uidCols, mode, codec, rowGroupBytes,
-      maxRecordsPerFile, bloomKeys)
+    }
+  }
+
+  /** `df` range-partitioned and sorted by (uidCols..., tsCol) — the
+    * store's canonical layout, which every rewrite stages.
+    */
+  private[graft] def canonical(df: DataFrame, uidCols: Seq[String],
+                               tsCol: String): DataFrame = {
+    val rangeCols: Seq[Column] = uidCols.map(col) :+ col(tsCol)
+    df.repartitionByRange(rangeCols: _*).sortWithinPartitions(rangeCols: _*)
   }
 
   private[graft] def txnDir(path: String): String =
@@ -405,76 +404,6 @@ object TsStore {
                             renames: Map[String, String]): DataFrame =
     if (renames.isEmpty) df
     else df.select(df.columns.map(c => col(c).as(renames.getOrElse(c, c))): _*)
-
-  /** The physical parquet write (shared by the plain and the staged-txn
-    * paths). Timestamps MUST be INT64 micros, not the INT96 legacy type:
-    * INT96 columns carry NO parquet min/max statistics, which silently
-    * turns every ts-slice into a full scan (measured: the row-group-skip
-    * test reads 100% of rows under INT96). Session-conf-only in Spark,
-    * so set and restore around the write. Concurrent TsStore writes all
-    * pin the SAME value, so they overlap freely under the
-    * reference-counted pin below (last one out restores); a NON-TsStore
-    * parquet write racing on the same session during this window would
-    * still see the pinned value — acceptable (it pins the GOOD type),
-    * but restore-ordering means heavy concurrent mixed writers should
-    * use separate sessions.
-    */
-  private def writeFiles(sorted: DataFrame, path: String, uidCols: Seq[String],
-                         mode: SaveMode, codec: String,
-                         rowGroupBytes: Long, maxRecordsPerFile: Long,
-                         bloomCols: Seq[String] = Nil): Unit = {
-    // zstd default ≙ the reference's LZ4 column blobs: better ratio than
-    // snappy at similar scan speed — at 100 TB the ratio IS the IO budget.
-    var writer = sorted.write.mode(mode).option("compression", codec)
-      .option("parquet.block.size", rowGroupBytes)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-    // Per-column parquet BLOOM FILTERS (opt-in): min/max row-group stats
-    // only skip on RANGE-correlated keys — a merge key uncorrelated with
-    // the (uid, ts) sort order has full-domain bounds in every row
-    // group, so a point/IN takedown probe reads everything. A bloom
-    // answers "definitely absent" per row group regardless of ordering;
-    // Spark's parquet reader consults it for = and IN pushed predicates.
-    // A few KB per row group buys skipping the ~16 MB group — the right
-    // trade wherever keyed deletes land (see upsert's bloomKeys).
-    bloomCols.foreach { c =>
-      writer = writer.option(s"parquet.bloom.filter.enabled#$c", "true")
-    }
-    val sess = sorted.sparkSession
-    val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-    // Reference-counted conf pin instead of a lock held across the whole
-    // write job: every TsStore writer wants the SAME value (MICROS), so
-    // concurrent store writes in one session may overlap freely (guide
-    // §2.6 — a query with two independent sinks submits them from two
-    // threads and the second job's tasks back-fill the first's tail).
-    // The first entrant saves the previous value and sets MICROS; the
-    // last one out restores — sequential callers see the exact old
-    // save/restore semantics.
-    TsStore.synchronized {
-      val cur = tsPinDepth.get(sess)
-      if (cur == null) {
-        tsPinDepth.put(sess, (1, sess.conf.getOption(tsTypeKey)))
-        sess.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-      } else tsPinDepth.put(sess, (cur._1 + 1, cur._2))
-    }
-    try (if (uidCols.nonEmpty) writer.partitionBy(uidCols: _*) else writer).parquet(path)
-    finally TsStore.synchronized {
-      val (d, prev) = tsPinDepth.get(sess)
-      if (d == 1) {
-        tsPinDepth.remove(sess)
-        prev match {
-          case Some(v) => sess.conf.set(tsTypeKey, v)
-          case None    => sess.conf.unset(tsTypeKey)
-        }
-      } else tsPinDepth.put(sess, (d - 1, prev))
-    }
-  }
-
-  /** Per-session depth + saved previous value of the parquet
-    * timestamp-type pin ([[writeFiles]]); all transitions run under
-    * `TsStore.synchronized`.
-    */
-  private val tsPinDepth =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, (Int, Option[String])]()
 
   /** The MERGE read plan behind [[upsert]]: prune the stored base to the
     * partitions the delta touches, union, and keep the winning row per
@@ -567,10 +496,11 @@ object TsStore {
       .filter(col("__rn") === 1).drop("__rn", "__src")
   }
 
-  /** The O(COMMIT-FOOTPRINT) twin of [[commitWithRebase]] for
-    * PARTITION-REPLACING writes (upsert): the commit is expressed as a
-    * TRANSFORM — remove everything under the touched `prefixes`, add
-    * `moved` — so neither the base snapshot nor any rebased parent ever
+  /** The leased commit loop of the REPLACING verbs (upsert, the
+    * copy-on-write deletes, dv DML, branchless maintenance), in
+    * O(COMMIT-FOOTPRINT): the commit is expressed as a TRANSFORM —
+    * remove everything under the touched `prefixes`, add `moved` (the
+    * staged files with their task-read stats) — so neither the base snapshot nor any rebased parent ever
     * materializes (the remove set streams per attempt through
     * [[StoreLog.foldFiles]] with row-group-skipped prefixes, and the
     * conflict walk reads intervening RAW manifests: `replaced` overlap
@@ -582,7 +512,7 @@ object TsStore {
     */
   private[sources] def commitTransformWithRebase(path: String,
       lease: StoreLog.WriterLease, baseVersion: Long,
-      moved: Seq[String], replaced: Seq[String],
+      moved: GraftWriteTaskResult, replaced: Seq[String],
       removeFilesOf: Long => Seq[String],
       abortOnAppendsUnder: Boolean,
       schemaForWiden: Option[org.apache.spark.sql.types.StructType] = None,
@@ -596,11 +526,10 @@ object TsStore {
       abortOnReplaced: Boolean = true,
       tag: Option[String] = None): Long = {
     def abort(why: String): Nothing = {
-      StoreLog.deleteDataFiles(path, moved)
+      StoreLog.deleteDataFiles(path, moved.files)
       throw new StoreLog.CommitConflict(why)
     }
     def under(f: String): Boolean = replaced.exists(p => f.startsWith(p + "/"))
-    val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
     var expectedV = baseVersion
     var attempts = 0
     while (true) {
@@ -622,12 +551,13 @@ object TsStore {
       try {
         val removed = removeFilesOf(expectedV)
         return StoreLog.commitTransform(path, expectedV, replaced,
-          removed, moved,
-          addStats = movedStats, addSizes = movedSizes, addDvs = addDvs,
+          removed, moved.files,
+          addStats = moved.stats, addSizes = moved.sizes, addDvs = addDvs,
           tag = tag,
           setProps = schemaForWiden.fold(Map.empty[String, String])(sc =>
-            GraftTable.widenedSchemaProp(path, props, sc, moved,
-              StoreLog.read(path, expectedV).files.filterNot(removed.toSet) ++ moved)) ++
+            GraftTable.widenedSchemaProp(path, props, sc, moved.files,
+              StoreLog.read(path, expectedV).files.filterNot(removed.toSet) ++
+                moved.files)) ++
             extraProps)
       } catch {
         case c: StoreLog.CommitConflict =>
@@ -700,12 +630,12 @@ object TsStore {
     * other branch verb; branchless stores keep the streamed path.
     */
   private[sources] def commitMaintenanceRewrite(path: String,
-      lease: StoreLog.WriterLease, baseViewV: Long, moved: Seq[String],
+      lease: StoreLog.WriterLease, baseViewV: Long, moved: GraftWriteTaskResult,
       replaced: Seq[String], targets: Seq[String],
       extraProps: Map[String, String] = Map.empty,
       tag: Option[String] = None): Long = {
     def abort(why: String): Nothing = {
-      StoreLog.deleteDataFiles(path, moved)
+      StoreLog.deleteDataFiles(path, moved.files)
       throw new StoreLog.CommitConflict(why)
     }
     val tipV0 = StoreLog.latestVersion(path)
@@ -714,7 +644,6 @@ object TsStore {
       return commitTransformWithRebase(path, lease, baseViewV, moved,
         replaced, removeFilesOf = _ => targets,
         abortOnAppendsUnder = false, extraProps = extraProps, tag = tag)
-    val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
     val targetSet = targets.toSet
     // the deletion-vector state the rewrite MATERIALIZED (it read live
     // rows as of baseViewV) — resolved once, only if the branch path
@@ -770,7 +699,7 @@ object TsStore {
             s"($overlap of ${targets.size} files shared) — publish or " +
             "drop it first")
       }
-      val newMain = mSnap.files.filterNot(targetSet) ++ moved
+      val newMain = mSnap.files.filterNot(targetSet) ++ moved.files
       val live = newMain.toSet
       val desired = mSnap.dvs.filter { case (f, _) => live(f) }
       val inherited = cur.dvs.filter { case (f, _) => live(f) }
@@ -798,8 +727,8 @@ object TsStore {
         else (mSnap.stats, mSnap.sizes)
       val committed =
         try StoreLog.commit(path, cur.version, replaced, newMain,
-          parent = Some(cur), addStats = carryStats ++ movedStats,
-          addSizes = carrySizes ++ movedSizes, tag = tag,
+          parent = Some(cur), addStats = carryStats ++ moved.stats,
+          addSizes = carrySizes ++ moved.sizes, tag = tag,
           resetDvs = dvReset,
           setProps = extraProps ++ baseAdv +
             (StoreLog.MainRefProp -> v.toString))
@@ -813,8 +742,7 @@ object TsStore {
         }
       if (committed >= 0) {
         plans.foreach { case (b, bv, rebase) =>
-          if (rebase) rebaseBranchPin(path, lease, b, bv, targetSet, moved,
-            movedStats, movedSizes)
+          if (rebase) rebaseBranchPin(path, lease, b, bv, targetSet, moved)
         }
         return committed
       }
@@ -831,9 +759,8 @@ object TsStore {
     * gives up quietly — correctness never depends on this commit.
     */
   private def rebaseBranchPin(path: String, lease: StoreLog.WriterLease,
-      b: String, bv0: Long, targetSet: Set[String], moved: Seq[String],
-      movedStats: Map[String, FileStats.FileStatsMap],
-      movedSizes: Map[String, Long]): Unit = {
+      b: String, bv0: Long, targetSet: Set[String],
+      moved: GraftWriteTaskResult): Unit = {
     var tries = 0
     while (tries <= 20) {
       lease.renew()
@@ -842,7 +769,7 @@ object TsStore {
         .flatMap(_.toLongOption).getOrElse(return)
       if (bvNow != bv0) return
       val bSnap = if (bvNow == cur.version) cur else StoreLog.read(path, bvNow)
-      val newB = bSnap.files.filterNot(targetSet) ++ moved
+      val newB = bSnap.files.filterNot(targetSet) ++ moved.files
       val liveB = newB.toSet
       val desiredB = bSnap.dvs.filter { case (f, _) => liveB(f) }
       val inheritedB = cur.dvs.filter { case (f, _) => liveB(f) }
@@ -850,8 +777,8 @@ object TsStore {
       try {
         StoreLog.commit(path, cur.version, Seq.empty, newB,
           parent = Some(cur),
-          addStats = bSnap.stats ++ movedStats,
-          addSizes = bSnap.sizes ++ movedSizes,
+          addStats = bSnap.stats ++ moved.stats,
+          addSizes = bSnap.sizes ++ moved.sizes,
           resetDvs = dvResetB,
           setProps = Map(
             StoreLog.BranchPropPrefix + b -> (cur.version + 1).toString))
@@ -860,94 +787,6 @@ object TsStore {
         case _: StoreLog.CommitConflict => tries += 1
       }
     }
-  }
-
-  /** The leased adopt-then-commit retry scaffold shared by [[upsert]]
-    * and [[delete]]: renew the lease, try the CAS commit, and on a loss
-    * walk every intervening commit — abort (deleting the adopted files)
-    * if any makes a rebase `unsound`, otherwise retry on the winner's
-    * snapshot. `newFiles` recomputes the commit's file list from the
-    * rebased parent; `unsound(s, prevFiles)` sees each intervening
-    * snapshot with its parent's file set (so append detection works)
-    * and returns the abort reason if the rebase cannot serialize.
-    *
-    * `boundChecks` (row-ADDING paths only — upsert, DML inserts, cow
-    * UPDATE/MERGE rewrites): the CHECK constraint set the writer's
-    * per-row guard was bound against at write start. Each attempt
-    * re-reads the (rebased) parent's props and aborts if a constraint
-    * appeared since ([[Constraints.addedSince]]) — the staged rows were
-    * never validated against it, and committing them would break the
-    * whole-table invariant `ALTER ... ADD`'s existing-data scan just
-    * certified. Maintenance rewrites and pure deletes pass None: they
-    * add no rows a new constraint could reject (survivors were
-    * certified by the ADD scan itself).
-    */
-  private[sources] def commitWithRebase(path: String, lease: StoreLog.WriterLease,
-      base: StoreLog.Snapshot, moved: Seq[String], replaced: Seq[String],
-      newFiles: StoreLog.Snapshot => Seq[String],
-      unsound: (StoreLog.Snapshot, Set[String]) => Option[String],
-      setProps: StoreLog.Snapshot => Map[String, String] = _ => Map.empty,
-      addDvs: Map[String, Dv.Entry] = Map.empty,
-      boundChecks: Option[Seq[Constraints.Check]] = None): Long = {
-    def abort(why: String): Nothing = {
-      StoreLog.deleteDataFiles(path, moved)
-      throw new StoreLog.CommitConflict(why)
-    }
-    // footer-read the new files' column bounds ONCE, outside the retry
-    // loop — the commit they ride into carries the planner's index for
-    // them (see FileStats)
-    val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
-    var expected = base
-    var attempts = 0
-    var done = -1L
-    while (done < 0) {
-      lease.renew()
-      // REPLACING verbs refuse while a branch is open: every caller of
-      // this scaffold computed its rewrite against ONE view's files,
-      // and committing it would corrupt whichever ref it didn't read
-      // (the tip zig-zags between views under branching). Appends — the
-      // write-audit-publish ingest shape — have their own ref-aware
-      // loops; publish-or-drop reopens the rest.
-      if (expected.props.contains(StoreLog.MainRefProp))
-        abort(s"store at $path has an active branch " +
-          s"(${StoreLog.branches(path).keys.mkString(", ")}) — " +
-          "replacing operations refuse while a branch is open; publish " +
-          "or drop it first (appends — and branch-targeted upsert / " +
-          "deleteVectors — may still run)")
-      boundChecks.foreach { bc =>
-        val added = Constraints.addedSince(bc, expected.props)
-        if (added.nonEmpty)
-          abort(s"CHECK constraint(s) ${added.map(_.name).mkString(", ")} " +
-            s"added concurrently at $path — the staged rows were never " +
-            "validated against them; re-run the write")
-      }
-      try done = StoreLog.commit(path, expected.version, replaced,
-        newFiles(expected), parent = Some(expected), addStats = movedStats,
-        addSizes = movedSizes, setProps = setProps(expected), addDvs = addDvs)
-      catch {
-        case c: StoreLog.CommitConflict =>
-          attempts += 1
-          if (attempts > 20)
-            abort(s"gave up after $attempts commit attempts at $path: ${c.getMessage}")
-          val cur = StoreLog.latest(path).getOrElse(throw c)
-          var prevFiles = expected.files.toSet
-          ((expected.version + 1) to cur.version).foreach { v =>
-            // a concurrent vacuum may have pruned the intervening
-            // manifests out from under the walk — that is a clean
-            // conflict (adopted files cleaned up, caller re-runs),
-            // not a raw missing-manifest error
-            val snap =
-              try StoreLog.read(path, v)
-              catch { case _: IllegalArgumentException =>
-                abort(s"manifest v$v pruned by a concurrent vacuum at $path " +
-                  "— re-run against the new base") }
-            unsound(snap, prevFiles).foreach(abort)
-            prevFiles = snap.files.toSet
-          }
-          expected = cur
-      }
-    }
-    done
   }
 
   /** Partition-pruned MERGE (latest-wins upsert) into a TsStore layout —
@@ -984,9 +823,7 @@ object TsStore {
   def upsert(spark: SparkSession, path: String, delta: DataFrame,
              keyCols: Seq[String], versionCol: String,
              tsCol: String, uidCols: Seq[String],
-             codec: String = "zstd",
-             rowGroupBytes: Long = 16L << 20,
-             maxRecordsPerFile: Long = 8L << 20,
+             maxRecordsPerFile: Long = GraftBatchWrite.MaxRecordsPerFile,
              setProps: Map[String, String] = Map.empty,
              branch: Option[String] = None): Long = {
     // a renamed store's files (and upsertPlan's base read-back) carry
@@ -1043,29 +880,23 @@ object TsStore {
     val merged = upsertPlan(spark, path, pinned, keyColsW, versionColW,
       uidCols, asOf = branchPin,
       touchedOpt = Some(probe.getSeq[org.apache.spark.sql.Row](2)))
-    val staging = txnDir(path)
-    val rangeCols: Seq[Column] = uidCols.map(col) :+ col(tsCol)
     // (A localCheckpoint of `merged` before the range write was tried
     // and measured SLOWER: repartitionByRange's bounds-sampling job and
     // the write job share the merge's shuffle map stages, so the
     // apparent double compute is mostly skipped stages — the extra
     // materialization pass costs more than it saves.)
-    writeFiles(merged.repartitionByRange(rangeCols: _*)
-        .sortWithinPartitions(rangeCols: _*),
-      staging, uidCols, SaveMode.Overwrite, codec, rowGroupBytes,
-      maxRecordsPerFile, StoreLog.bloomColsAt(path, baseV))
+    val staged = GraftBatchWrite.stage(canonical(merged, uidCols, tsCol), path,
+      uidCols, tsCol, StoreLog.bloomColsAt(path, baseV), maxRecordsPerFile)
     StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStaged(path, staging)
-        finally StoreLog.deleteStaging(staging)
+      val moved = staged.adopt()
       // the touched partition DIRECTORY prefixes — the unit of replacement
       // and of writer-vs-writer conflict detection — are read off the
-      // STAGED OUTPUT's own directory names: Spark's partition-path
-      // rendering (escaping, timestamp formatting, null spelling) is the
-      // single source of truth, so a hand-built String.valueOf rendering
-      // can never silently disagree with the directories the base files
-      // actually live under (it would for e.g. timestamp uid columns).
-      val prefixes: Set[String] = moved.map { f =>
+      // STAGED OUTPUT's own directory names: the writer's partition-path
+      // rendering (Spark's escaping, timestamp formatting, null spelling)
+      // is the single source of truth, so a hand-built String.valueOf
+      // rendering can never silently disagree with the directories the
+      // base files actually live under (it would for timestamp uids).
+      val prefixes: Set[String] = moved.files.map { f =>
         val i = f.lastIndexOf('/')
         require(i > 0, s"staged upsert file '$f' is not under a partition directory")
         f.substring(0, i)
@@ -1123,9 +954,7 @@ object TsStore {
     */
   def delete(spark: SparkSession, path: String, pred: Column,
              tsCol: String, uidCols: Seq[String],
-             codec: String = "zstd",
-             rowGroupBytes: Long = 16L << 20,
-             maxRecordsPerFile: Long = 8L << 20,
+             maxRecordsPerFile: Long = GraftBatchWrite.MaxRecordsPerFile,
              branch: Option[String] = None): Long = {
     require(uidCols.nonEmpty, "delete needs the store's partition columns")
     val tipV = StoreLog.latestVersion(path)
@@ -1170,19 +999,10 @@ object TsStore {
     // resurrect its vectored rows (the new file carries no vector).
     val survivors = readFilesDv(spark, path, base, affected)
       .filter(!coalesce(pred, lit(false)))
-    val staging = txnDir(path)
-    val rangeCols: Seq[Column] = uidCols.map(col) :+ col(tsCol)
-    writeFiles(survivors.repartitionByRange(rangeCols: _*)
-        .sortWithinPartitions(rangeCols: _*),
-      staging, uidCols, SaveMode.Overwrite, codec, rowGroupBytes,
-      maxRecordsPerFile, base.bloomCols)
+    val staged = GraftBatchWrite.stage(canonical(survivors, uidCols, tsCol),
+      path, uidCols, tsCol, base.bloomCols, maxRecordsPerFile)
     StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStaged(path, staging)
-        finally StoreLog.deleteStaging(staging)
-      // rebase is sound unless an intervening commit REPLACED one of
-      // our partitions (our affected files may no longer be live);
-      // pure appends under them serialize after this delete cleanly
+      val moved = staged.adopt()
       // transform commit: remove exactly the affected files, add the
       // rewrites — no parent file list materializes; a concurrent
       // REPLACE of a touched partition aborts (its `replaced` record),
@@ -1401,14 +1221,15 @@ object TsStore {
             // branch-targeted takedown: the vectors land on the BRANCH
             // view only (invisible to main; exact dv reset keeps the
             // refs' states from cross-leaking on later zig-zag commits)
-            branchDmlCommit(path, lease, b, base.version, moved = Nil,
+            branchDmlCommit(path, lease, b, base.version,
+              moved = GraftWriteTaskResult.empty,
               prefixes = prefixes, removeOf = _ => Nil, addDvs = entries,
               boundChecks = None, schemaForWiden = None)
           case None =>
             // dv-only transform: no file moves, no parent file list — the
             // commit is O(changed vectors) however many files the store has
             commitTransformWithRebase(path, lease, base.version,
-              moved = Nil, replaced = prefixes,
+              moved = GraftWriteTaskResult.empty, replaced = prefixes,
               removeFilesOf = _ => Nil, abortOnAppendsUnder = false,
               addDvs = entries)
         }
@@ -1645,9 +1466,7 @@ object TsStore {
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
                  keyCols: Seq[String], deleteVersionCol: String,
                  versionCol: String, tsCol: String, uidCols: Seq[String],
-                 codec: String = "zstd",
-                 rowGroupBytes: Long = 16L << 20,
-                 maxRecordsPerFile: Long = 8L << 20): Long = {
+                 maxRecordsPerFile: Long = GraftBatchWrite.MaxRecordsPerFile): Long = {
     require(keyCols.nonEmpty, "deleteKeys needs the store's merge-key columns")
     require(uidCols.nonEmpty, "deleteKeys needs the store's partition columns")
     val baseV = StoreLog.latestVersion(path)
@@ -1704,16 +1523,10 @@ object TsStore {
       .join(broadcast(k), keyCols, "left_outer")
       .filter(col("__del_v").isNull || col(versionCol) > col("__del_v"))
       .drop("__del_v")
-    val staging = txnDir(path)
-    val rangeCols: Seq[Column] = uidCols.map(col) :+ col(tsCol)
-    writeFiles(survivors.repartitionByRange(rangeCols: _*)
-        .sortWithinPartitions(rangeCols: _*),
-      staging, uidCols, SaveMode.Overwrite, codec, rowGroupBytes,
-      maxRecordsPerFile, base.bloomCols)
+    val staged = GraftBatchWrite.stage(canonical(survivors, uidCols, tsCol),
+      path, uidCols, tsCol, base.bloomCols, maxRecordsPerFile)
     StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStaged(path, staging)
-        finally StoreLog.deleteStaging(staging)
+      val moved = staged.adopt()
       // transform commit: remove exactly the affected files, add the
       // rewrites — no parent file list materializes; a concurrent
       // REPLACE of a touched partition aborts (its `replaced` record),
@@ -1748,9 +1561,7 @@ object TsStore {
   def compactPartitions(spark: SparkSession, path: String, prefixes: Seq[String],
                         tsCol: String, uidCols: Seq[String],
                         maxFilesPerPartition: Int = 1,
-                        codec: String = "zstd",
-                        rowGroupBytes: Long = 16L << 20,
-                        maxRecordsPerFile: Long = 8L << 20): Long = {
+                        maxRecordsPerFile: Long = GraftBatchWrite.MaxRecordsPerFile): Long = {
     require(prefixes.nonEmpty, "compactPartitions needs at least one partition prefix")
     require(maxFilesPerPartition >= 1, "maxFilesPerPartition must be >= 1")
     // scoped resolution: past the lazy threshold only the TOUCHED
@@ -1783,16 +1594,10 @@ object TsStore {
     // dv-aware: compaction MATERIALIZES deletion vectors — the rewrite
     // reads only live rows and the replaced files' vectors die with them
     val rows = readFilesDv(spark, path, base, targets)
-    val staging = txnDir(path)
-    val rangeCols: Seq[Column] = uidCols.map(col) :+ col(tsCol)
-    writeFiles(rows.repartitionByRange(rangeCols: _*)
-        .sortWithinPartitions(rangeCols: _*),
-      staging, uidCols, SaveMode.Overwrite, codec, rowGroupBytes,
-      maxRecordsPerFile, base.bloomCols)
+    val staged = GraftBatchWrite.stage(canonical(rows, uidCols, tsCol),
+      path, uidCols, tsCol, base.bloomCols, maxRecordsPerFile)
     StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStaged(path, staging)
-        finally StoreLog.deleteStaging(staging)
+      val moved = staged.adopt()
       // maintenance commit: swap exactly the targets for the rewrite —
       // branchless, the streamed transform (no parent file list on any
       // attempt; an intervening REPLACE of a touched prefix aborts,
@@ -2142,9 +1947,7 @@ object TsStore {
   def zorder(spark: SparkSession, path: String, clusterCols: Seq[String],
              uidCols: Seq[String],
              buckets: Int = 256,
-             codec: String = "zstd",
-             rowGroupBytes: Long = 16L << 20,
-             maxRecordsPerFile: Long = 8L << 20,
+             maxRecordsPerFile: Long = GraftBatchWrite.MaxRecordsPerFile,
              numChunks: Int = 0,
              scope: Seq[String] = Nil,
              incremental: Boolean = false): Long = {
@@ -2243,11 +2046,9 @@ object TsStore {
     val z = graft.functions.ZOrder.zValue(bs, clusterCols)
     // Explicit partition count (AQE would coalesce a default-count range
     // exchange, collapsing locality into giant tasks), and the sort key
-    // leads with the PARTITION columns: the dynamic-partition writer's
-    // required ordering is then already satisfied, so it inserts no
-    // re-sort of its own — a partition-cols-only re-sort is not stable
-    // and would scramble the z runs inside each output file. The count
-    // is footer-only on parquet (no data pages).
+    // leads with the PARTITION columns: the task writer opens one file
+    // per run of a partition directory, so each file holds one z-sorted
+    // run. The count is footer-only on parquet (no data pages).
     val n =
       if (numChunks > 0) numChunks
       else {
@@ -2270,13 +2071,11 @@ object TsStore {
         .sortWithinPartitions(keys: _*)
         .drop("__z")
     }
-    val staging = txnDir(path)
-    writeFiles(clustered, staging, uidCols, SaveMode.Overwrite, codec,
-      rowGroupBytes, maxRecordsPerFile, base.bloomCols)
+    // no ts column to guard: stored rows passed that check at their write
+    val staged = GraftBatchWrite.stage(clustered, path, uidCols, tsCol = "",
+      base.bloomCols, maxRecordsPerFile)
     StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStaged(path, staging)
-        finally StoreLog.deleteStaging(staging)
+      val moved = staged.adopt()
       // transform commit: swap exactly the targets for the clustered
       // rewrite — O(rewrite footprint) on every attempt, no parent file
       // list. Conflict rules unchanged: an intervening commit REPLACING
@@ -2844,16 +2643,15 @@ object TsStore {
     * published era finds the conflict in this commit's own record.
     */
   private def branchDmlCommit(path: String, lease: StoreLog.WriterLease,
-      b: String, bv0: Long, moved: Seq[String], prefixes: Seq[String],
+      b: String, bv0: Long, moved: GraftWriteTaskResult, prefixes: Seq[String],
       removeOf: StoreLog.Snapshot => Seq[String],
       addDvs: Map[String, Dv.Entry],
       boundChecks: Option[Seq[Constraints.Check]],
       schemaForWiden: Option[org.apache.spark.sql.types.StructType]): Long = {
     def abort(why: String): Nothing = {
-      StoreLog.deleteDataFiles(path, moved)
+      StoreLog.deleteDataFiles(path, moved.files)
       throw new StoreLog.CommitConflict(why)
     }
-    val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
     var attempts = 0
     while (true) {
       lease.renew()
@@ -2876,7 +2674,7 @@ object TsStore {
           "operation read its view — re-run against the new branch head")
       val bSnap = if (bvNow == cur.version) cur else StoreLog.read(path, bvNow)
       val rm = removeOf(bSnap).toSet
-      val newFiles = bSnap.files.filterNot(rm) ++ moved
+      val newFiles = bSnap.files.filterNot(rm) ++ moved.files
       val live = newFiles.toSet
       val desired = (bSnap.dvs ++ addDvs).filter { case (f, _) => live(f) }
       val inherited = (cur.dvs ++ addDvs).filter { case (f, _) => live(f) }
@@ -2888,11 +2686,11 @@ object TsStore {
       try {
         return StoreLog.commit(path, cur.version, prefixes.sorted, newFiles,
           parent = Some(cur),
-          addStats = carryStats ++ movedStats,
-          addSizes = carrySizes ++ movedSizes,
+          addStats = carryStats ++ moved.stats,
+          addSizes = carrySizes ++ moved.sizes,
           addDvs = addDvs, resetDvs = dvReset,
           setProps = schemaForWiden.fold(Map.empty[String, String])(sc =>
-            GraftTable.widenedSchemaProp(path, cur.props, sc, moved,
+            GraftTable.widenedSchemaProp(path, cur.props, sc, moved.files,
               (cur.files ++ newFiles).distinct)) +
             (StoreLog.BranchPropPrefix + b -> (cur.version + 1).toString) +
             // branch activity: advance the age-expiry touch stamp

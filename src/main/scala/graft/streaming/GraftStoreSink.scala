@@ -14,7 +14,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{CommitIo, FileStats, GraftBatchWrite, GraftDataWriter, GraftHashedDataWriter, GraftSerializableConf, GraftWriteTaskResult, StoreLog, TsStore}
+import graft.sources.{CommitIo, FileStats, GraftBatchWrite, GraftDataWriter, GraftHashedDataWriter, GraftSerializableConf, GraftWriteTaskResult, Staged, StoreLog, TsStore}
 
 /** The store as a NATIVE DSv2 streaming sink — `writeStream
   * .format("graft-store")` lands micro-batches as manifest-committed
@@ -180,7 +180,7 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
     StoreLog.ensure(path,
       checkpointInterval.getOrElse(StoreLog.CheckpointInterval))
     val (factory, conf, maxRecords) =
-      GraftBatchWrite.parquetSetup(spark, path, writeSchema, uids)
+      GraftBatchWrite.storeSetup(spark, path, writeSchema, uids)
     val stagingBase = TsStore.txnDir(path)
     new StreamingWrite {
       // CHECK constraints gate the stream the same way they gate batch
@@ -217,17 +217,12 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
           StoreLog.deleteStaging(staging) // re-delivered epoch: drop dup rows
           return
         }
-        // only the committed attempts' named files (see GraftBatchWrite)
-        val named = messages.toSeq.collect {
-          case GraftWriteTaskResult(fs) => fs }.flatten
+        val staged = Staged(path, staging, GraftWriteTaskResult.of(messages.toSeq))
         var movedAny = false
         StoreLog.withWriterLease(path) { lease =>
-          val moved =
-            try StoreLog.adoptStagedNamed(path, staging, named)
-            finally StoreLog.deleteStaging(staging)
-          movedAny = moved.nonEmpty
-          if (moved.nonEmpty) {
-            val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
+          val moved = staged.adopt()
+          movedAny = moved.files.nonEmpty
+          if (moved.files.nonEmpty) {
             var committed = false
             var attempts = 0
             while (!committed) {
@@ -241,7 +236,7 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
               val addedChecks = graft.sources.Constraints
                 .addedSince(epochBound, curProps)
               if (addedChecks.nonEmpty) {
-                StoreLog.deleteDataFiles(path, moved)
+                StoreLog.deleteDataFiles(path, moved.files)
                 throw new StoreLog.CommitConflict(
                   s"CHECK constraint(s) ${addedChecks.map(_.name).mkString(", ")} " +
                     s"added concurrently at $path — epoch $epochId aborted")
@@ -252,7 +247,7 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
               // head's files and advances the branch pin in its commit)
               // and take the O(commit) transform path when branchless
               if (replaceAll && curProps.contains(StoreLog.MainRefProp)) {
-                StoreLog.deleteDataFiles(path, moved)
+                StoreLog.deleteDataFiles(path, moved.files)
                 throw new IllegalStateException(
                   s"store at $path has open branch(es) — Complete-mode " +
                     "epochs replace the store and refuse while a branch " +
@@ -262,12 +257,12 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
                 if (!replaceAll && branch.isEmpty &&
                     !curProps.contains(StoreLog.MainRefProp))
                   StoreLog.commitTransform(path, curV, Seq.empty,
-                    removeFiles = Nil, addFiles = moved,
-                    addStats = movedStats, addSizes = movedSizes,
+                    removeFiles = Nil, addFiles = moved.files,
+                    addStats = moved.stats, addSizes = moved.sizes,
                     tag = Some(tag),
                     setProps = graft.sources.GraftTable
-                      .widenedSchemaProp(path, curProps, writeSchema, moved,
-                        StoreLog.read(path, curV).files ++ moved) +
+                      .widenedSchemaProp(path, curProps, writeSchema, moved.files,
+                        StoreLog.read(path, curV).files ++ moved.files) +
                       (graft.sources.GraftTable.LayoutSortedProp -> "false"))
                 else {
                   val cur = StoreLog.read(path, curV)
@@ -280,18 +275,18 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
                     else TsStore.refAppendBase(path, cur, branch)
                   val (replaced, files) =
                     if (replaceAll)
-                      ((cur.files ++ moved).map { f =>
+                      ((cur.files ++ moved.files).map { f =>
                         val i = f.lastIndexOf('/')
                         if (i > 0) f.substring(0, i) else f
-                      }.distinct.sorted, moved)
-                    else (Seq.empty[String], baseFiles ++ moved)
+                      }.distinct.sorted, moved.files)
+                    else (Seq.empty[String], baseFiles ++ moved.files)
                   StoreLog.commit(path, cur.version, replaced, files,
-                    parent = Some(cur), addStats = carryStats ++ movedStats,
-                    addSizes = carrySizes ++ movedSizes,
+                    parent = Some(cur), addStats = carryStats ++ moved.stats,
+                    addSizes = carrySizes ++ moved.sizes,
                     resetDvs = dvReset,
                     tag = if (replaceAll) None else Some(tag),
                     setProps = graft.sources.GraftTable
-                      .widenedSchemaProp(path, cur.props, writeSchema, moved,
+                      .widenedSchemaProp(path, cur.props, writeSchema, moved.files,
                         (if (replaceAll) files else cur.files ++ files).distinct) ++
                       refProps +
                       // the hashed epoch writer lands rows in ARRIVAL
@@ -306,7 +301,7 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
                   // the CAS — re-check the tag before retrying, and
                   // drop our now-redundant files if it landed
                   if (!replaceAll && StoreLog.findTag(path, tag).isDefined) {
-                    StoreLog.deleteDataFiles(path, moved)
+                    StoreLog.deleteDataFiles(path, moved.files)
                     movedAny = false
                     committed = true
                   } else {
@@ -344,9 +339,12 @@ private[streaming] class GraftStreamingUpsertWrite(path: String,
   override def toStreaming: StreamingWrite = {
     val spark = SparkSession.active
     checkpointInterval.foreach(i => StoreLog.ensure(path, i))
-    // staging is a flat row spill: ALL columns are data columns
-    val (factory, conf, maxRecords) =
-      GraftBatchWrite.parquetSetup(spark, path, writeSchema, Seq.empty)
+    // staging is a flat row spill, read back under the declared names
+    // and thrown away after the epoch: ALL columns are data columns, no
+    // blooms (so the tasks compute no key digests)
+    val (factory, conf) = GraftBatchWrite.parquetSetup(spark, writeSchema,
+      Nil, GraftBatchWrite.RowGroupBytes)
+    val maxRecords = GraftBatchWrite.sessionMaxRecords(spark)
     val stagingBase = TsStore.txnDir(path)
     new StreamingWrite {
       override def createStreamingWriterFactory(
@@ -361,8 +359,7 @@ private[streaming] class GraftStreamingUpsertWrite(path: String,
         // read ONLY the committed attempts' named files — the staging
         // dir may hold failed/speculative attempts' torn or duplicate
         // spill files (see GraftBatchWrite)
-        val named = messages.toSeq.collect {
-          case GraftWriteTaskResult(fs) => fs }.flatten
+        val named = GraftWriteTaskResult.of(messages.toSeq).files
         try {
           if (named.nonEmpty) {
             val batch = spark.read.schema(writeSchema)

@@ -34,7 +34,7 @@ class DvSpec extends AnyFunSuite {
       Files.createDirectories(to.getParent)
       Files.copy(java.nio.file.Paths.get(src, f), to)
     }
-    val (st, sz) = graft.sources.FileStats.forFilesWithSizes(dir, files)
+    val (st, sz) = graft.sources.FileStats.forFilesWithSizes(dir, files, Nil)
     StoreLog.commit(dir, 0L, Seq.empty, files, addStats = st, addSizes = sz)
     assert(!StoreLog.latest(dir).get.props.contains(graft.sources.GraftTable.SchemaProp))
     dir

@@ -536,7 +536,8 @@ class StoreLogSpec extends AnyFunSuite {
       staging.resolve("event_type=purchase/part-racewriter.c000.zstd.parquet"))
     val chunkRows = spark.read.parquet(s"$dir/$donor").count()
     val committed = StoreLog.withWriterLease(dir) { _ =>
-      val moved = StoreLog.adoptStaged(dir, staging.toString)
+      val moved = StoreLog.adoptStagedNamed(dir, staging.toString,
+        Seq("event_type=purchase/part-racewriter.c000.zstd.parquet"))
       assert(moved.nonEmpty)
       // RACE POINT: vacuum runs while the writer sits between adopt and
       // commit. It must take the aged garbage and spare the adoption.

@@ -48,9 +48,9 @@ class TsStoreSpec extends AnyFunSuite {
       (2L, Some(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")), 2.0))
       .toDF("event_id", "ts", "value")
     val dir = Files.createTempDirectory("graft_bad").toString
-    // the validation rides INSIDE the write lineage (assert_true guard —
-    // one pass over the input, not a dedicated pre-scan job), so the
-    // refusal surfaces as a Spark task failure wrapping the message
+    // the store's task writer refuses the null ts (one pass over the
+    // input, not a dedicated pre-scan job), so the refusal surfaces as
+    // a Spark task failure wrapping the message
     val e = intercept[Throwable] {
       TsStore.write(bad, dir, tsCol = "ts")
     }
@@ -72,10 +72,15 @@ class TsStoreSpec extends AnyFunSuite {
     assert(v.nonEmpty)
     val bad = Seq((1L, Option.empty[java.sql.Timestamp], 1.0))
       .toDF("event_id", "ts", "value")
-    assertThrows[IllegalArgumentException] {
+    val e = intercept[Throwable] {
       TsStore.write(bad, dir, tsCol = "ts")
     }
-    // the refusal landed before StoreLog.delete: store intact
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(e).exists(c =>
+      Option(c.getMessage).exists(_.contains("refusing write"))),
+      s"expected a null-ts refusal, got $e")
+    // the refusal landed before the old log was removed: store intact
     assert(graft.sources.StoreLog.latestVersion(dir) === v)
     assert(TsStore.load(spark, dir).count() === events.count())
   }

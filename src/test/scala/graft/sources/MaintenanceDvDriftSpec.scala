@@ -44,7 +44,8 @@ class MaintenanceDvDriftSpec extends AnyFunSuite {
     val e = intercept[StoreLog.CommitConflict] {
       StoreLog.withWriterLease(dir) { lease =>
         TsStore.commitMaintenanceRewrite(dir, lease, baseViewV = v1,
-          moved = Seq(moved), replaced = Seq("event_type=click"),
+          moved = GraftWriteTaskResult(Seq(moved), Map.empty, Map.empty),
+          replaced = Seq("event_type=click"),
           targets = clickFiles)
       }
     }
