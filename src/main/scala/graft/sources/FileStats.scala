@@ -55,7 +55,9 @@ object FileStats {
   type FileStatsMap = Map[String, ColStat]
 
   /** Cap on columns recorded per file (schema order) — bounds manifest
-    * growth on wide tables; later columns simply never prune.
+    * growth on wide tables; later columns simply never prune, except the
+    * store's time column, which a write task records wherever it sits
+    * ([[ofFile]]'s `keepCols`).
     */
   val MaxStatsCols = 24
 
@@ -73,19 +75,23 @@ object FileStats {
     * to find the footer, so the length costs no extra RPC). A column is
     * recorded only when EVERY row group carries usable stats for it;
     * `digestCols` are the file's parquet-bloom columns, which also get
-    * a key digest. The store's task writer calls this on each file it
-    * just wrote, so a commit's stats come from its own tasks; an open
-    * failure propagates.
+    * a key digest. `keepCols` are recorded even past the
+    * [[MaxStatsCols]] cap. The store's task writer calls this on each
+    * file it just wrote, passing the time column as `keepCols` (the
+    * append overlap guard reads every file's ts bounds), so a commit's
+    * stats come from its own tasks; an open failure propagates.
     */
   private[graft] def ofFile(file: String,
                             conf: org.apache.hadoop.conf.Configuration,
-                            digestCols: Set[String]): (Option[FileStatsMap], Long) = {
+                            digestCols: Set[String],
+                            keepCols: Set[String] = Set.empty)
+      : (Option[FileStatsMap], Long) = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
       .fromPath(new org.apache.hadoop.fs.Path(file), conf)
     val len = in.getLength
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
-      val fs = fromFooter(reader.getFooter, digestCols, reader)
+      val fs = fromFooter(reader.getFooter, digestCols, reader, keepCols)
       (if (fs.nonEmpty) Some(fs) else None, len)
     } finally reader.close()
   }
@@ -237,14 +243,16 @@ object FileStats {
   private def fromFooter(
       footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
       digestCols: Set[String] = Set.empty,
-      reader: org.apache.parquet.hadoop.ParquetFileReader = null): FileStatsMap = {
+      reader: org.apache.parquet.hadoop.ParquetFileReader = null,
+      keepCols: Set[String] = Set.empty): FileStatsMap = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val schema = footer.getFileMetaData.getSchema
     val blocks = footer.getBlocks.asScala.toSeq
     if (blocks.isEmpty) return Map.empty
-    // eligible TOP-LEVEL primitive fields, schema order, capped
-    val eligible: Seq[(String, String)] = schema.getFields.asScala.toSeq.flatMap { f =>
+    // eligible TOP-LEVEL primitive fields, schema order, capped (but
+    // for `keepCols`)
+    val all: Seq[(String, String)] = schema.getFields.asScala.toSeq.flatMap { f =>
       if (!f.isPrimitive) None
       else {
         val p = f.asPrimitiveType()
@@ -261,7 +269,9 @@ object FileStats {
         }
         tag.map(t => f.getName -> t)
       }
-    }.take(MaxStatsCols)
+    }
+    val eligible = all.take(MaxStatsCols) ++
+      all.drop(MaxStatsCols).filter { case (name, _) => keepCols(name) }
     eligible.flatMap { case (name, tag) =>
       // per row group: usable stats or the column is dropped for the file
       val perBlock = blocks.map { b =>
@@ -421,6 +431,21 @@ object FileStats {
     case ("tn", x: Long) => Some(("tn", x))
     case ("s", s: String) => Some(("s", s))
     case _ => None
+  }
+
+  /** A value a scan returned, as (tag, value) in the stat domain of its
+    * type — how a scanned bound compares with recorded ones. ("", v)
+    * for a type no stat records.
+    */
+  private[sources] def domainOf(v: Any): (String, Any) = v match {
+    case _: java.sql.Timestamp | _: java.time.Instant => lower("ts", v).get
+    case _: java.time.LocalDateTime => lower("tn", v).get
+    case _: java.sql.Date | _: java.time.LocalDate => lower("d", v).get
+    case _: Byte | _: Short | _: Int | _: Long => lower("i", v).get
+    case x: Float => ("f", x.toDouble)
+    case x: Double => ("f", x)
+    case x: String => ("s", x)
+    case _ => ("", v)
   }
 
   /** Conservative may-any-row-match over one file's recorded bounds,

@@ -407,8 +407,10 @@ private[graft] abstract class GraftWriterBase(staging: String,
   protected def closeOpenWriters(): Unit
 
   /** Close the files and read each one's stats off the footer just
-    * written, with digests for the bloom columns it was written with —
-    * the commit runs no footer pass of its own. A footer that does not
+    * written, with digests for the bloom columns it was written with and
+    * the time column's bounds however wide the file — the commit runs no
+    * footer pass of its own, and the append overlap guard reads the
+    * staged files' ts extents from these stats. A footer that does not
     * read back fails the task.
     */
   override def commit(): WriterCommitMessage = {
@@ -419,7 +421,8 @@ private[graft] abstract class GraftWriterBase(staging: String,
     val stats = Map.newBuilder[String, FileStats.FileStatsMap]
     val sizes = Map.newBuilder[String, Long]
     files.foreach { rel =>
-      val (fs, len) = FileStats.ofFile(s"$staging/$rel", conf, digestCols)
+      val (fs, len) = FileStats.ofFile(s"$staging/$rel", conf, digestCols,
+        keepCols = Set(tsCol))
       fs.foreach(stats += rel -> _)
       sizes += rel -> len
     }

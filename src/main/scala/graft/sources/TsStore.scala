@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,40 +37,12 @@ object TsStore {
     case object Error extends OverlapPolicy
     /** Log a warning and append anyway (the reference's default). */
     case object Warn extends OverlapPolicy
-    /** Skip the pre-scan entirely (bulk backfills that manage ranges). */
+    /** Skip the overlap check (bulk backfills that manage ranges). */
     case object Allow extends OverlapPolicy
   }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Series of the incoming frame whose [min ts, max ts] extent
-    * intersects a stored CHUNK's extent for the same uid — per-chunk
-    * (per parquet file), not the per-uid hull, so a backfill into a
-    * genuine gap between chunks is NOT flagged (matches the reference's
-    * per-chunk `(uid, start, end)` validation; a hull check would refuse
-    * every legitimate gap fill). Returns human-readable descriptions
-    * (bounded by the distinct uids in ONE write batch — driver-side
-    * metadata, not data).
-    *
-    * Also rejects null timestamps in `incoming` (one pass computes both
-    * the null count and the extents, so `write` needs no separate
-    * validation job).
-    *
-    * Scale shape: the stored side is filtered to exactly the incoming
-    * uids BEFORE aggregating — with uid as a partition column that is
-    * plan-time partition pruning, so the pre-scan touches only the
-    * affected series' files and reduces them to per-file footer stats
-    * (min/max of ts), never the full store. The Mongo analog is the
-    * `(uid, start, end)` index lookup the reference does per write.
-    */
-  /** Partition predicate over collected uid values — one definition for
-    * the overlap guard's pre-scan and [[upsertPlan]]'s base prune. A
-    * single uid column (the Bundles case) becomes one IN-list predicate:
-    * partition-prunable and O(1) plan nodes however many series the
-    * batch touches. Composite keys fall back to an OR of conjunctions,
-    * fine for the handful of series a normal batch carries. Caller
-    * guarantees `rows` non-empty.
-    */
   /** Balanced OR over disjuncts: a left-nested `reduce(_ || _)` builds a
     * Column tree as DEEP as the key count, and the ColumnNode→Expression
     * conversion recurses it — a 1000-key takedown chunk overflows the
@@ -83,6 +57,13 @@ object TsStore {
       orBalanced(a) || orBalanced(b)
     }
 
+  /** Partition predicate over collected uid values — [[upsertPlan]]'s
+    * base prune. A single uid column (the Bundles case) becomes one
+    * IN-list predicate: partition-prunable and O(1) plan nodes however
+    * many series the batch touches. Composite keys fall back to an OR
+    * of conjunctions, fine for the handful of series a normal batch
+    * carries. Caller guarantees `rows` non-empty.
+    */
   private[graft] def keyPredicate(rows: Seq[org.apache.spark.sql.Row],
                                   keyCols: Seq[String]): Column =
     if (keyCols.sizeIs == 1) col(keyCols.head).isin(rows.map(_.get(0)): _*)
@@ -108,58 +89,120 @@ object TsStore {
       keyEq && col(versionCol) <= lit(r.get(keyCols.size))
     })
 
-  def overlappingSeries(spark: SparkSession, path: String, incoming: DataFrame,
-                        tsCol: String, uidCols: Seq[String]): Seq[String] = {
-    require(uidCols.nonEmpty, "overlap check needs at least one uid column")
-    val inExt = incoming.groupBy(uidCols.map(col): _*)
-      .agg(min(col(tsCol)).as("__in_min"), max(col(tsCol)).as("__in_max"),
-        count(when(col(tsCol).isNull, lit(1))).as("__in_nulls"))
-      .collect()
-    val nulls = inExt.map(_.getAs[Long]("__in_nulls")).sum
-    require(nulls == 0, s"$nulls null $tsCol values — refusing write")
-    if (inExt.isEmpty) return Seq.empty
-    // the DSv2 face reads logged and unmanifested directories alike and
-    // names each row's store-relative file in `_file`
-    val stored =
-      try spark.read.format("graft").load(path)
-      catch { case _: org.apache.spark.sql.AnalysisException => return Seq.empty }
-    // a key value the stored column's type cannot hold (`AAPL` against
-    // a uid column inferred int) names no stored series — and compared
-    // as it is, it would fail the ANSI cast of the IN-list
-    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
-    val storedTypes = stored.schema.fields.map(f => f.name -> f.dataType).toMap
-    val keys = inExt.toSeq.filter(r => uidCols.indices.forall { i =>
-      r.get(i) == null || storedTypes.get(uidCols(i)).forall(t =>
-        Cast(Literal.create(r.get(i), incoming.schema(uidCols(i)).dataType), t,
-          Some("UTC"), EvalMode.TRY).eval() != null)
-    })
-    if (keys.isEmpty) return Seq.empty
-    val uidPred = keyPredicate(keys, uidCols)
-    // keys compare as STRINGS: partition-column type inference can read
-    // a numeric-looking string uid back as int ("123" → 123), and the
-    // driver-side map lookup must not silently miss the overlap for it.
-    // Grouping by file gives per-CHUNK extents (ts-sorted chunked
-    // writes make these tight); chunk count per uid is bounded by write
-    // cadence, and compact() collapses it.
-    val storedExt = stored.filter(uidPred)
-      .groupBy((uidCols.map(col) :+ col(GraftTable.FileColName)): _*)
-      .agg(min(col(tsCol)).as("__st_min"), max(col(tsCol)).as("__st_max"))
-      .collect()
-      .groupBy(r => uidCols.indices.map(i => String.valueOf(r.get(i))).toSeq)
-      .view.mapValues(_.map(r => (r.get(uidCols.size + 1), r.get(uidCols.size + 2))).toSeq)
-      .toMap
-    // ts may be timestamp OR long (ns ticks) — both are Comparable
-    def cmp(a: Any, b: Any) = a.asInstanceOf[Comparable[Any]].compareTo(b)
-    inExt.toSeq.flatMap { r =>
-      val key = uidCols.indices.map(i => String.valueOf(r.get(i))).toSeq
-      val inMin = r.get(uidCols.size); val inMax = r.get(uidCols.size + 1)
-      storedExt.getOrElse(key, Seq.empty).collectFirst {
-        case (stMin, stMax) if cmp(inMax, stMin) >= 0 && cmp(inMin, stMax) <= 0 =>
-          s"${uidCols.zip(key).map { case (c, v) => s"$c=$v" }.mkString(",")} " +
-            s"incoming=[$inMin, $inMax] stored-chunk=[$stMin, $stMax]"
+  /** A chunk's ts extent: (stat tag, min, max) in the tag's
+    * [[FileStats.ColStat]] domain; tag "" holds values of a type no
+    * stat records, compared as they are.
+    */
+  private type Extent = (String, Any, Any)
+
+  private def cmpExtent(tag: String, a: Any, b: Any): Int =
+    if (tag.isEmpty) a.asInstanceOf[Comparable[Any]].compareTo(b)
+    else FileStats.cmpDomain(tag, a, b)
+
+  /** Series of a staged append whose [min ts, max ts] extent intersects
+    * a stored CHUNK's extent of the same series — per chunk (per file),
+    * not the per-series hull, so a backfill into a genuine gap between
+    * chunks is NOT flagged (the reference's per-chunk `(uid, start,
+    * end)` validation, `Corintick._validate*` ~L80–100; a hull check
+    * would refuse every legitimate gap fill). A series is its partition
+    * directory, the store's file identity: both sides key by the
+    * directory each file sits in (a null uid is the
+    * `__HIVE_DEFAULT_PARTITION__` directory). Returns human-readable
+    * descriptions, one per overlapping series.
+    *
+    * A driver-side lookup over stats, the analog of the reference's
+    * `(uid, start, end)` index query: the incoming extents come from
+    * the ts stats the staged files' write tasks returned, the stored
+    * chunks' from the ts stats the MAIN view's manifest records for
+    * the files under those directories ([[StoreLog.foldFiles]] by
+    * prefix). Files the stats cannot answer are scanned, in one grouped
+    * read restricted to exactly those files ([[scanExtents]]): a file
+    * with a deletion vector (its footer bounds still cover the deleted
+    * rows), a file without a ts stat or with one of another tag
+    * (legacy, adopted or INT96 files), every file under those
+    * directories of a store without a log, and the staged files when
+    * one has no ts stat (a ts type no stat records). Otherwise no Spark
+    * job runs.
+    */
+  private[graft] def overlappingSeries(spark: SparkSession, path: String,
+      logged: Boolean, staged: Staged, tsCol: String): Seq[String] = {
+    def dirOf(f: String) = f.substring(0, math.max(f.lastIndexOf('/'), 0))
+    def tsStat(st: Option[FileStats.FileStatsMap]) = st.flatMap(_.get(tsCol))
+    val w = staged.written
+    val statExts = w.files.flatMap(f =>
+      tsStat(w.stats.get(f)).map(c => f -> (c.tag, c.min, c.max)))
+    // each incoming series' hull, in one domain
+    val incoming: Map[String, Extent] =
+      (if (statExts.size == w.files.size) statExts
+       else scanExtents(spark, staged.staging, None, w.files, tsCol))
+        .groupMapReduce(e => dirOf(e._1))(_._2) { case ((t, lo1, hi1), (_, lo2, hi2)) =>
+          (t, if (cmpExtent(t, lo1, lo2) <= 0) lo1 else lo2,
+            if (cmpExtent(t, hi1, hi2) >= 0) hi1 else hi2)
+        }
+    if (incoming.isEmpty) return Seq.empty
+    val dirs = incoming.keys.toSeq.sorted
+    val (byStat, toScan, asOf) =
+      if (logged) {
+        val v = StoreLog.mainVersionAt(path, StoreLog.latestVersion(path).get)
+        val (st, sc) = StoreLog.foldFiles(path, v, prefixes = dirs)(
+            (List.empty[(String, Extent)], List.empty[String])) { case (acc @ (st, sc), e) =>
+          incoming.get(dirOf(e.path)) match {
+            case None => acc // a deeper directory under a prefix
+            case Some(in) => tsStat(e.stats) match {
+              case Some(c) if e.dv.isEmpty && c.tag == in._1 =>
+                ((e.path -> (c.tag, c.min, c.max)) :: st, sc)
+              case _ => (st, e.path :: sc)
+            }
+          }
+        }
+        (st, sc, Some(v))
+      } else {
+        val sc = Seq.newBuilder[String]
+        dirs.foreach(d => StoreLog.foreachDataFile(s"$path/$d") { f =>
+          if (!f.contains('/')) sc += s"$d/$f"
+        })
+        (Nil, sc.result(), None)
+      }
+    val stored = (byStat ++ scanExtents(spark, path, asOf, toScan, tsCol))
+      .groupMap(e => dirOf(e._1))(_._2)
+    def show(tag: String, v: Any): Any = tag match {
+      case "ts" => DateTimeUtils.microsToInstant(v.asInstanceOf[Long])
+      case "tn" => DateTimeUtils.microsToLocalDateTime(v.asInstanceOf[Long])
+      case "d" => java.time.LocalDate.ofEpochDay(v.asInstanceOf[Long])
+      case _ => v
+    }
+    dirs.flatMap { d =>
+      val (t, inMin, inMax) = incoming(d)
+      stored.getOrElse(d, Nil).collectFirst {
+        case (`t`, stMin, stMax)
+            if cmpExtent(t, inMax, stMin) >= 0 && cmpExtent(t, inMin, stMax) <= 0 =>
+          s"${d.split('/').map(ExternalCatalogUtils.unescapePathName).mkString(",")} " +
+            s"incoming=[${show(t, inMin)}, ${show(t, inMax)}] " +
+            s"stored-chunk=[${show(t, stMin)}, ${show(t, stMax)}]"
       }
     }
   }
+
+  /** Per-file ts extents of the store-relative `files` under `root` —
+    * at version `asOf` of its log, or as listed when it has none — by
+    * one read of exactly those files through the store's scan, which
+    * subtracts deletion vectors, grouped by `_file`. A file whose rows
+    * are all deleted has no extent.
+    */
+  private def scanExtents(spark: SparkSession, root: String, asOf: Option[Long],
+                          files: Seq[String], tsCol: String): Seq[(String, Extent)] =
+    if (files.isEmpty) Nil
+    else {
+      val reader = spark.read.format("graft")
+      asOf.fold(reader)(v => reader.option("asOf", v)).load(root)
+        .filter(col(GraftTable.FileColName).isin(files: _*))
+        .groupBy(col(GraftTable.FileColName))
+        .agg(min(col(tsCol)), max(col(tsCol)))
+        .collect().toSeq.collect { case r if !r.isNullAt(1) =>
+          val (tag, lo) = FileStats.domainOf(r.get(1))
+          r.getString(0) -> (tag, lo, FileStats.domainOf(r.get(2))._2)
+        }
+    }
 
   /** Monotonicity / sanity validation analogous to the reference's
     * write-time checks (`Corintick._validate*` ~L80–100): the time column
@@ -198,7 +241,9 @@ object TsStore {
     *
     * The path must be one a log can commit to ([[StoreLog.canLog]]).
     * Overwrite creates a new logged store; Append commits to a logged
-    * store, or adds plain files to a directory without a log.
+    * store, or adds plain files to a directory without a log. An Append
+    * with uid columns is checked against the stored chunks between its
+    * stage and its commit ([[overlappingSeries]], under `overlapPolicy`).
     */
   def write(df: DataFrame, path: String, tsCol: String = "ts",
             uidCols: Seq[String] = Seq.empty,
@@ -227,12 +272,6 @@ object TsStore {
         s"store at $path has open branch(es) " +
           s"${StoreLog.branches(path).keys.mkString(", ")} — an Overwrite " +
           "destroys the whole log; publish or drop them first")
-    // write-time overlap guard (reference behavior): appending a chunk
-    // whose time range intersects what's stored for the same series is
-    // almost always a double-write that silently duplicates rows.
-    // NOTE each pre-write job re-executes the incoming frame's lineage —
-    // callers appending from an expensive upstream pipeline should
-    // .cache() it or pass OverlapPolicy.Allow.
     // a renamed store's files carry PHYSICAL names — translate an
     // appended frame's declared names before anything touches it
     // (an Overwrite REPLACES the store, declaration included, so the
@@ -245,24 +284,34 @@ object TsStore {
               else df
     val dfW = if (mode == SaveMode.Append) physicalFrame(dfC, physRenames(path))
               else dfC
+    val blooms =
+      if (bloomKeys.nonEmpty || mode == SaveMode.Overwrite || !logged) bloomKeys
+      else StoreLog.bloomColsAt(path, StoreLog.latestVersion(path).get)
+    // the incoming frame runs once, through the stage's jobs; every
+    // check after it reads the staged files' task stats
+    val staged = GraftBatchWrite.stage(canonical(dfW, uidCols, tsCol), path,
+      uidCols, tsCol, blooms, maxRecordsPerFile, rowGroupBytes)
+    // write-time overlap guard (reference behavior): appending a chunk
+    // whose time range intersects what's stored for the same series is
+    // almost always a double-write that silently duplicates rows. It
+    // checks the staged files before anything commits; a refusal drops
+    // the staging dir
     if (mode == SaveMode.Append && uidCols.nonEmpty &&
         overlapPolicy != OverlapPolicy.Allow) {
-      val bad = overlappingSeries(dfW.sparkSession, path, dfW, tsCol, uidCols)
+      val bad =
+        try overlappingSeries(dfW.sparkSession, path, logged, staged, tsCol)
+        catch { case t: Throwable => StoreLog.deleteStaging(staged.staging); throw t }
       if (bad.nonEmpty) {
         val msg = s"append overlaps stored time ranges for ${bad.size} series " +
           s"(double-write?): ${bad.take(5).mkString("; ")}" +
           (if (bad.size > 5) " …" else "")
-        if (overlapPolicy == OverlapPolicy.Error)
+        if (overlapPolicy == OverlapPolicy.Error) {
+          StoreLog.deleteStaging(staged.staging)
           throw new IllegalArgumentException(
             s"$msg — pass overlapPolicy=Warn/Allow to append anyway")
-        else log.warn(msg)
+        } else log.warn(msg)
       }
     }
-    val blooms =
-      if (bloomKeys.nonEmpty || mode == SaveMode.Overwrite || !logged) bloomKeys
-      else StoreLog.bloomColsAt(path, StoreLog.latestVersion(path).get)
-    val staged = GraftBatchWrite.stage(canonical(dfW, uidCols, tsCol), path,
-      uidCols, tsCol, blooms, maxRecordsPerFile, rowGroupBytes)
     if (mode == SaveMode.Overwrite) {
       // an overwrite is a NEW store. It declares the schema a parquet
       // read of the staged files infers (partition types from directory
@@ -414,8 +463,8 @@ object TsStore {
     * the delta row wins (MERGE's WHEN MATCHED THEN UPDATE).
     *
     * Scale shape: the collect is the delta's DISTINCT partition values —
-    * driver-side metadata bounded by touched-series count, same budget as
-    * the overlap guard's extent collect. The base scan then carries an
+    * driver-side metadata bounded by touched-series count. The base
+    * scan then carries an
     * `uid IN (...)` predicate on partition columns only, so Catalyst
     * prunes untouched partitions before any executor reads a byte: a
     * 100-series delta against a 1M-series store scans 100 series, not
