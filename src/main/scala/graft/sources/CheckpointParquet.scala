@@ -288,7 +288,7 @@ object CheckpointParquet {
       prefixes.map(p => (p + "/").getBytes("UTF-8"))
     val pStrs: Seq[String] = prefixes.map(_ + "/")
     var acc = zero
-    val reader = ParquetFileReader.open(new BytesInputFile(bytes))
+    val reader = openReader(bytes)
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema
       val columnIO = new ColumnIOFactory().getColumnIO(schema)
@@ -354,7 +354,7 @@ object CheckpointParquet {
     * stream the checkpoint).
     */
   def firstPath(bytes: Array[Byte]): Option[String] = {
-    val reader = ParquetFileReader.open(new BytesInputFile(bytes))
+    val reader = openReader(bytes)
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema
       val pages = reader.readNextRowGroup()
@@ -371,7 +371,7 @@ object CheckpointParquet {
     * decode at all (None on pre-summary checkpoints).
     */
   def summaryOf(bytes: Array[Byte]): Option[Summary] = {
-    val reader = ParquetFileReader.open(new BytesInputFile(bytes))
+    val reader = openReader(bytes)
     try {
       Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SummaryKey))
         .map { j =>
@@ -411,6 +411,20 @@ object CheckpointParquet {
     def position: Long = pos.toLong
     def position(p: Long): Unit = { pos = p.toInt }
   }
+
+  /** Checkpoint payloads carry nothing a Hadoop setting changes (snappy
+    * pages, no encryption), so every reader runs under one empty conf,
+    * as the writer does — parquet's default read options would build a
+    * fresh `Configuration` per open and parse Hadoop's XML defaults.
+    */
+  private val readConf = new org.apache.hadoop.conf.Configuration(false)
+
+  /** Options (and codec factory) are per reader: `close` releases the
+    * factory, so it cannot be shared between readers.
+    */
+  private def openReader(bytes: Array[Byte]): ParquetFileReader =
+    ParquetFileReader.open(new BytesInputFile(bytes),
+      org.apache.parquet.HadoopReadOptions.builder(readConf).build())
 
   private final class BytesInputFile(bytes: Array[Byte]) extends InputFile {
     override def getLength: Long = bytes.length.toLong

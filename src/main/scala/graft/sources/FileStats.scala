@@ -80,6 +80,11 @@ object FileStats {
     * file it just wrote, passing the time column as `keepCols` (the
     * append overlap guard reads every file's ts bounds), so a commit's
     * stats come from its own tasks; an open failure propagates.
+    *
+    * The footer (and any dictionary page) is read under `conf` itself —
+    * the caller's already-loaded conf — never under parquet's default
+    * read options, whose fresh `Configuration` parses Hadoop's XML
+    * defaults again on every open (most of a small file's read-back).
     */
   private[graft] def ofFile(file: String,
                             conf: org.apache.hadoop.conf.Configuration,
@@ -89,7 +94,8 @@ object FileStats {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
       .fromPath(new org.apache.hadoop.fs.Path(file), conf)
     val len = in.getLength
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
     try {
       val fs = fromFooter(reader.getFooter, digestCols, reader, keepCols)
       (if (fs.nonEmpty) Some(fs) else None, len)

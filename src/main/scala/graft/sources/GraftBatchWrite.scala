@@ -373,7 +373,10 @@ private[graft] abstract class GraftWriterBase(staging: String,
   private val written = Seq.newBuilder[String]
   private var fileSeq = 0
 
-  private def attemptContext(): TaskAttemptContextImpl = {
+  // one attempt context per task, shared by every file it opens (Spark's
+  // dynamic-partition writer does the same): building one copies the
+  // whole conf into a JobConf
+  private lazy val attemptContext: TaskAttemptContextImpl = {
     val attemptId = new TaskAttemptID(
       new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId), taskId.toInt)
     new TaskAttemptContextImpl(conf, attemptId)
@@ -394,7 +397,7 @@ private[graft] abstract class GraftWriterBase(staging: String,
     val rel = f"${prefix}part-$partitionId%05d-$taskUuid-$fileSeq%03d.parquet"
     fileSeq += 1
     written += rel
-    factory.newInstance(s"$staging/$rel", dataSchema, attemptContext())
+    factory.newInstance(s"$staging/$rel", dataSchema, attemptContext)
   }
 
   protected def guardTs(row: InternalRow): Unit = {
@@ -411,7 +414,10 @@ private[graft] abstract class GraftWriterBase(staging: String,
     * the time column's bounds however wide the file — the commit runs no
     * footer pass of its own, and the append overlap guard reads the
     * staged files' ts extents from these stats. A footer that does not
-    * read back fails the task.
+    * read back fails the task. The read-back runs under the write's own
+    * conf, the one the files were written with: it is loaded already,
+    * whereas parquet's default read options would parse Hadoop's XML
+    * config again for every file.
     */
   override def commit(): WriterCommitMessage = {
     closeOpenWriters()

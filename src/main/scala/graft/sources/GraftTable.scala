@@ -2399,11 +2399,19 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
     // face must not cost a row-materialization the path it replaces
     // never paid. Nested/map projections take the row path.
     val columnar = !wantsPos && fmt.supportBatch(spark, readSchema())
+    // the session conf, built once per call. ParquetFileFormat writes
+    // its requested schema into the conf it is handed and broadcasts that
+    // same object (in local mode a later build's schema would reach an
+    // earlier reader), so `readerFunc` takes this one and every further
+    // reader build a plain copy; the dv factories read only sidecars
+    // through it
+    val hadoopConf = org.apache.spark.sql.GraftShim.sessionHadoopConf(spark)
+    def readerConf() = new org.apache.hadoop.conf.Configuration(hadoopConf)
     lazy val readerFunc = fmt
       .buildReaderWithPartitionValues(spark, physData, readerPartSchema, physRequiredData,
         dataFilters,
         Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> columnar.toString),
-        org.apache.spark.sql.GraftShim.sessionHadoopConf(spark))
+        hadoopConf)
     val anyDv = plannedFiles.exists(snap.dvs.contains)
     if (!wantsPos && !anyDv) {
       // permutation from the reader's (data ++ part) layout back to the
@@ -2432,7 +2440,7 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
       val dvBatchFunc = fmt.buildReaderWithPartitionValues(spark, physData,
         readerPartSchema, dvRequired, dataFilters,
         Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "true"),
-        org.apache.spark.sql.GraftShim.sessionHadoopConf(spark))
+        readerConf())
       val idxOrdinal = requiredData.length
       val cleanPerm: Array[Int] = required.fieldNames.map(parquetOut.fieldIndex)
       // vectored batches' layout: requiredData ++ [rowIdx] ++ partitions
@@ -2442,8 +2450,7 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
       }
       new GraftDvColumnarReaderFactory(readerFunc, dvBatchFunc, idxOrdinal,
         cleanPerm, dvPerm, required,
-        new org.apache.spark.util.SerializableConfiguration(
-          org.apache.spark.sql.GraftShim.sessionHadoopConf(spark)))
+        new org.apache.spark.util.SerializableConfiguration(hadoopConf))
     } else {
       // ROW-path deletion-vectored read — only for the shapes the
       // columnar dv branch above refuses: `_pos`-requesting row-level
@@ -2459,7 +2466,7 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
       val dvFunc = fmt.buildReaderWithPartitionValues(spark, physData,
         readerPartSchema, dvRequired, dataFilters,
         Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        org.apache.spark.sql.GraftShim.sessionHadoopConf(spark))
+        readerConf())
       // the dv reader's layout: requiredData ++ [rowIdx] ++ partitions
       val idxOrdinal = requiredData.length
       val dvOut = StructType(
@@ -2482,14 +2489,13 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
               fmt.buildReaderWithPartitionValues(spark, physData, readerPartSchema,
                 physRequiredData, dataFilters,
                 Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-                org.apache.spark.sql.GraftShim.sessionHadoopConf(spark))
+                readerConf())
             else readerFunc
           val perm: Array[Int] = required.fieldNames.map(parquetOut.fieldIndex)
           GraftColumnarReaderFactory.permuteRows(base, perm, parquetOut)
         }
       new GraftDvReaderFactory(plainRow, dvFunc, idxOrdinal, dvPerm, dvOut,
-        new org.apache.spark.util.SerializableConfiguration(
-          org.apache.spark.sql.GraftShim.sessionHadoopConf(spark)),
+        new org.apache.spark.util.SerializableConfiguration(hadoopConf),
         cleanViaIdx = wantsPos)
     }
   }

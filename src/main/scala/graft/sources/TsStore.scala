@@ -894,7 +894,10 @@ object TsStore {
     // deleting base data. localCheckpoint is delta-sized. LAZY: the
     // probe below is a global aggregate — its job computes (and caches)
     // every partition of the delta, so an eager materialization pass
-    // would scan the lineage a second time for nothing.
+    // would scan the lineage a second time for nothing. That job is the
+    // pin's only consumer until it ends and cuts the lineage, so no task
+    // over the old lineage outlives it (unlike [[changes]]' pins, which
+    // AQE consumes from concurrent stages).
     val pinned = deltaW.localCheckpoint(false)
     // light base handle: version + raw props/blooms — a million-file
     // store's upsert must not materialize its snapshot just to commit
@@ -2317,13 +2320,19 @@ object TsStore {
         // the optimizer — measured ~0.9 s of driver-side PLANNING per
         // MatView refresh before the pin, plus the repeated scans. Both
         // sides are bounded by the window's commit footprint, never the
-        // store. LAZY: the first consumer's job doubles as the
-        // materialization pass. localCheckpoint (not a recomputable
+        // store. localCheckpoint (not a recomputable
         // persist) is deliberate: it truncates the lineage so the
         // 6-branch plan optimizes over two leaf nodes — on executor
-        // loss the QUERY retries, the price this site chooses.
-        val n = readTo(nf).localCheckpoint(false)
-        val o = readFrom(gf).localCheckpoint(false)
+        // loss the QUERY retries, the price this site chooses. EAGER
+        // (one job per side): AQE submits the branches' map stages over
+        // a side at once, so a lazy pin has no single first consumer —
+        // each concurrent stage's tasks carry the side's original lineage
+        // and report its plan's metrics, which the driver may have
+        // dropped by the time a later stage finishes (DAGScheduler:
+        // "Failed to update accumulator … non-existent accumulator"); an
+        // eager pin is cut before any consumer is planned.
+        val n = readTo(nf).localCheckpoint()
+        val o = readFrom(gf).localCheckpoint()
         // carried-over survivors cancel on the (key, version) pair
         val fresh = n.as("n").join(o.as("o"),
           keyEq && col(s"n.$versionCol") <=> col(s"o.$versionCol"), "left_anti")
