@@ -11,7 +11,12 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * aggregates `graft_minhash_sig`/`graft_simhash`
   * ([[graft.functions.expressions.SigAggs]]), plus the `graft_asof`
   * table-valued function ([[graft.plans.AsofTvf]]) so the as-of join's
-  * custom exec is reachable from plain SQL.
+  * custom exec is reachable from plain SQL, and two planner strategies:
+  * the as-of join's ([[graft.plans.AsofJoinStrategy]]) and
+  * [[graft.plans.ScanFilterParamStrategy]], which plans a store scan's
+  * residual filter with its constants as codegen references, so sliced
+  * reads compile once per plan shape. A session without the extensions
+  * plans store scans as Spark does.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -24,6 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectTableFunction(graft.plans.StoreChangesTvf.registration)
     ext.injectOptimizerRule(_ => graft.plans.RewriteSelfDotToNormSq)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    ext.injectPlannerStrategy(s => graft.plans.ScanFilterParamStrategy(s))
   }
 }
 

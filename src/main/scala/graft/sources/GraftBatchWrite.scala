@@ -3,6 +3,7 @@ package graft.sources
 import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import scala.jdk.CollectionConverters._
@@ -374,8 +375,8 @@ private[graft] abstract class GraftWriterBase(staging: String,
   private var fileSeq = 0
 
   // one attempt context per task, shared by every file it opens (Spark's
-  // dynamic-partition writer does the same): building one copies the
-  // whole conf into a JobConf
+  // dynamic-partition writer does the same); it takes the task's
+  // deserialized JobConf (GraftSerializableConf) without a copy
   private lazy val attemptContext: TaskAttemptContextImpl = {
     val attemptId = new TaskAttemptID(
       new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId), taskId.toInt)
@@ -522,7 +523,9 @@ private[graft] class GraftHashedDataWriter(staging: String,
 }
 
 /** Minimal serializable Hadoop-Configuration carrier (the Spark-internal
-  * one is `private[spark]`).
+  * one is `private[spark]`). It deserializes into a `JobConf`, which a
+  * task's `TaskAttemptContextImpl` takes as is; it copies any other
+  * conf whole.
   */
 private[graft] class GraftSerializableConf(@transient var value: Configuration)
   extends Serializable {
@@ -534,7 +537,7 @@ private[graft] class GraftSerializableConf(@transient var value: Configuration)
   @throws(classOf[IOException])
   private def readObject(in: ObjectInputStream): Unit = {
     in.defaultReadObject()
-    value = new Configuration(false)
+    value = new JobConf(false)
     value.readFields(in)
   }
 }

@@ -3014,11 +3014,12 @@ object TsStore {
       meta.map { case (c, v) => col(c) === lit(v) }
     // the same predicates prune FILES in the scan via the manifest's
     // recorded bounds (a ts-slice on a many-file store opens only
-    // time-overlapping files) and then filter ROWS on what remains
-    var df = load(spark, path, asOf)
-    preds.foreach(p => df = df.filter(p))
-    if (columns.nonEmpty) df = df.select(columns.map(col): _*)
-    df
+    // time-overlapping files) and then filter ROWS on what remains;
+    // one filter over their conjunction analyzes once, and optimizes to
+    // the plan one filter per predicate would
+    val stored = load(spark, path, asOf)
+    val df = preds.reduceOption(_ && _).fold(stored)(stored.filter)
+    if (columns.nonEmpty) df.select(columns.map(col): _*) else df
   }
 
   /** Catalog listing ≙ `Corintick.list_uids` (Mongo $group aggregation):

@@ -189,4 +189,22 @@ class WritePathSpec extends AnyFunSuite {
       assert(back.count() === 0L)
     }
   }
+
+  test("a task's deserialized write conf is a JobConf its attempt context takes as is") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val conf = new Configuration(false)
+    conf.set("graft.test.key", "v")
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(new sources.GraftSerializableConf(conf)); out.close()
+    val back = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+      .readObject().asInstanceOf[sources.GraftSerializableConf].value
+    assert(back.isInstanceOf[org.apache.hadoop.mapred.JobConf])
+    assert(back.get("graft.test.key") === "v")
+    assert(back.size() === conf.size())
+    val id = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
+    assert(new TaskAttemptContextImpl(back, id).getConfiguration eq back)
+  }
 }

@@ -3,6 +3,7 @@
 
     python3 tools/jfrtop.py REC.jfr [--thread PREFIX] [--root FRAME]
                             [--during FRAME] [--match TEXT] [--top N]
+                            [--callers FRAME]
 
 Reads the recording's `jdk.ExecutionSample` events through the JDK's `jfr`
 tool and prints, for each frame (`package.Class.method`), the number and
@@ -22,6 +23,11 @@ share of samples whose stack holds it at least once: its inclusive share.
                    around the waits)
   --match TEXT     print only frames whose name contains TEXT
   --top N          print the N frames with the most samples (default 40)
+  --callers FRAME  instead of frame shares, print for the kept samples that
+                   hold FRAME, per thread (digits in its name read as N),
+                   how many samples each chain of FRAME's nearest callers
+                   accounts for; Guava cache, Scala closure and lambda
+                   frames between them are skipped
 
 A frame argument matches a frame name exactly or as its suffix, so
 `FileStats.ofFile` names `graft.sources.FileStats$.ofFile`'s frame once
@@ -40,6 +46,16 @@ build's own JVM is not recorded, then run with JAVA_TOOL_OPTIONS set, e.g.
 The file name must be absolute (the benchmark JVM runs in a scratch
 directory), and the default stack depth of 64 cuts deep Spark stacks
 before their root frames, hence `stackdepth`.
+
+Telling apart who calls a frame, e.g. the driver's and the tasks' Janino
+compiles of a `tick_read` run:
+
+    python3 tools/jfrtop.py /tmp/read.jfr --during graftbench.Workloads.loop \\
+        --callers CodeGenerator.compile
+
+prints each thread's caller chains of `CodeGenerator.compile`, nearest
+first: `WholeStageCodegenExec.doExecute` on `main`, the codegen
+evaluator factory's `eval` on the executor task threads.
 """
 import argparse
 import collections
@@ -63,6 +79,23 @@ def is_lambda(f):
 
 def matches(name, frame):
     return name == frame or name.endswith("." + frame)
+
+
+# frames between a callee and the caller that asked for it: a Guava cache
+# load (Spark shades Guava), Scala closures and JDK functional plumbing
+PLUMBING = re.compile(r"\.guava\.cache\.|\.common\.cache\.|anonfun|liftedTree|"
+                      r"^scala\.runtime\.|^scala\.Function|^scala\.util\.Try\.|"
+                      r"^java\.util\.function\.")
+CALLER_DEPTH = 3
+
+
+def callers(frames, frame):
+    """The nearest non-plumbing callers of FRAME's outermost occurrence."""
+    idx = [i for i, f in enumerate(frames) if matches(f, frame)]
+    if not idx:
+        return None
+    out = [f for f in frames[idx[-1] + 1:] if not PLUMBING.search(f)]
+    return " < ".join(out[:CALLER_DEPTH]) or "(root)"
 
 
 def samples(path):
@@ -93,6 +126,7 @@ def main(argv):
     ap.add_argument("--during")
     ap.add_argument("--match")
     ap.add_argument("--top", type=int, default=40)
+    ap.add_argument("--callers")
     a = ap.parse_args(argv[1:])
 
     recs = list(samples(a.recording))
@@ -103,10 +137,12 @@ def main(argv):
         if not ts:
             sys.exit(f"no main-thread sample holds {a.during}")
         lo, hi = min(ts), max(ts)
-    kept = [fr for t, th, fr in recs if th.startswith(a.thread) and lo <= t <= hi]
+    kept = [(th, fr) for t, th, fr in recs if th.startswith(a.thread) and lo <= t <= hi]
+    if a.callers:
+        return print_callers(kept, a.callers, a.top)
     counts = collections.Counter()
     under = 0
-    for fr in kept:
+    for _, fr in kept:
         if a.root:
             idx = [i for i, f in enumerate(fr) if matches(f, a.root)]
             if not idx:
@@ -124,6 +160,21 @@ def main(argv):
     for n, f in sorted(rows, key=lambda r: (-r[0], r[1]))[:a.top]:
         print(f"{n:8d} {100.0 * n / total:6.1f}%  {f}")
     return 0
+
+
+def print_callers(kept, frame, top):
+    by_thread = collections.defaultdict(collections.Counter)
+    for thread, fr in kept:
+        chain = callers(fr, frame)
+        if chain is not None:
+            by_thread[re.sub(r"\d+", "N", thread)][chain] += 1
+    held = sum(sum(c.values()) for c in by_thread.values())
+    print(f"{held} of {len(kept)} samples hold {frame}")
+    for thread, chains in sorted(by_thread.items(), key=lambda kv: -sum(kv[1].values())):
+        print(f"{sum(chains.values()):8d}  {thread}")
+        for chain, n in chains.most_common(top):
+            print(f"{n:8d}    {chain}")
+    return 0 if held else 1
 
 
 if __name__ == "__main__":
