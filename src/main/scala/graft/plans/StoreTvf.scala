@@ -55,8 +55,8 @@ object StoreTvf {
         longArg(value, "asOf")
       case e => longArg(e, "asOf")
     }
-    // A LOGGED store returns the DSv2 relation — the same GraftTable
-    // the catalog serves — so the SQL TVF read gets everything the
+    // The TVF returns the DSv2 relation — the same GraftTable the
+    // catalog serves — so the SQL read gets everything the
     // DSv2 face carries: manifest-stat file pruning, aggregate/limit
     // pushdown, columnar deletion-vector reads, renamed-column
     // translation, and (under the opt-in) the storage-partitioned /
@@ -65,20 +65,15 @@ object StoreTvf {
     // version here: a live read resolves the manifest when the
     // statement is parsed (a SQL VIEW over graft_store('p') pins
     // whatever version was live at definition); `asOf => v` is
-    // immutable by construction. An unlogged directory keeps the
-    // plain parquet read (no manifest, nothing to pin).
-    val spark = SparkSession.active
-    if (graft.sources.StoreLog.canLog(path)) {
-      // MAIN-ref resolved (a live read under an open branch pins what
-      // main readers see, never the staged view) and raw-probed (no
-      // full snapshot resolution just to learn the version number)
-      val pinned = asOf.orElse(graft.sources.StoreLog.mainVersion(path))
-      val reader = spark.read.format("graft")
-      pinned.foreach(v => reader.option("asOf", v))
-      reader.load(path).queryExecution.logical
-    } else
-      graft.sources.TsStore.load(spark, path, asOf = asOf)
-        .queryExecution.logical
+    // immutable by construction (a directory without a log reads
+    // through the provider's listing snapshot: nothing to pin). The
+    // pin is MAIN-ref resolved (a live read under an open branch pins
+    // what main readers see, never the staged view) and raw-probed (no
+    // full snapshot resolution just to learn the version number)
+    val pinned = asOf.orElse(graft.sources.StoreLog.mainVersion(path))
+    val reader = SparkSession.active.read.format("graft")
+    pinned.foreach(v => reader.option("asOf", v))
+    reader.load(path).queryExecution.logical
   }
 
   /** Registration triple for `SparkSessionExtensions.injectTableFunction`. */

@@ -20,7 +20,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Series metadata travels as ordinary columns (so it is filterable by
   * predicate pushdown); the uid is a partition column (`__uid`), giving
   * the `(uid, start, end)`-index behavior via partition pruning +
-  * row-group stats.
+  * row-group stats. A collection is a manifest-logged [[TsStore]] from
+  * its first write; a collection directory written before that is
+  * adopted by its first write or maintenance verb ([[StoreLog.ensure]]).
   */
 class Bundles(spark: SparkSession, basePath: String,
               defaultCollection: String = "default") {
@@ -34,11 +36,9 @@ class Bundles(spark: SparkSession, basePath: String,
     * `allowNewColumns = true` opts into the reference's dynamic-schema
     * behavior (chunks of one series may carry different column sets;
     * SURVEY §1.1): the append-time schema-drift guard is relaxed to a
-    * type-compatibility check on the SHARED columns only. Reads of a
-    * logged collection carry the union its declaration holds; reads of
-    * an unlogged one reassemble it when the session sets
-    * `spark.sql.parquet.mergeSchema` (absent columns come back null —
-    * the NaN analog).
+    * type-compatibility check on the SHARED columns only. Reads carry
+    * the union the collection's declared schema holds (absent columns
+    * come back null — the NaN analog).
     */
   def write(uid: String, df: DataFrame, collection: String = defaultCollection,
             tsCol: String = "ts",
@@ -66,45 +66,25 @@ class Bundles(spark: SparkSession, basePath: String,
     // collection would silently produce per-file schema drift; fail fast
     // unless the caller opted into dynamic schemas — then only verify the
     // SHARED columns agree on type (a silent type conflict would fail
-    // far away, at merge-read time, with an opaque error).
+    // far away, at merge-read time, with an opaque error). The
+    // collection's schema is its declaration: the union of its chunks,
+    // O(1) to read (a directory without a log reads one footer).
     if (mode == SaveMode.Append) {
       try {
-        // A logged collection's schema is its declaration: the union
-        // of its chunks, O(1) to read. An unlogged one reads ONE
-        // footer, which for uniform collections (the common case) is
-        // representative — the guard itself keeps every chunk's schema
-        // identical. The fast path only ACCEPTS a chunk whose schema
-        // exactly matches that footer's (such an append can never
-        // introduce new drift or type conflicts); any disagreement, and
-        // every dynamic-schema append, falls through to the check
-        // against the union of all footers.
-        val d = dir(collection)
-        val sampled = TsStore.load(spark, d).schema
-        def unionSchema =
-          if (StoreLog.canLog(d) && StoreLog.exists(d)) sampled
-          else spark.read.option("mergeSchema", true).parquet(d).schema
+        val existing = TsStore.load(spark, dir(collection)).schema
         val incoming = tagged.schema
-        def check(existing: org.apache.spark.sql.types.StructType): Boolean = {
-          if (!allowNewColumns &&
-              existing.fieldNames.toSet != incoming.fieldNames.toSet) return false
-          val exTypes = existing.fields.map(f => f.name -> f.dataType).toMap
-          incoming.fields.forall(f => exTypes.get(f.name).forall(_ == f.dataType))
+        if (!allowNewColumns) {
+          require(existing.fieldNames.toSet == incoming.fieldNames.toSet,
+            s"schema drift on append to '$collection': existing=${existing.fieldNames.sorted
+              .mkString(",")} incoming=${incoming.fieldNames.sorted.mkString(",")} " +
+              "(pass allowNewColumns = true for dynamic-schema collections)")
         }
-        if (allowNewColumns || !check(sampled)) {
-          val merged = unionSchema
-          if (!allowNewColumns) {
-            require(merged.fieldNames.toSet == incoming.fieldNames.toSet,
-              s"schema drift on append to '$collection': existing=${merged.fieldNames.sorted
-                .mkString(",")} incoming=${incoming.fieldNames.sorted.mkString(",")} " +
-                "(pass allowNewColumns = true for dynamic-schema collections)")
-          }
-          val exTypes = merged.fields.map(f => f.name -> f.dataType).toMap
-          incoming.fields.foreach { f =>
-            exTypes.get(f.name).foreach { t =>
-              require(t == f.dataType,
-                s"type conflict on append to '$collection': column '${f.name}' " +
-                  s"is $t in the collection but ${f.dataType} in the chunk")
-            }
+        val exTypes = existing.fields.map(f => f.name -> f.dataType).toMap
+        incoming.fields.foreach { f =>
+          exTypes.get(f.name).foreach { t =>
+            require(t == f.dataType,
+              s"type conflict on append to '$collection': column '${f.name}' " +
+                s"is $t in the collection but ${f.dataType} in the chunk")
           }
         }
       } catch { case _: org.apache.spark.sql.AnalysisException => () /* first write */ }
@@ -228,7 +208,9 @@ class Bundles(spark: SparkSession, basePath: String,
       tsCol = tsCol, columns = cols, asOf = Some(version))
   }
 
-  /** Committed manifest versions of a collection (empty if unlogged). */
+  /** Committed manifest versions of a collection (empty before its
+    * first write).
+    */
   def versions(collection: String = defaultCollection): Seq[Long] =
     TsStore.versions(dir(collection))
 
@@ -359,50 +341,40 @@ class Bundles(spark: SparkSession, basePath: String,
     TsStore.listSeries(TsStore.load(spark, dir(collection)), UidCol, tsCol)
 
   /** Delete one named series (≙ the reference's per-uid document
-    * delete). On an UNLOGGED collection the uid-partitioned layout makes
-    * this a metadata-cheap directory drop — no rewrite of other series'
-    * files. On a LOGGED collection (any upsert/ingest makes it logged) a
-    * raw directory delete would BRICK the collection: the live manifest
-    * still names the deleted files, so every manifest-aware read fails
-    * with missing paths. There the deletion is a manifest COMMIT (same
-    * CAS loop as the append path) that removes the partition's files
-    * from the live list — the data files stay on disk for time travel
-    * ([[readAsOf]]) until [[vacuum]] reclaims them. Returns true if the
-    * series existed.
+    * delete) through the manifest: a COMMIT (same CAS loop as the
+    * append path) that removes the partition's files from the live
+    * list — the data files stay on disk for time travel ([[readAsOf]])
+    * until [[vacuum]] reclaims them. (A raw directory delete would
+    * BRICK the collection: the live manifest would still name the
+    * deleted files.) Returns true if the series existed.
     */
   def dropSeries(uid: String, collection: String = defaultCollection): Boolean = {
     // escape like the writer does — partition values with spaces/colons/
     // slashes live in escaped directory names (never probe the raw uid)
     val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(uid)
     val partPrefix = s"$UidCol=$esc"
-    if (StoreLog.canLog(dir(collection)) && StoreLog.exists(dir(collection))) {
-      val path = dir(collection)
-      // the series' live files stream off a PREFIX-SCOPED fold (row
-      // groups outside the uid's directory skip at the checkpoint) —
-      // a one-series drop against a million-file collection is O(that
-      // series), both here and per commit attempt below
-      def seriesFiles(v: Long): Seq[String] =
-        StoreLog.foldFiles(path, v, Seq(partPrefix))(
-          Vector.empty[String])((a, e) => a :+ e.path)
-      val curV = StoreLog.latestVersion(path).get
-      if (seriesFiles(curV).isEmpty) return false
-      // the transform commit scaffold: no adopted files, and a rebase
-      // is always sound — whatever an intervening commit did to the
-      // partition, dropping the WHOLE series (the remove set recomputed
-      // per attempt from the rebased parent) serializes after it
-      StoreLog.withWriterLease(path) { lease =>
-        TsStore.commitTransformWithRebase(path, lease, curV,
-          moved = GraftWriteTaskResult.empty, replaced = Seq(partPrefix),
-          removeFilesOf = seriesFiles,
-          abortOnAppendsUnder = false,
-          abortOnReplaced = false)
-      }
-      true
-    } else {
-      val p = new org.apache.hadoop.fs.Path(s"${dir(collection)}/$partPrefix")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.delete(p, true)
+    val path = dir(collection)
+    // the series' live files stream off a PREFIX-SCOPED fold (row
+    // groups outside the uid's directory skip at the checkpoint) —
+    // a one-series drop against a million-file collection is O(that
+    // series), both here and per commit attempt below
+    def seriesFiles(v: Long): Seq[String] =
+      StoreLog.foldFiles(path, v, Seq(partPrefix))(
+        Vector.empty[String])((a, e) => a :+ e.path)
+    val curV = StoreLog.latestVersion(path).getOrElse(StoreLog.ensure(path).version)
+    if (seriesFiles(curV).isEmpty) return false
+    // the transform commit scaffold: no adopted files, and a rebase
+    // is always sound — whatever an intervening commit did to the
+    // partition, dropping the WHOLE series (the remove set recomputed
+    // per attempt from the rebased parent) serializes after it
+    StoreLog.withWriterLease(path) { lease =>
+      TsStore.commitTransformWithRebase(path, lease, curV,
+        moved = GraftWriteTaskResult.empty, replaced = Seq(partPrefix),
+        removeFilesOf = seriesFiles,
+        abortOnAppendsUnder = false,
+        abortOnReplaced = false)
     }
+    true
   }
 
   /** Compact a collection: rewrite its accumulated append-chunks into
@@ -410,185 +382,84 @@ class Bundles(spark: SparkSession, basePath: String,
     * fragmentation answer (each append creates new files; at high write
     * rates a series degrades into thousands of tiny chunks whose open/
     * footer costs dominate reads; ≙ the reference re-chunking a
-    * fragmented Mongo series). Writes to a sibling temp dir, then swaps
-    * via two renames — a reader never sees a HALF-written layout, but
-    * there is a brief window between the renames where the path is
-    * absent (directory renames aren't atomic pairs on HDFS-likes); run
-    * compaction in a maintenance window or behind a catalog pointer.
-    * A failed activation rename rolls the old layout back. Returns
-    * (files before, after).
+    * fragmented Mongo series). Compaction is a manifest COMMIT: the
+    * rewritten files are staged to a hidden txn dir, moved into the
+    * partition dirs (invisible until named), and ONE commit replaces
+    * every live file with the compacted set. A reader never sees a
+    * half-written layout or a manifest naming missing files; a crash
+    * leaves the previous version live, a concurrent upsert is caught by
+    * the commit CAS (compaction replaces everything, so ANY intervening
+    * commit is a conflict — rerun). Replaced chunks stay
+    * time-travelable until vacuum. Returns (live files before, after).
     */
   def compact(collection: String = defaultCollection,
               tsCol: String = "ts"): (Long, Long) = {
-    val path = new org.apache.hadoop.fs.Path(dir(collection))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def countFiles(p: org.apache.hadoop.fs.Path): Long = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
+    val path = dir(collection)
+    val snap = StoreLog.latest(path).getOrElse(StoreLog.ensure(path))
+    val staged = GraftBatchWrite.stage(
+      TsStore.canonical(TsStore.load(spark, path), Seq(UidCol), tsCol),
+      path, Seq(UidCol), tsCol, snap.bloomCols, GraftBatchWrite.MaxRecordsPerFile)
+    val movedN = StoreLog.withWriterLease(path) { _ =>
+      val moved = staged.adopt()
+      val replaced = snap.files.filter(_.contains("/"))
+        .map(f => f.substring(0, f.lastIndexOf('/'))).distinct.sorted
+      // a parentless commit would silently reset a store's configured
+      // per-store checkpoint cadence and bloom columns — carry the
+      // snapshot's through the full listing
+      try StoreLog.commit(path, snap.version, replaced, moved.files,
+        interval = Some(snap.checkpointInterval),
+        bloomCols = Some(snap.bloomCols),
+        addStats = moved.stats, addSizes = moved.sizes)
+      catch {
+        case c: StoreLog.CommitConflict =>
+          StoreLog.deleteDataFiles(path, moved.files)
+          throw c
+      }
+      moved.files.size.toLong
     }
-    // non-local (scheme'd) collections carry no log by construction —
-    // logDir/latestVersion reject such paths loudly, so they must keep
-    // taking the unlogged rename-swap branch
-    val logVer = if (StoreLog.canLog(dir(collection)))
-      StoreLog.latestVersion(dir(collection)) else None
-    logVer match {
-      case Some(v) =>
-        // LOGGED collection: compaction is a manifest COMMIT, not a
-        // directory swap — the rewritten files are staged to a hidden
-        // txn dir, moved into the partition dirs (invisible until
-        // named), and ONE commit replaces every live file with the
-        // compacted set. No rename window in which the path is absent,
-        // no moment where the live manifest names missing files; a
-        // crash leaves the previous version live, a concurrent upsert
-        // is caught by the commit CAS (compaction replaces everything,
-        // so ANY intervening commit is a conflict — rerun). Replaced
-        // chunks stay time-travelable until vacuum.
-        val snap = StoreLog.read(dir(collection), v)
-        // live-vs-live comparison: the on-disk recursive count includes
-        // dead time-traveled chunks from prior upserts, which would
-        // inflate the reported ratio on any store not yet vacuumed
-        val before = snap.files.size.toLong
-        val staged = GraftBatchWrite.stage(
-          TsStore.canonical(TsStore.load(spark, dir(collection)), Seq(UidCol), tsCol),
-          dir(collection), Seq(UidCol), tsCol, snap.bloomCols,
-          GraftBatchWrite.MaxRecordsPerFile)
-        val movedN = StoreLog.withWriterLease(dir(collection)) { _ =>
-          val moved = staged.adopt()
-          val replaced = snap.files.filter(_.contains("/"))
-            .map(f => f.substring(0, f.lastIndexOf('/'))).distinct.sorted
-          // a parentless commit would silently reset a store's
-          // configured per-store checkpoint cadence and bloom columns —
-          // carry the snapshot's through the full listing
-          try StoreLog.commit(dir(collection), v, replaced, moved.files,
-            interval = Some(snap.checkpointInterval),
-            bloomCols = Some(snap.bloomCols),
-            addStats = moved.stats, addSizes = moved.sizes)
-          catch {
-            case c: StoreLog.CommitConflict =>
-              StoreLog.deleteDataFiles(dir(collection), moved.files)
-              throw c
-          }
-          moved.files.size.toLong
-        }
-        (before, movedN)
-      case None =>
-        // unlogged: the original rename-swap-rollback protocol (no dead
-        // chunks can exist without a log, so the raw count IS live)
-        val before = countFiles(path)
-        val tmp = new org.apache.hadoop.fs.Path(dir(collection) + ".__compact")
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        // one read of the fragmented layout, one range-partitioned
-        // sorted write — identical rows, tight row-group ts stats
-        // restored. mergeSchema so a dynamic-schema collection keeps
-        // the UNION of its chunk columns — a single-footer read would
-        // silently drop columns
-        TsStore.write(spark.read.option("mergeSchema", true).parquet(dir(collection)),
-          tmp.toString, tsCol = tsCol, uidCols = Seq(UidCol))
-        val old = new org.apache.hadoop.fs.Path(dir(collection) + ".__old")
-        if (fs.exists(old)) fs.delete(old, true)
-        require(fs.rename(path, old), s"compact: could not move $path aside")
-        if (!fs.rename(tmp, path)) {
-          fs.rename(old, path) // roll back so the collection stays readable
-          throw new IllegalStateException(s"compact: could not activate $tmp; rolled back")
-        }
-        fs.delete(old, true)
-        (before, countFiles(path))
-    }
+    (snap.files.size.toLong, movedN)
   }
 
   /** Compact ONE series — the 100 TB maintenance shape: a hot series
     * fragments into thousands of small append-chunks while the rest of
     * the collection is fine, and rewriting everything ([[compact]]) for
     * one bad partition is a full-store IO bill. This reads ONLY the
-    * series' live rows (the data files carry no uid column — it lives in
-    * the directory name — so the rewrite is uid-free and swaps back into
-    * the same `__uid=` dir), rewrites them range-partitioned and
-    * ts-sorted with TsStore's pinned chunk geometry, and activates via
-    * the same rename-swap-rollback protocol as [[compact]]. Every other
-    * partition's files are untouched. Returns (files before, after) for
-    * the one partition.
-    *
-    * Staging and backup live in a SIBLING of the collection directory
-    * (`<collection>.__cs/`), never inside it: an in-root staging dir
-    * named `__uid=<uid>.__compact` would be DISCOVERED as a real
-    * partition (Spark's hidden-path filter exempts underscore names
-    * containing '='), so a concurrent reader would see a phantom series
-    * with duplicate rows, and a crash between the renames would lose the
-    * real partition value. Stray leftovers from a crashed prior run are
-    * recovered up front: a missing partition with a surviving backup is
-    * restored, stale staging is dropped.
+    * series' live rows through the manifest (a raw directory read would
+    * resurrect upserted-away dead chunks), rewrites them
+    * range-partitioned and ts-sorted with TsStore's pinned chunk
+    * geometry into a hidden txn dir, and commits them in place of the
+    * series' live files — the same commit protocol as [[compact]].
+    * Every other partition's files are untouched. Returns (live files
+    * before, after) for the one partition.
     */
   def compactSeries(uid: String, collection: String = defaultCollection,
                     tsCol: String = "ts"): (Long, Long) = {
     val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(uid)
-    val part = new org.apache.hadoop.fs.Path(s"${dir(collection)}/$UidCol=$esc")
-    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val csRoot = new org.apache.hadoop.fs.Path(dir(collection) + ".__cs")
-    val tmp = new org.apache.hadoop.fs.Path(csRoot, esc)
-    val old = new org.apache.hadoop.fs.Path(csRoot, esc + ".__old")
-    // crash recovery from a prior interrupted run: the backup survives
-    // until activation succeeded, so a missing partition is restorable
-    if (!fs.exists(part) && fs.exists(old))
-      require(fs.rename(old, part), s"compactSeries: could not restore $part from $old")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) fs.delete(old, true)
-    require(fs.exists(part), s"compactSeries: no partition for uid '$uid' at $part")
-    def countFiles(p: org.apache.hadoop.fs.Path): Long = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
     val partPrefix = s"$UidCol=$esc"
-    val logVer = if (StoreLog.canLog(dir(collection)))
-      StoreLog.latestVersion(dir(collection)) else None
-    logVer match {
-      case Some(v) =>
-        // LOGGED collection: same txn-commit protocol as [[compact]] —
-        // never a rename window, never a manifest naming moved-away
-        // files, concurrent commits caught by the CAS; the live rows
-        // come through the manifest (a raw directory read would
-        // resurrect upserted-away dead chunks). Replaced chunks stay
-        // time-travelable until vacuum.
-        val snap = StoreLog.read(dir(collection), v)
-        val before = snap.files.count(_.startsWith(partPrefix + "/")).toLong
-        val rows = TsStore.load(spark, dir(collection))
-          .filter(org.apache.spark.sql.functions.col(UidCol) === uid)
-        val staged = GraftBatchWrite.stage(
-          TsStore.canonical(rows, Seq(UidCol), tsCol), dir(collection),
-          Seq(UidCol), tsCol, snap.bloomCols, GraftBatchWrite.MaxRecordsPerFile)
-        val movedN = StoreLog.withWriterLease(dir(collection)) { _ =>
-          val moved = staged.adopt()
-          require(moved.files.forall(_.startsWith(partPrefix + "/")),
-            s"compactSeries staged files outside $partPrefix: ${moved.files.take(3)}")
-          val kept = snap.files.filterNot(_.startsWith(partPrefix + "/"))
-          try StoreLog.commit(dir(collection), v, Seq(partPrefix), kept ++ moved.files,
-            parent = Some(snap),
-            addStats = moved.stats, addSizes = moved.sizes)
-          catch {
-            case c: StoreLog.CommitConflict =>
-              StoreLog.deleteDataFiles(dir(collection), moved.files)
-              throw c
-          }
-          moved.files.size.toLong
-        }
-        (before, movedN)
-      case None =>
-        // unlogged: sibling-staged rename-swap-rollback (see scaladoc)
-        val before = countFiles(part)
-        TsStore.write(spark.read.option("mergeSchema", true).parquet(part.toString),
-          tmp.toString, tsCol = tsCol, uidCols = Seq.empty)
-        require(fs.rename(part, old), s"compactSeries: could not move $part aside")
-        if (!fs.rename(tmp, part)) {
-          fs.rename(old, part) // roll back so the series stays readable
-          throw new IllegalStateException(s"compactSeries: could not activate $tmp; rolled back")
-        }
-        fs.delete(old, true)
-        if (fs.exists(csRoot) && !fs.listFiles(csRoot, true).hasNext) fs.delete(csRoot, true)
-        (before, countFiles(part))
+    val path = dir(collection)
+    val snap = StoreLog.latest(path).getOrElse(StoreLog.ensure(path))
+    val before = snap.files.count(_.startsWith(partPrefix + "/")).toLong
+    require(before > 0, s"compactSeries: no partition for uid '$uid' at $path/$partPrefix")
+    val rows = TsStore.load(spark, path)
+      .filter(org.apache.spark.sql.functions.col(UidCol) === uid)
+    val staged = GraftBatchWrite.stage(TsStore.canonical(rows, Seq(UidCol), tsCol),
+      path, Seq(UidCol), tsCol, snap.bloomCols, GraftBatchWrite.MaxRecordsPerFile)
+    val movedN = StoreLog.withWriterLease(path) { _ =>
+      val moved = staged.adopt()
+      require(moved.files.forall(_.startsWith(partPrefix + "/")),
+        s"compactSeries staged files outside $partPrefix: ${moved.files.take(3)}")
+      val kept = snap.files.filterNot(_.startsWith(partPrefix + "/"))
+      try StoreLog.commit(path, snap.version, Seq(partPrefix), kept ++ moved.files,
+        parent = Some(snap),
+        addStats = moved.stats, addSizes = moved.sizes)
+      catch {
+        case c: StoreLog.CommitConflict =>
+          StoreLog.deleteDataFiles(path, moved.files)
+          throw c
+      }
+      moved.files.size.toLong
     }
+    (before, movedN)
   }
 
   /** Drop a whole collection (≙ dropping a Mongo collection). */

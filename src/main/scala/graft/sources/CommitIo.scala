@@ -16,8 +16,9 @@ import scala.jdk.CollectionConverters._
   *     Hadoop catalog rely on).
   *   - object stores without an atomic no-overwrite primitive (plain S3
   *     rename = copy+delete) are NOT claimed: [[CommitIo.forPath]]
-  *     returns None and callers degrade to the unlogged write paths.
-  *     (A conditional-PUT or coordinator-backed impl plugs in here.)
+  *     returns None and the store refuses the path, reads included
+  *     (every store has a log). A conditional-PUT or coordinator-backed
+  *     impl plugs in here.
   *
   * Every other operation (list, read, move, delete) only needs ordinary
   * filesystem semantics and routes through the backend's native API.
@@ -79,8 +80,8 @@ object CommitIo {
     * operation to link(2) (see [[Hadoop.publishIfAbsent]]). `webhdfs`
     * does NOT: stock Hadoop ships no AbstractFileSystem binding for it,
     * so the FileContext the publish needs cannot even be constructed —
-    * claiming it would fail at the first commit instead of degrading to
-    * the unlogged write path as [[forPath]] promises.
+    * claiming it would fail at the first commit instead of refusing the
+    * path up front.
     */
   private val HadoopCasSchemes = Set("file", "hdfs", "viewfs", "ofs")
 

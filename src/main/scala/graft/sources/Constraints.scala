@@ -116,15 +116,13 @@ object Constraints {
   def effective(props: Map[String, String]): Seq[Check] =
     fromProps(props) ++ notNullChecks(props)
 
-  /** The live constraints of a logged store (empty for unlogged paths
-    * and stores without any). Write-side lookups always read LATEST —
+  /** The live constraints of a store (empty before its first write and
+    * for stores without any). Write-side lookups always read LATEST —
     * constraints are write-time invariants, not per-version reads.
     */
   def forStore(path: String): Seq[Check] =
-    if (StoreLog.canLog(path))
-      StoreLog.latestVersion(path)
-        .map(v => effective(StoreLog.propsAt(path, v))).getOrElse(Nil)
-    else Nil
+    StoreLog.latestVersion(path)
+      .map(v => effective(StoreLog.propsAt(path, v))).getOrElse(Nil)
 
   /** Constraints in `props` that were NOT in the set a writer bound at
     * write start — a concurrent `ALTER ... ADD` that landed while the

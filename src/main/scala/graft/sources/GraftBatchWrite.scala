@@ -130,7 +130,7 @@ private[graft] object GraftBatchWrite {
   def storeSetup(spark: SparkSession, path: String,
                  writeSchema: StructType, uids: Seq[String])
       : (OutputWriterFactory, GraftSerializableConf, Long) = {
-    val v = if (StoreLog.canLog(path)) StoreLog.latestVersion(path) else None
+    val v = StoreLog.latestVersion(path)
     val physSchema = v
       .flatMap(v => GraftTable.declaredIn(StoreLog.propsAt(path, v)))
       .filter(GraftTable.hasRenames)
@@ -212,15 +212,18 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = Staged(path, staging, GraftWriteTaskResult.of(messages.toSeq))
+    // a path without a log is adopted before the write's files move
+    // in, so v1 names only the files already there, and the commit
+    // below adds the tasks' files with their stats (and declares the
+    // schema of a store born empty)
+    if (!StoreLog.exists(path)) StoreLog.ensure(path)
     StoreLog.withWriterLease(path) { lease =>
       val moved = staged.adopt()
       var committed = false
       var attempts = 0
       while (!committed) {
         lease.renew()
-        val curV0 = StoreLog.latestVersion(path)
-        if (curV0.isEmpty) { StoreLog.ensure(path); () } // first-ever commit
-        val curV = curV0.getOrElse(StoreLog.latestVersion(path).get)
+        val curV = StoreLog.latestVersion(path).get
         val curProps = StoreLog.propsAt(path, curV)
         // a CHECK constraint added while this INSERT was in flight —
         // the written rows were guarded against the set bound at
@@ -251,7 +254,9 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
           if (!truncate && !curProps.contains(StoreLog.MainRefProp))
             StoreLog.commitTransform(path, curV, Seq.empty,
               removeFiles = Nil, addFiles = moved.files,
-              addStats = moved.stats, addSizes = moved.sizes)
+              addStats = moved.stats, addSizes = moved.sizes,
+              setProps = GraftTable.widenedSchemaProp(path, curProps, writeSchema,
+                moved.files, StoreLog.read(path, curV).files ++ moved.files))
           else {
             val cur = StoreLog.read(path, curV)
             val (baseFiles, refProps, carryStats, carrySizes, dvReset) =
@@ -271,6 +276,8 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
               // sorted files — (re)establish the layout-order contract;
               // an append's sorted additions just inherit the parent's
               setProps =
+                GraftTable.widenedSchemaProp(path, cur.props, writeSchema,
+                  moved.files, (if (truncate) files else cur.files ++ files).distinct) ++
                 (if (truncate) Map(GraftTable.LayoutSortedProp -> "true")
                  else Map.empty[String, String]) ++ refProps)
           }

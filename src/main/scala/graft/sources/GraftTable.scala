@@ -302,10 +302,7 @@ object GraftTable {
                                      asOf: Option[Long]): StructType = {
     // the declared schema lives in RAW manifest props — resolving it
     // must never decode a million-file checkpoint sidecar
-    val vOpt =
-      if (StoreLog.canLog(path)) asOf.orElse(StoreLog.mainVersion(path))
-      else None
-    vOpt match {
+    asOf.orElse(StoreLog.mainVersion(path)) match {
       case Some(v) =>
         declaredIn(StoreLog.propsAt(path, v))
           .getOrElse(inferSchema(spark, path, StoreLog.read(path, v).files))
@@ -425,13 +422,12 @@ object GraftTable {
 
   /** Partition column names of the store's file layout (empty for an
     * unpartitioned or empty store; an empty store falls back to the
-    * declared [[UidsProp]], an UNLOGGED directory to its on-disk
+    * declared [[UidsProp]], a directory without a log to its on-disk
     * layout — without that last branch a plain partitioned directory
     * read through format("graft") would treat its partition columns as
     * data columns and surface them as null).
     */
   private[sources] def partCols(path: String): Seq[String] = {
-    if (!StoreLog.canLog(path)) return Seq.empty
     // raw-manifest probes only — a million-file store's scan build must
     // not pay a full snapshot resolution to learn the column NAMES
     // (partitioning is immutable per store, so any historical path is
@@ -798,9 +794,7 @@ class GraftTable(val path: String, asOf: Option[Long],
     StructType(effectiveParts.flatMap(n => declaredSchema.fields.find(_.name == n)))
 
   private def liveSnap: Option[StoreLog.Snapshot] =
-    if (StoreLog.canLog(path))
-      asOf.orElse(StoreLog.mainVersion(path)).map(v => StoreLog.read(path, v))
-    else None
+    asOf.orElse(StoreLog.mainVersion(path)).map(v => StoreLog.read(path, v))
 
   /** Distinct live partition tuples (catalyst-internal values), from
     * manifest metadata alone.
@@ -984,8 +978,6 @@ class GraftTable(val path: String, asOf: Option[Long],
     */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOf.isEmpty, s"cannot write to a time-travel view of $path")
-    require(StoreLog.canLog(path),
-      s"writes need a loggable store path; '$path' has no commit backend")
     new WriteBuilder with SupportsTruncate {
       private var overwrite = false
       override def truncate(): WriteBuilder = { overwrite = true; this }
@@ -1052,7 +1044,7 @@ class GraftScanBuilder(spark: SparkSession, path: String, asOf: Option[Long],
     * replaces.
     */
   private lazy val bigStore: Boolean =
-    pinned.isEmpty && StoreLog.canLog(path) && {
+    pinned.isEmpty && {
       val vOpt = asOf.orElse(StoreLog.mainVersion(path))
       vOpt.exists(v =>
         StoreLog.liveFileCount(path, v) >= StoreLog.LazySnapshotThreshold)
@@ -1138,10 +1130,8 @@ class GraftScanBuilder(spark: SparkSession, path: String, asOf: Option[Long],
   // ----------------------------------------------------- agg pushdown
 
   private lazy val aggSnap: Option[StoreLog.Snapshot] =
-    (if (pinned.isDefined) pinned
-    else if (StoreLog.canLog(path))
-      asOf.orElse(StoreLog.mainVersion(path)).map(v => StoreLog.read(path, v))
-    else None)
+    pinned.orElse(
+      asOf.orElse(StoreLog.mainVersion(path)).map(v => StoreLog.read(path, v)))
       // renamed columns: stats are recorded under PHYSICAL names —
       // re-key to the declared names every agg lookup below uses
       .map(s => GraftTable.logicalSnap(s, fullSchema))
@@ -1801,42 +1791,36 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
       withVersionCol = false)
   }
 
-  // live (or asOf) snapshot; an unlogged directory degrades to a plain
-  // listing with no stats (every file kept, still a correct read). A
+  // live (or asOf) snapshot; a directory graft never wrote (no log)
+  // reads as a plain listing with no stats (every file kept). A
   // builder that accepted exact partition filters PINS the snapshot its
   // acceptance was judged on.
   private lazy val snap: StoreLog.Snapshot = GraftTable.logicalSnap(
     // renamed columns: stats re-keyed physical→logical so pruning,
     // ordering bounds, and statistics all think in declared names
     pinnedSnap.getOrElse {
-      if (StoreLog.canLog(path)) {
-        val vOpt = asOf.orElse(StoreLog.mainVersion(path))
-        vOpt match {
-          case None => StoreLog.Snapshot(0L, 0L, Nil, StoreLog.listDataFiles(path))
-          case Some(v) =>
-            // STRIPE-LAZY resolution for BIG stores under pushed
-            // filters: only files the filters may match materialize on
-            // the driver — the full checkpoint streams through
-            // transient row-group buffers ([[StoreLog.readFiltered]]).
-            // The keep predicate is byte-identical to plannedFiles'
-            // static prune, so plans are unchanged; small stores (and
-            // pinned / unfiltered scans) keep the full resolution,
-            // bit-identical to before. ROW-LEVEL operation scans lazy-
-            // resolve too: their pushed filters stay residual on the
-            // rows (file-only pruning), but the conservative manifest
-            // stat prune is the same one plannedFiles applies — a file
-            // no row can match holds no affected group, so a predicate-
-            // bounded UPDATE/DELETE/MERGE against a million-file store
-            // plans (and later commits) O(its footprint).
-            if (pushed.nonEmpty &&
-                StoreLog.liveFileCount(path, v) >= StoreLog.LazySnapshotThreshold) {
-              val (keep, summarySkip) = lazyPredicates
-              StoreLog.readFiltered(path, v, skipCheckpoint = summarySkip)(keep)
-            } else StoreLog.read(path, v)
-        }
-      } else {
-        require(asOf.isEmpty, s"asOf needs a manifest log; '$path' cannot carry one")
-        StoreLog.Snapshot(0L, 0L, Nil, StoreLog.listDataFiles(path))
+      asOf.orElse(StoreLog.mainVersion(path)) match {
+        case None => StoreLog.Snapshot(0L, 0L, Nil, StoreLog.listDataFiles(path))
+        case Some(v) =>
+          // STRIPE-LAZY resolution for BIG stores under pushed
+          // filters: only files the filters may match materialize on
+          // the driver — the full checkpoint streams through
+          // transient row-group buffers ([[StoreLog.readFiltered]]).
+          // The keep predicate is byte-identical to plannedFiles'
+          // static prune, so plans are unchanged; small stores (and
+          // pinned / unfiltered scans) keep the full resolution,
+          // bit-identical to before. ROW-LEVEL operation scans lazy-
+          // resolve too: their pushed filters stay residual on the
+          // rows (file-only pruning), but the conservative manifest
+          // stat prune is the same one plannedFiles applies — a file
+          // no row can match holds no affected group, so a predicate-
+          // bounded UPDATE/DELETE/MERGE against a million-file store
+          // plans (and later commits) O(its footprint).
+          if (pushed.nonEmpty &&
+              StoreLog.liveFileCount(path, v) >= StoreLog.LazySnapshotThreshold) {
+            val (keep, summarySkip) = lazyPredicates
+            StoreLog.readFiltered(path, v, skipCheckpoint = summarySkip)(keep)
+          } else StoreLog.read(path, v)
       }
     }, fullSchema)
 

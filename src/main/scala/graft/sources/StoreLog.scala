@@ -242,14 +242,12 @@ object StoreLog {
   def isLocal(path: String): Boolean =
     !path.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:.*")
 
-  /** Whether a path can carry a manifest log at all: its backend must
-    * offer an atomic publish-if-absent primitive ([[CommitIo.forPath]]).
-    * Plain local paths and `file:`/HDFS-like URIs qualify; object-store
-    * schemes without an atomic no-overwrite publish do not — callers
-    * degrade to the unlogged write paths there.
+  /** The path's commit backend ([[CommitIo.forPath]]): every store
+    * operation runs through it, so this is the one place a path whose
+    * scheme has no atomic publish-if-absent primitive (plain S3 without
+    * a registered backend) is refused — reads, writes and maintenance
+    * alike.
     */
-  def canLog(path: String): Boolean = CommitIo.forPath(path).isDefined
-
   private def io(path: String): CommitIo =
     CommitIo.forPath(path).getOrElse(throw new IllegalArgumentException(
       s"StoreLog cannot commit to '$path': the scheme has no atomic " +

@@ -119,13 +119,12 @@ object TsStore {
     * read restricted to exactly those files ([[scanExtents]]): a file
     * with a deletion vector (its footer bounds still cover the deleted
     * rows), a file without a ts stat or with one of another tag
-    * (legacy, adopted or INT96 files), every file under those
-    * directories of a store without a log, and the staged files when
-    * one has no ts stat (a ts type no stat records). Otherwise no Spark
-    * job runs.
+    * (legacy, adopted or INT96 files), and the staged files when one
+    * has no ts stat (a ts type no stat records). Otherwise no Spark job
+    * runs. The store must have a log ([[write]] adopts a path first).
     */
   private[graft] def overlappingSeries(spark: SparkSession, path: String,
-      logged: Boolean, staged: Staged, tsCol: String): Seq[String] = {
+      staged: Staged, tsCol: String): Seq[String] = {
     def dirOf(f: String) = f.substring(0, math.max(f.lastIndexOf('/'), 0))
     def tsStat(st: Option[FileStats.FileStatsMap]) = st.flatMap(_.get(tsCol))
     val w = staged.written
@@ -134,36 +133,27 @@ object TsStore {
     // each incoming series' hull, in one domain
     val incoming: Map[String, Extent] =
       (if (statExts.size == w.files.size) statExts
-       else scanExtents(spark, staged.staging, None, w.files, tsCol))
+       else scanExtents(spark.read.format("graft").load(staged.staging), w.files, tsCol))
         .groupMapReduce(e => dirOf(e._1))(_._2) { case ((t, lo1, hi1), (_, lo2, hi2)) =>
           (t, if (cmpExtent(t, lo1, lo2) <= 0) lo1 else lo2,
             if (cmpExtent(t, hi1, hi2) >= 0) hi1 else hi2)
         }
     if (incoming.isEmpty) return Seq.empty
     val dirs = incoming.keys.toSeq.sorted
-    val (byStat, toScan, asOf) =
-      if (logged) {
-        val v = StoreLog.mainVersionAt(path, StoreLog.latestVersion(path).get)
-        val (st, sc) = StoreLog.foldFiles(path, v, prefixes = dirs)(
-            (List.empty[(String, Extent)], List.empty[String])) { case (acc @ (st, sc), e) =>
-          incoming.get(dirOf(e.path)) match {
-            case None => acc // a deeper directory under a prefix
-            case Some(in) => tsStat(e.stats) match {
-              case Some(c) if e.dv.isEmpty && c.tag == in._1 =>
-                ((e.path -> (c.tag, c.min, c.max)) :: st, sc)
-              case _ => (st, e.path :: sc)
-            }
-          }
+    val v = StoreLog.mainVersionAt(path, StoreLog.latestVersion(path).get)
+    val (byStat, toScan) = StoreLog.foldFiles(path, v, prefixes = dirs)(
+        (List.empty[(String, Extent)], List.empty[String])) { case (acc @ (st, sc), e) =>
+      incoming.get(dirOf(e.path)) match {
+        case None => acc // a deeper directory under a prefix
+        case Some(in) => tsStat(e.stats) match {
+          case Some(c) if e.dv.isEmpty && c.tag == in._1 =>
+            ((e.path -> (c.tag, c.min, c.max)) :: st, sc)
+          case _ => (st, e.path :: sc)
         }
-        (st, sc, Some(v))
-      } else {
-        val sc = Seq.newBuilder[String]
-        dirs.foreach(d => StoreLog.foreachDataFile(s"$path/$d") { f =>
-          if (!f.contains('/')) sc += s"$d/$f"
-        })
-        (Nil, sc.result(), None)
       }
-    val stored = (byStat ++ scanExtents(spark, path, asOf, toScan, tsCol))
+    }
+    val stored = (byStat ++ scanExtents(
+        spark.read.format("graft").option("asOf", v).load(path), toScan, tsCol))
       .groupMap(e => dirOf(e._1))(_._2)
     def show(tag: String, v: Any): Any = tag match {
       case "ts" => DateTimeUtils.microsToInstant(v.asInstanceOf[Long])
@@ -183,19 +173,17 @@ object TsStore {
     }
   }
 
-  /** Per-file ts extents of the store-relative `files` under `root` —
-    * at version `asOf` of its log, or as listed when it has none — by
-    * one read of exactly those files through the store's scan, which
-    * subtracts deletion vectors, grouped by `_file`. A file whose rows
-    * are all deleted has no extent.
+  /** Per-file ts extents of the `files` of `store` (a `format("graft")`
+    * read, built only when there are files to read) by one read of
+    * exactly those files through the store's scan, which subtracts
+    * deletion vectors, grouped by `_file`. A file whose rows are all
+    * deleted has no extent.
     */
-  private def scanExtents(spark: SparkSession, root: String, asOf: Option[Long],
-                          files: Seq[String], tsCol: String): Seq[(String, Extent)] =
+  private def scanExtents(store: => DataFrame, files: Seq[String],
+                          tsCol: String): Seq[(String, Extent)] =
     if (files.isEmpty) Nil
     else {
-      val reader = spark.read.format("graft")
-      asOf.fold(reader)(v => reader.option("asOf", v)).load(root)
-        .filter(col(GraftTable.FileColName).isin(files: _*))
+      store.filter(col(GraftTable.FileColName).isin(files: _*))
         .groupBy(col(GraftTable.FileColName))
         .agg(min(col(tsCol)), max(col(tsCol)))
         .collect().toSeq.collect { case r if !r.isNullAt(1) =>
@@ -239,11 +227,13 @@ object TsStore {
     * are per-write options set on the write's own Hadoop conf, like its
     * INT64-micros timestamps; the session conf is never touched.
     *
-    * The path must be one a log can commit to ([[StoreLog.canLog]]).
-    * Overwrite creates a new logged store; Append commits to a logged
-    * store, or adds plain files to a directory without a log. An Append
-    * with uid columns is checked against the stored chunks between its
-    * stage and its commit ([[overlappingSeries]], under `overlapPolicy`).
+    * Every write commits to the path's manifest log; a scheme without
+    * a commit backend is refused ([[CommitIo.forPath]]). Overwrite
+    * creates a new store; Append commits to the existing one, adopting
+    * a path without a log first ([[StoreLog.ensure]]: v1 names the
+    * files already there). An Append with uid columns is checked
+    * against the stored chunks between its stage and its commit
+    * ([[overlappingSeries]], under `overlapPolicy`).
     */
   def write(df: DataFrame, path: String, tsCol: String = "ts",
             uidCols: Seq[String] = Seq.empty,
@@ -284,6 +274,9 @@ object TsStore {
               else df
     val dfW = if (mode == SaveMode.Append) physicalFrame(dfC, physRenames(path))
               else dfC
+    // an Append inherits the store's bloom columns unless it names its
+    // own; a path without a log has none yet (its adoption declares
+    // `bloomKeys`)
     val blooms =
       if (bloomKeys.nonEmpty || mode == SaveMode.Overwrite || !logged) bloomKeys
       else StoreLog.bloomColsAt(path, StoreLog.latestVersion(path).get)
@@ -291,26 +284,33 @@ object TsStore {
     // check after it reads the staged files' task stats
     val staged = GraftBatchWrite.stage(canonical(dfW, uidCols, tsCol), path,
       uidCols, tsCol, blooms, maxRecordsPerFile, rowGroupBytes)
-    // write-time overlap guard (reference behavior): appending a chunk
-    // whose time range intersects what's stored for the same series is
-    // almost always a double-write that silently duplicates rows. It
-    // checks the staged files before anything commits; a refusal drops
-    // the staging dir
-    if (mode == SaveMode.Append && uidCols.nonEmpty &&
-        overlapPolicy != OverlapPolicy.Allow) {
-      val bad =
-        try overlappingSeries(dfW.sparkSession, path, logged, staged, tsCol)
-        catch { case t: Throwable => StoreLog.deleteStaging(staged.staging); throw t }
-      if (bad.nonEmpty) {
-        val msg = s"append overlaps stored time ranges for ${bad.size} series " +
-          s"(double-write?): ${bad.take(5).mkString("; ")}" +
-          (if (bad.size > 5) " …" else "")
-        if (overlapPolicy == OverlapPolicy.Error) {
-          StoreLog.deleteStaging(staged.staging)
-          throw new IllegalArgumentException(
-            s"$msg — pass overlapPolicy=Warn/Allow to append anyway")
-        } else log.warn(msg)
-      }
+    // an Append to a path without a log adopts it first: v1 names the
+    // files already there (none on a fresh path), so the guard reads
+    // manifest stats and the append commits on top. Only after the
+    // stage: a write whose tasks fail leaves the path untouched.
+    // Then the write-time overlap guard (reference behavior): appending
+    // a chunk whose time range intersects what's stored for the same
+    // series is almost always a double-write that silently duplicates
+    // rows. It checks the staged files before anything commits. A
+    // failure or a refusal drops the staging dir
+    val bad =
+      try {
+        if (mode == SaveMode.Append && !logged)
+          StoreLog.ensure(path, checkpointInterval, blooms)
+        if (mode == SaveMode.Append && uidCols.nonEmpty &&
+            overlapPolicy != OverlapPolicy.Allow)
+          overlappingSeries(dfW.sparkSession, path, staged, tsCol)
+        else Nil
+      } catch { case t: Throwable => StoreLog.deleteStaging(staged.staging); throw t }
+    if (bad.nonEmpty) {
+      val msg = s"append overlaps stored time ranges for ${bad.size} series " +
+        s"(double-write?): ${bad.take(5).mkString("; ")}" +
+        (if (bad.size > 5) " …" else "")
+      if (overlapPolicy == OverlapPolicy.Error) {
+        StoreLog.deleteStaging(staged.staging)
+        throw new IllegalArgumentException(
+          s"$msg — pass overlapPolicy=Warn/Allow to append anyway")
+      } else log.warn(msg)
     }
     if (mode == SaveMode.Overwrite) {
       // an overwrite is a NEW store. It declares the schema a parquet
@@ -343,12 +343,9 @@ object TsStore {
         bloomCols = if (bloomKeys.nonEmpty) Some(bloomKeys) else None,
         setProps = Map(GraftTable.LayoutSortedProp -> "true",
           GraftTable.TsColProp -> tsCol, GraftTable.SchemaProp -> schema.json))
-    } else if (!logged) {
-      // a directory without a log: the files just join it
-      staged.adopt()
     } else {
-      // logged store: appended files must be NAMED by a manifest commit
-      // or manifest readers never see them. Staged to a txn-private dir,
+      // appended files must be NAMED by a manifest commit or manifest
+      // readers never see them. Staged to a txn-private dir,
       // moved into place (invisible until committed), published. A pure
       // file ADDITION serializes after any concurrent commit, so a CAS
       // loss always rebases onto the winner's file list.
@@ -358,7 +355,7 @@ object TsStore {
         var attempts = 0
         while (!committed) {
           lease.renew()
-          val curV = StoreLog.latestVersion(path).get // exists() held above
+          val curV = StoreLog.latestVersion(path).get // held or adopted above
           val curProps = StoreLog.propsAt(path, curV)
           // a CHECK constraint added since this append bound its guard
           // set means the staged rows were never validated against it —
@@ -431,8 +428,7 @@ object TsStore {
     * the new files' values.
     */
   private def physRenames(path: String): Map[String, String] =
-    (if (StoreLog.canLog(path)) StoreLog.latestVersion(path)
-       .map(v => StoreLog.propsAt(path, v)) else None)
+    StoreLog.latestVersion(path).map(v => StoreLog.propsAt(path, v))
       .flatMap(_.get(GraftTable.SchemaProp))
       .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
@@ -2514,35 +2510,32 @@ object TsStore {
       .map(f => ref(f.name).as(GraftTable.physicalName(f))) ++ meta: _*)
   }
 
-  /** The store as a DataFrame: a logged store reads exactly the live (or
-    * `asOf`-versioned) snapshot through [[scanFrame]] under that
-    * version's declared schema, so filters on the frame prune
-    * partitions, manifest stats and row groups before a footer opens.
-    * An unlogged directory reads as plain parquet: one footer's schema
-    * unless the session sets `spark.sql.parquet.mergeSchema`. A version
-    * with zero files and no declared schema (the v1 a fresh-path upsert commits)
-    * surfaces as UNABLE_TO_INFER_SCHEMA — deliberately the same
-    * AnalysisException an empty unlogged directory read raises, which
-    * is what [[upsertPlan]]'s empty-base catch keys on.
+  /** The store as a DataFrame: the live (or `asOf`-versioned) snapshot
+    * through [[scanFrame]] under that version's declared schema, so
+    * filters on the frame prune partitions, manifest stats and row
+    * groups before a footer opens. The one adapter for a directory
+    * graft never wrote (no log yet; its first write adopts it): a plain
+    * parquet read, one footer's schema unless the session sets
+    * `spark.sql.parquet.mergeSchema`. A version with zero files and no
+    * declared schema (the v1 a fresh-path upsert commits) surfaces as
+    * UNABLE_TO_INFER_SCHEMA — deliberately the same AnalysisException
+    * an empty directory read raises, which is what [[upsertPlan]]'s
+    * empty-base catch keys on. A scheme without a commit backend is
+    * refused ([[CommitIo.forPath]]).
     */
   def load(spark: SparkSession, path: String,
            asOf: Option[Long] = None): DataFrame = {
-    val vOpt =
-      if (StoreLog.canLog(path)) asOf.orElse(StoreLog.mainVersion(path))
-      else {
-        require(asOf.isEmpty, s"asOf needs a manifest log; '$path' cannot carry one")
-        None
-      }
-    vOpt match {
+    asOf.orElse(StoreLog.mainVersion(path)) match {
       case Some(v) => scanFrame(spark, path, v,
         GraftTable.resolveSchema(spark, path, Some(v)), pinned = None, keepMeta = false)
       case None => spark.read.parquet(path)
     }
   }
 
-  /** Committed manifest versions of a logged store (empty if unlogged). */
-  def versions(path: String): Seq[Long] =
-    if (StoreLog.canLog(path)) StoreLog.listVersions(path) else Seq.empty
+  /** Committed manifest versions of the store (empty before its first
+    * write).
+    */
+  def versions(path: String): Seq[Long] = StoreLog.listVersions(path)
 
   /** Reclaim space: drop files no retained manifest references and
     * manifests beyond the newest `retainVersions` — the time-travel
@@ -2823,7 +2816,6 @@ object TsStore {
     */
   def expireBranches(path: String,
       nowMs: Long = System.currentTimeMillis()): Seq[String] = {
-    if (!StoreLog.canLog(path)) return Nil
     val v = StoreLog.latestVersion(path).getOrElse(return Nil)
     val props = StoreLog.propsAt(path, v)
     val expired = props.toSeq.collect {
@@ -2999,12 +2991,12 @@ object TsStore {
            asOf: Option[Long] = None): DataFrame = {
     // the reference's dynamic-schema read (SURVEY §1.1: chunks of one uid
     // may carry different column sets; read reassembles the union,
-    // missing columns → null/NaN) is every logged read here: the
-    // declared schema is the union (an unlogged directory merges its
-    // footers under `spark.sql.parquet.mergeSchema`). `asOf`
-    // time-travels a LOGGED store to the
-    // named manifest version (upserted-away rows come back; requires the
-    // version inside the vacuum retention window).
+    // missing columns → null/NaN) is every read here: the declared
+    // schema is the union (a directory graft never wrote merges its
+    // footers under `spark.sql.parquet.mergeSchema`, see [[load]]).
+    // `asOf` time-travels the store to the named manifest version
+    // (upserted-away rows come back; requires the version inside the
+    // vacuum retention window).
     val preds: Seq[Column] =
       uid.map { case (c, v) => col(c) === lit(v) }.toSeq ++
       start.map(s => col(tsCol) >= lit(s)) ++

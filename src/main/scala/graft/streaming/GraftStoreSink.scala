@@ -57,14 +57,19 @@ class GraftStoreSinkProvider extends TableProvider with DataSourceRegister {
 
   /** Write-only sink: the real write schema is the streaming QUERY's
     * (delivered via `LogicalWriteInfo`); for the table-shape call,
-    * answer the existing store's schema when one exists, else an empty
-    * struct (nothing validates a sink table's schema against the
-    * query).
+    * answer the existing store's schema, or an empty struct when there
+    * is none yet — no log, or a store born empty (nothing validates a
+    * sink table's schema against the query). Any other failure, e.g.
+    * an unreadable manifest, propagates.
     */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = GraftStoreSinkProvider.pathOf(options)
-    try TsStore.load(SparkSession.active, path).schema
-    catch { case scala.util.control.NonFatal(_) => new StructType() }
+    if (!StoreLog.exists(path)) new StructType()
+    else try TsStore.load(SparkSession.active, path).schema
+    catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => new StructType()
+    }
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],

@@ -14,6 +14,13 @@ class BundlesSpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** The files the frame's collection scan plans (its partition prune). */
+  private def planned(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan.asInstanceOf[graft.sources.GraftScan].plannedFiles
+    }.flatten
+
   test("corintick-shaped workflow: write two series, slice, filter meta, list") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_bundles").toString
@@ -48,8 +55,8 @@ class BundlesSpec extends AnyFunSuite {
     assert(uids.map(_.getString(0)).toSeq === Seq("AAPL", "MSFT"))
     assert(uids.map(_.getAs[Long]("n_rows")).toSeq === Seq(4L, 2L))
     // uid filter prunes partitions at plan time
-    val plan = ct.read("AAPL").queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"))
+    val files = planned(ct.read("AAPL"))
+    assert(files.nonEmpty && files.forall(_.startsWith("__uid=AAPL/")), files)
   }
 
   test("facade overlap guard: double-write refused under Error, disjoint append fine") {
@@ -126,8 +133,9 @@ class BundlesSpec extends AnyFunSuite {
     assert(two.count() == 4)
     assert(two.select("__uid").distinct().as[String].collect().toSet == Set("A", "C"))
     // the IN-list must reach partition pruning, not a post-scan filter
-    val plan = two.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan)
+    val files = planned(two)
+    assert(files.nonEmpty &&
+      files.forall(f => f.startsWith("__uid=A/") || f.startsWith("__uid=C/")), files)
     // slice applies across series
     assert(ct.readMany(Seq("A", "C"),
       start = Some(ts("2024-01-01 09:31:00"))).count() == 2)
@@ -222,7 +230,7 @@ class BundlesSpec extends AnyFunSuite {
     assert(ct.read("AAPL").count() == 2)
   }
 
-  test("compactSeries stages OUTSIDE the discovery root; crashed swap recovers at next run") {
+  test("compactSeries leaves no phantom partition; leftover staging is unseen") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_cs2").toString
     val ct = new Bundles(spark, base)
@@ -234,23 +242,47 @@ class BundlesSpec extends AnyFunSuite {
     val uids = ct.listUids().select("__uid").as[String].collect().toSet
     assert(uids === Set("aapl", "msft"), s"phantom partitions discovered: $uids")
     assert(ct.read("aapl").count() === 3)
-    // nothing compact-related lives INSIDE the collection dir (the bug
-    // was `__uid=aapl.__compact` being discovered as a real partition)
+    // nothing compact-related lives INSIDE the collection dir (a staged
+    // `__uid=aapl.__compact` would be discovered as a real partition),
+    // and the committed compaction left no staging behind
     val inRoot = new java.io.File(s"$base/default").listFiles().map(_.getName).toSet
-    assert(inRoot.forall(n => !n.contains("__compact") && !n.contains("__old")),
+    assert(inRoot === Set("_graft_log", "__uid=aapl", "__uid=msft"),
       s"staging leftovers inside the discovery root: $inRoot")
-    // simulate a crash between the two renames: the partition sits in
-    // the backup sibling, the real path is gone
-    val part = new java.io.File(s"$base/default/__uid=aapl")
-    val old = new java.io.File(s"$base/default.__cs/aapl.__old")
-    old.getParentFile.mkdirs()
-    require(part.renameTo(old), "test setup: could not move partition aside")
-    assert(!part.exists())
-    // next compactSeries restores the backup, then compacts normally
-    ct.compactSeries("aapl")
+    // a compaction that crashed before its commit leaves a txn staging
+    // dir full of parquet: hidden from reads and from listUids
+    val txn = java.nio.file.Paths.get(s"$base/default/_graft_txn_deadbeef/__uid=aapl")
+    Files.createDirectories(txn)
+    Files.list(java.nio.file.Paths.get(s"$base/default/__uid=aapl"))
+      .filter(_.toString.endsWith(".parquet"))
+      .forEach { f => Files.copy(f, txn.resolve(f.getFileName)); () }
+    assert(Files.list(txn).count() > 0)
+    assert(ct.listUids().select("__uid").as[String].collect().toSet === Set("aapl", "msft"))
     assert(ct.read("aapl").count() === 3)
     assert(ct.read("aapl").agg(org.apache.spark.sql.functions.sum("price"))
       .first().getDouble(0) === 303.0)
+    ct.compactSeries("aapl")
+    assert(ct.read("aapl").count() === 3)
+    // vacuum reclaims it once aged past the writer window
+    val staging = txn.getParent
+    Files.setLastModifiedTime(staging,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 2L * 3600 * 1000))
+    ct.vacuum()
+    assert(!Files.exists(staging))
+    assert(ct.read("aapl").count() === 3)
+  }
+
+  test("the first write logs a fresh collection; its version reads back") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_bundles_log").toString
+    val ct = new Bundles(spark, base)
+    ct.write("aapl", Seq((ts("2024-01-01 09:30:00"), 100.0),
+      (ts("2024-01-01 09:31:00"), 101.0)).toDF("ts", "price"))
+    assert(graft.sources.StoreLog.exists(s"$base/default"))
+    val v = ct.versions().last
+    ct.write("aapl", Seq((ts("2024-01-01 09:32:00"), 102.0)).toDF("ts", "price"))
+    assert(ct.read("aapl").count() === 3)
+    assert(ct.readAsOf("aapl", v).select("price").as[Double].collect().sorted.toSeq ===
+      Seq(100.0, 101.0))
   }
 
   test("facade upsert: correct one series atomically, time-travel and vacuum it") {

@@ -135,15 +135,20 @@ class OverlapGuardSpec extends AnyFunSuite {
     assert(!sameAnswer(dir, ticks("a", "09:41", "09:45")))
   }
 
-  test("a directory without a log is guarded by a scan of the touched series") {
+  test("a directory without a log is adopted by the append it guards") {
     val dir = tmp("graft_ovl_unlogged")
     ticks("a", "09:30", "09:40").union(ticks("b", "09:00", "09:10"))
       .write.mode("overwrite").partitionBy("uid").parquet(dir)
     assert(!StoreLog.exists(dir))
+    val plain = StoreLog.listDataFiles(dir)
     assert(sameAnswer(dir, ticks("a", "09:35", "09:35")))
+    // the refused append leaves only the adoption: v1 names the files
+    // that were there (their INT96 ts records no stat, so the guard
+    // scans the touched series' files)
+    assert(StoreLog.listVersions(dir) === Seq(1L))
+    assert(StoreLog.read(dir, 1L).files === plain)
     assert(!sameAnswer(dir, ticks("b", "09:35", "09:35")))
     assert(!sameAnswer(dir, ticks("c", "09:35", "09:35")))
-    assert(!StoreLog.exists(dir))
   }
 
   test("a numeric-looking uid is guarded; a uid its declared type cannot hold is not stored") {
@@ -234,7 +239,7 @@ class OverlapGuardSpec extends AnyFunSuite {
       Seq("uid"), "ts", Nil, GraftBatchWrite.MaxRecordsPerFile)
     try {
       var bad = Seq.empty[String]
-      assert(jobsOf { bad = TsStore.overlappingSeries(spark, dir, true, staged, "ts") } === 0)
+      assert(jobsOf { bad = TsStore.overlappingSeries(spark, dir, staged, "ts") } === 0)
       assert(bad.size === 1 && bad.head.startsWith("uid=a "), bad)
     } finally StoreLog.deleteStaging(staged.staging)
   }

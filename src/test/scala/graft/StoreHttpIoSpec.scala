@@ -103,7 +103,7 @@ class StoreHttpIoSpec extends AnyFunSuite {
   test("the full store model check holds through the HTTP conditional-PUT backend") {
     withS3Http {
       val dir = s"s3http:$root/model"
-      assert(StoreLog.canLog(dir), "registered s3http scheme must be loggable")
+      assert(CommitIo.forPath(dir).isDefined, "registered s3http scheme must be loggable")
       StoreModelCheck.run(spark, dir)
     }
   }

@@ -997,7 +997,7 @@ class StoreLogSpec extends AnyFunSuite {
       "fs.viewfs.mounttable.graftcas.link./store", backing.toUri.toString)
     try {
     val dir = "viewfs://graftcas/store"
-    assert(StoreLog.canLog(dir))
+    assert(CommitIo.forPath(dir).isDefined)
     // pin the rerouting itself: the mount's backing filesystem is file:,
     // so resolveLocal rewrites the path onto it
     val hio = CommitIo.forPath(dir).get.asInstanceOf[CommitIo.Hadoop]
@@ -1043,7 +1043,7 @@ class StoreLogSpec extends AnyFunSuite {
     val backing = Files.createTempDirectory("graft_mocknn")
     try {
     val dir = s"mocknn://$backing/store"
-    assert(StoreLog.canLog(dir))
+    assert(CommitIo.forPath(dir).isDefined)
     // no rerouting: the scheme resolves to mocknn, not file
     val hio = CommitIo.forPath(dir).get.asInstanceOf[CommitIo.Hadoop]
     assert(hio.resolveLocal(

@@ -56,10 +56,12 @@ object StoreModelCheck extends org.scalatest.Assertions {
         // stable across re-deliveries of the same key
         expr("timestamp_micros(id * 1000000)").as("ts"))
 
-    // base: ids 0..99, version 1
+    // base: ids 0..99, version 1 — an Append onto the fresh path,
+    // which adopts it (an empty v1) before committing the base
     val base = (0L until 100L).map(id => Rec(id, part(id), id * 1.0, 1L))
     model = base.map(r => r.id -> r).toMap
-    TsStore.write(df(base), dir, tsCol = "ts", uidCols = Seq("part"))
+    TsStore.write(df(base), dir, tsCol = "ts", uidCols = Seq("part"),
+      mode = org.apache.spark.sql.SaveMode.Append)
 
     def readStore(asOf: Option[Long] = None): Map[Long, Rec] = {
       val rows = TsStore.read(spark, dir, asOf = asOf)

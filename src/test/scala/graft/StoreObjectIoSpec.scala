@@ -132,7 +132,7 @@ class StoreObjectIoSpec extends AnyFunSuite {
     withMockS3 {
       val backing = Files.createTempDirectory("graft_model_s3")
       val dir = "mocks3:" + backing
-      assert(StoreLog.canLog(dir), "registered mocks3 scheme must be loggable")
+      assert(CommitIo.forPath(dir).isDefined, "registered mocks3 scheme must be loggable")
       StoreModelCheck.run(spark, dir)
     }
   }

@@ -1021,4 +1021,23 @@ class StreamingSpec extends AnyFunSuite {
       s"cross-process checkpoint resume must apply exactly the ONE new " +
         s"upstream commit, got ${dstVAfter2 - dstVAfter1} downstream commits")
   }
+
+  test("graft-store sink schema: empty without a log, raises on a truncated manifest") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_schema").toString
+    def sinkSchema() = new graft.streaming.GraftStoreSinkProvider().inferSchema(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(Map("path" -> dir).asJava))
+    assert(sinkSchema().isEmpty)
+    // born empty: a log whose only version declares no schema
+    graft.sources.StoreLog.ensure(dir)
+    assert(sinkSchema().isEmpty)
+    graft.sources.TsStore.write(
+      spark.range(10).selectExpr("timestamp_micros(id) AS ts", "id AS v"), dir)
+    assert(sinkSchema().fieldNames.toSet === Set("ts", "v"))
+    val latest = graft.sources.StoreLog.latestVersion(dir).get
+    val f = new java.io.File(graft.sources.StoreLog.logDir(dir), f"v$latest%08d.json")
+    val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+    java.nio.file.Files.write(f.toPath, bytes.take(bytes.length / 2))
+    intercept[java.io.IOException](sinkSchema())
+  }
 }

@@ -389,4 +389,47 @@ class TsStoreSpec extends AnyFunSuite {
     assert(TsStore.changes(spark, dir, 4L, 4L,
       keyCols = Seq("event_id"), versionCol = "version").count() === 0)
   }
+
+  test("an append onto a plain parquet directory adopts it: v1 names its files, v2 adds the append's") {
+    val dir = Files.createTempDirectory("graft_adopt").toString
+    val old = events.filter(col("event_type") =!= "purchase")
+    old.write.mode("overwrite").partitionBy("event_type").parquet(dir)
+    val plain = StoreLog.listDataFiles(dir)
+    assert(plain.nonEmpty && !StoreLog.exists(dir))
+    val added = events.filter(col("event_type") === "purchase")
+    TsStore.write(added, dir, uidCols = Seq("event_type"),
+      mode = org.apache.spark.sql.SaveMode.Append)
+    assert(StoreLog.listVersions(dir) === Seq(1L, 2L))
+    // v1 is the adoption: exactly the files that were there, each with
+    // the stats and size a footer pass over it reads
+    val v1 = StoreLog.read(dir, 1L)
+    assert(v1.files === plain)
+    val (stats, sizes) = graft.sources.FileStats.forFilesWithSizes(dir, plain, Nil)
+    plain.foreach { f =>
+      assert(v1.stats.get(f) === stats.get(f), s"stats of $f")
+      assert(v1.sizes.get(f) === sizes.get(f), s"size of $f")
+    }
+    // v2 adds the append's files and nothing else
+    val (add, remove, _) = StoreLog.rawDelta(dir, 2L).get
+    assert(remove.isEmpty && add.nonEmpty)
+    assert(add.forall(_.startsWith("event_type=purchase/")))
+    assert(StoreLog.read(dir, 2L).files.sorted === (plain ++ add).sorted)
+    val back = TsStore.read(spark, dir).select(cols.map(col): _*)
+    val src = events.select(cols.map(col): _*)
+    assert(back.count() === src.count())
+    assert(back.except(src).count() === 0)
+  }
+
+  test("a scheme without a commit backend is refused by write, load and format(graft)") {
+    val path = "nocommit://bucket/store"
+    def refused(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains("StoreLog cannot commit to"), e.getMessage)
+    }
+    refused(TsStore.write(events, path, uidCols = Seq("event_type"),
+      mode = org.apache.spark.sql.SaveMode.Append))
+    refused(TsStore.write(events, path, uidCols = Seq("event_type")))
+    refused(TsStore.load(spark, path))
+    refused(spark.read.format("graft").load(path))
+  }
 }

@@ -207,4 +207,29 @@ class WritePathSpec extends AnyFunSuite {
     val id = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
     assert(new TaskAttemptContextImpl(back, id).getConfiguration eq back)
   }
+
+  test("a format(graft) append to a directory without a log adopts it before its files move in") {
+    val dir = Files.createTempDirectory("graft_wpath_adopt").toString + "/t"
+    rows(0L, 0).write.partitionBy(uids: _*).parquet(dir)
+    val plain = StoreLog.listDataFiles(dir)
+    assert(plain.nonEmpty && !StoreLog.exists(dir))
+    rows(1000000L, 30).write.format("graft").partitionBy(uids: _*)
+      .mode(SaveMode.Append).save(dir)
+    assert(StoreLog.listVersions(dir) === Seq(1L, 2L))
+    // v1 names only the files that were there, none of the write's
+    assert(StoreLog.read(dir, 1L).files === plain)
+    // v2's txn adds exactly the write's files, with the tasks' stats
+    val (add, remove, _) = StoreLog.rawDelta(dir, 2L).get
+    assert(remove.isEmpty && add.nonEmpty && add.toSet.intersect(plain.toSet).isEmpty)
+    assert(StoreLog.read(dir, 2L).files.sorted === (plain ++ add).sorted)
+    assertTaskStats("format(graft) append", dir, Some(1L))
+    assert(TsStore.read(spark, dir).count() === rows(0L, 0).count() * 2)
+    // on a fresh path v1 is empty, and the commit adding the first files
+    // declares the schema (as an adoption of those files would)
+    val fresh = Files.createTempDirectory("graft_wpath_fresh").toString + "/t"
+    rows(0L, 0).write.format("graft").partitionBy(uids: _*).mode(SaveMode.Append).save(fresh)
+    assert(StoreLog.read(fresh, 1L).files.isEmpty)
+    assert(graft.sources.GraftTable.declaredIn(StoreLog.propsAt(fresh, 2L)) ===
+      Some(graft.sources.GraftTable.inferSchema(spark, fresh, StoreLog.read(fresh, 2L).files)))
+  }
 }
