@@ -34,9 +34,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** The local session the mains (Bench, Verify, ScaleSmoke, ProfileOne,
-    * PlanDump) run on: `local[cpus]` with graft's extensions, one
-    * shuffle partition per core, UTC session time, no UI.
+  /** The local session the mains (Bench, Verify, ScaleSmoke) run on:
+    * `local[cpus]` with graft's extensions, one shuffle partition per
+    * core, UTC session time, no UI.
     */
   def localSession(cpus: String): SparkSession =
     SparkSession.builder()

@@ -130,15 +130,14 @@ private[graft] object GraftBatchWrite {
   def storeSetup(spark: SparkSession, path: String,
                  writeSchema: StructType, uids: Seq[String])
       : (OutputWriterFactory, GraftSerializableConf, Long) = {
-    val v = StoreLog.latestVersion(path)
-    val physSchema = v
-      .flatMap(v => GraftTable.declaredIn(StoreLog.propsAt(path, v)))
+    val physSchema = GraftTable.latestDeclared(path)
       .filter(GraftTable.hasRenames)
       .map(d => GraftTable.toPhysical(writeSchema, d))
       .getOrElse(writeSchema)
     val (factory, conf) = parquetSetup(spark,
       StructType(physSchema.fields.filterNot(f => uids.contains(f.name))),
-      v.map(StoreLog.bloomColsAt(path, _)).getOrElse(Nil), RowGroupBytes)
+      StoreLog.latestVersion(path).map(StoreLog.bloomColsAt(path, _)).getOrElse(Nil),
+      RowGroupBytes)
     (factory, conf, sessionMaxRecords(spark))
   }
 
@@ -255,8 +254,8 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
             StoreLog.commitTransform(path, curV, Seq.empty,
               removeFiles = Nil, addFiles = moved.files,
               addStats = moved.stats, addSizes = moved.sizes,
-              setProps = GraftTable.widenedSchemaProp(path, curProps, writeSchema,
-                moved.files, StoreLog.read(path, curV).files ++ moved.files))
+              setProps = GraftTable.widenedSchemaProp(path, curV, curProps, writeSchema,
+                moved.files))
           else {
             val cur = StoreLog.read(path, curV)
             val (baseFiles, refProps, carryStats, carrySizes, dvReset) =
@@ -276,8 +275,8 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
               // sorted files — (re)establish the layout-order contract;
               // an append's sorted additions just inherit the parent's
               setProps =
-                GraftTable.widenedSchemaProp(path, cur.props, writeSchema,
-                  moved.files, (if (truncate) files else cur.files ++ files).distinct) ++
+                GraftTable.widenedSchemaProp(path, cur.version, cur.props, writeSchema,
+                  moved.files) ++
                 (if (truncate) Map(GraftTable.LayoutSortedProp -> "true")
                  else Map.empty[String, String]) ++ refProps)
           }

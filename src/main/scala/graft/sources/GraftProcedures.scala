@@ -67,6 +67,14 @@ object GraftProcedures {
     (path, tsCol, uids)
   }
 
+  /** Declared → physical column name at the store's latest declaration
+    * (identity for a never-renamed column).
+    */
+  private def physOfDeclared(path: String): String => String = {
+    val m = GraftTable.latestDeclared(path).map(GraftTable.physMap).getOrElse(Map.empty)
+    n => m.getOrElse(n, n)
+  }
+
   private abstract class OneShot(procName: String, doc: String,
                                  params: Array[ProcedureParameter])
     extends UnboundProcedure with BoundProcedure {
@@ -165,14 +173,7 @@ object GraftProcedures {
             "(create the table through the catalog, or write it partitioned)")
           // renamed columns arrive under their DECLARED names; the
           // clustering rewrite operates on the files' physical names
-          val physOf: String => String = StoreLog.latestVersion(path)
-            .flatMap(v => StoreLog.propsAt(path, v).get(GraftTable.SchemaProp))
-            .map { j =>
-              val m = GraftTable.physMap(
-                org.apache.spark.sql.types.DataType.fromJson(j)
-                  .asInstanceOf[StructType])
-              (n: String) => m.getOrElse(n, n)
-            }.getOrElse(identity[String] _)
+          val physOf = physOfDeclared(path)
           val cols = input.getUTF8String(1).toString
             .split(',').map(_.trim).filter(_.nonEmpty).toSeq.map(physOf)
           val buckets = if (input.isNullAt(2)) 256 else input.getInt(2)
@@ -226,14 +227,7 @@ object GraftProcedures {
           // renamed columns arrive under their DECLARED names; the
           // store-side frames read physical, so map the key/version
           // columns and restate the keys relation in physical terms
-          val physOf: String => String = StoreLog.latestVersion(path)
-            .flatMap(v => StoreLog.propsAt(path, v).get(GraftTable.SchemaProp))
-            .map { j =>
-              val m = GraftTable.physMap(
-                org.apache.spark.sql.types.DataType.fromJson(j)
-                  .asInstanceOf[StructType])
-              (n: String) => m.getOrElse(n, n)
-            }.getOrElse(identity[String] _)
+          val physOf = physOfDeclared(path)
           val keyCols = input.getUTF8String(2).toString
             .split(',').map(_.trim).filter(_.nonEmpty).toSeq
           require(keyCols.nonEmpty, "delete_keys needs at least one key column")

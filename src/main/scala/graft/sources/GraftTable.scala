@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.catalog.{Identifier, SupportsNamespaces, S
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.{GraftPartitionShim, PartitionedFile}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
@@ -120,9 +120,13 @@ object GraftTable {
         "parquet row index of the row within its data file"
     }
 
-  /** Per-store manifest property keys the catalog face records at CREATE
-    * TABLE so an EMPTY store still knows its schema and write layout.
-    * Once data files exist, the files are authoritative for the schema.
+  /** Per-store manifest property keys. [[SchemaProp]] is the store's
+    * declared schema and the authority for it: every read resolves it
+    * ([[resolveSchema]]), data files lacking a declared column read it
+    * as null. It is recorded by CREATE TABLE, by the commit that
+    * creates a store's first files (from the frame it wrote,
+    * [[declare]]) and by adoption ([[StoreLog.ensure]]), and evolves
+    * with ALTER TABLE and widening writes ([[widenedSchemaProp]]).
     */
   val SchemaProp = "graft.schema"
   val TsColProp = "graft.tsCol"
@@ -289,14 +293,18 @@ object GraftTable {
   private[graft] def declaredIn(props: Map[String, String]): Option[StructType] =
     props.get(SchemaProp).map(j => DataType.fromJson(j).asInstanceOf[StructType])
 
-  /** The store's schema: the declared [[SchemaProp]] when the (possibly
-    * `asOf`-versioned) manifest carries one — the catalog contract,
-    * which both honors ALTER ADD/DROP COLUMN (the prop is per-manifest,
-    * so time travel reads the era's declaration) and protects declared
-    * types from partition-value-inference narrowing. The commit that
-    * creates a store declares one ([[StoreLog.ensure]]), or else its
-    * first commit that adds files ([[widenedSchemaProp]]); manifests
-    * without one fall back to [[inferSchema]] over the live files.
+  /** The declaration of the store's latest manifest, if any. */
+  private[graft] def latestDeclared(path: String): Option[StructType] =
+    StoreLog.latestVersion(path).flatMap(v => declaredIn(StoreLog.propsAt(path, v)))
+
+  /** The store's schema at version `asOf` (default: the main view's),
+    * the one schema lookup of every read: the manifest's declared
+    * [[SchemaProp]] — per-manifest, so time travel reads the era's
+    * declaration, and declared types are never narrowed by
+    * partition-value inference. Foreign parquet has none: a directory
+    * without a log reads as a plain parquet read infers it, and a
+    * manifest from before declarations existed infers it with
+    * [[inferSchema]] over the version's live files.
     */
   private[sources] def resolveSchema(spark: SparkSession, path: String,
                                      asOf: Option[Long]): StructType = {
@@ -310,17 +318,31 @@ object GraftTable {
     }
   }
 
-  /** The one schema inference: the union of `files`' footers plus the
-    * partition columns their directory values imply (the types a plain
-    * `spark.read.parquet` of the store infers), in that order. A store's
-    * creating commit declares it once ([[StoreLog.ensure]]); later reads
-    * infer only for manifests written before that. Zero files raise
-    * Spark's UNABLE_TO_INFER_SCHEMA AnalysisException.
+  /** The schema of foreign parquet: the union of `files`' footers plus
+    * the partition columns their directory values imply (the types a
+    * plain `spark.read.parquet` of the store infers), in that order —
+    * a Spark job. It runs only where files graft did not write enter:
+    * adoption ([[StoreLog.ensure]]) and [[resolveSchema]] of a manifest
+    * without a declaration. Zero files raise Spark's
+    * UNABLE_TO_INFER_SCHEMA AnalysisException.
     */
   private[graft] def inferSchema(spark: SparkSession, path: String,
                                  files: Seq[String]): StructType =
     spark.read.option("mergeSchema", true).option("basePath", path)
       .parquet(files.map(f => s"$path/$f"): _*).schema
+
+  /** The schema [[inferSchema]] would infer over `files`, declared on
+    * the driver without reading them: the data fields of `written` (the
+    * frame that wrote the files) nullable, then the partition columns
+    * their `name=value` directories hold, typed by Spark's partition
+    * discovery. With no files nothing is a partition column: `written`
+    * must then list its partition columns last.
+    */
+  private[graft] def declare(written: StructType, files: Seq[String]): StructType = {
+    val parts = GraftPartitionShim.inferPartitionSchema(files)
+    StructType(GraftPartitionShim.asNullable(StructType(
+      written.filterNot(f => parts.fieldNames.contains(f.name)))) ++ parts)
+  }
 
   /** SET / DROP NOT NULL as one metadata commit — the engine behind
     * `CALL system.set_not_null` (Spark's analyzer hard-refuses `ALTER
@@ -337,9 +359,7 @@ object GraftTable {
   private[sources] def alterNotNull(spark: SparkSession, path: String,
                                     column: String, notNull: Boolean): Unit =
     TsStore.metadataCommitWithRetry(path) { cur =>
-      val schema = cur.props.get(SchemaProp)
-        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-        .getOrElse(resolveSchema(spark, path, None))
+      val schema = resolveSchema(spark, path, Some(cur.version))
       require(schema.fieldNames.contains(column),
         s"column '$column' does not exist at $path")
       val cols0 = Constraints.notNullCols(cur.props)
@@ -355,31 +375,32 @@ object GraftTable {
         SchemaProp -> updated.json), ())
     }
 
-  /** Write-side evolution for a CATALOG-declared store: when the parent
-    * manifest declares a schema ([[SchemaProp]]) and the written frame
-    * carries columns beyond it, the declaration widens to the union in
-    * the SAME commit (new fields at tail, nullable) — so Scala-API
-    * writes and catalog DDL stay one coherent schema history. DROPped
-    * tombstones stay dropped: re-writing such a column leaves its data
-    * undeclared until a rewrite retires the old files. A declared
-    * partition type widens too when a directory value of `addFiles`
-    * does not parse under it ([[widenPartitionTypes]]). A store with no
-    * declaration yet (a manifest from before declarations, or a store
-    * born empty) gets its first one here, inferred once over the files
-    * `liveAfter` the commit.
+  /** The [[SchemaProp]] a commit on top of version `parentV` (whose
+    * props are `parentProps`) sets, if any: when the written frame
+    * carries columns beyond the parent's declaration, the declaration
+    * widens to the union in the SAME commit (new fields at tail,
+    * nullable) — so Scala-API writes and catalog DDL stay one coherent
+    * schema history. DROPped tombstones stay dropped: re-writing such a
+    * column leaves its data undeclared until a rewrite retires the old
+    * files. A declared partition type widens too when a directory value
+    * of `addFiles` does not hold under it ([[widenPartitionTypes]]).
+    * A parent without a declaration gets one here: a store born empty
+    * declares the frame that adds its first files ([[declare]]); a
+    * manifest from before declarations declares its [[resolveSchema]],
+    * widened as above.
     */
-  private[graft] def widenedSchemaProp(path: String,
+  private[graft] def widenedSchemaProp(path: String, parentV: Long,
                                        parentProps: Map[String, String],
                                        written: StructType,
-                                       addFiles: Seq[String],
-                                       liveAfter: => Seq[String]): Map[String, String] =
-    parentProps.get(SchemaProp) match {
+                                       addFiles: Seq[String]): Map[String, String] = {
+    val parent = declaredIn(parentProps).orElse(
+      if (StoreLog.read(path, parentV).files.isEmpty) None
+      else Some(resolveSchema(SparkSession.active, path, Some(parentV))))
+    parent match {
       case None =>
-        val files = liveAfter
-        if (files.isEmpty) Map.empty
-        else Map(SchemaProp -> inferSchema(SparkSession.active, path, files).json)
-      case Some(j) =>
-        val parentDeclared = DataType.fromJson(j).asInstanceOf[StructType]
+        if (addFiles.isEmpty) Map.empty
+        else Map(SchemaProp -> declare(written, addFiles).json)
+      case Some(parentDeclared) =>
         val declared = widenPartitionTypes(parentDeclared, addFiles)
         // a column is "already declared" under its logical OR physical
         // name: internal rewrites (compaction staging read-back, sink
@@ -389,33 +410,30 @@ object GraftTable {
           .flatMap(f => Seq(f.name, physicalName(f))).toSet
         val extra = written.fields.filter(f => !have.contains(f.name) &&
           !parentProps.contains(s"$DroppedPropPrefix${f.name}"))
-        if (extra.isEmpty && (declared eq parentDeclared)) Map.empty
+        if (extra.isEmpty && (declared eq parentDeclared) &&
+            parentProps.contains(SchemaProp)) Map.empty
         else Map(SchemaProp ->
           StructType(declared.fields ++ extra.map(_.copy(nullable = true))).json)
     }
+  }
 
-  /** `declared` with each partition column's type widened until every
-    * directory value in `addFiles` parses under it. A type inferred at
-    * creation from numeric-looking values (`uid=7203` → int) goes to
-    * long when the new values fit one (`uid=3000000000`), else to
-    * string (`uid=AAPL`); a value no read could cast would otherwise
-    * fail every scan of its file. Returns `declared` itself when
-    * nothing widens.
+  /** `declared` with a partition column's type widened when a directory
+    * value in `addFiles` does not hold under it: to the type Spark's
+    * partition discovery gives the column over the declared type and
+    * the new files' values. A type inferred at creation from
+    * numeric-looking values (`uid=7203` → int) goes to long for
+    * `uid=3000000000`, to double for `uid=1.5` and to string for
+    * `uid=AAPL`; a value no read could cast would otherwise fail every
+    * scan of its file. Returns `declared` itself when nothing widens.
     */
   private def widenPartitionTypes(declared: StructType,
                                   addFiles: Seq[String]): StructType = {
-    def parses(dt: DataType, raw: String): Boolean = dt match {
-      case StringType => true
-      case IntegerType => raw.toIntOption.isDefined
-      case LongType => raw.toLongOption.isDefined
-      case _ => Cast(Literal(raw), dt, Some("UTC"), EvalMode.TRY).eval(null) != null
-    }
+    lazy val found = GraftPartitionShim.inferPartitionSchema(addFiles)
     val fields = declared.fields.map { f =>
       val vs = addFiles.flatMap(partSegRaw(_, physicalName(f)).flatten).distinct
-      if (vs.forall(parses(f.dataType, _))) f
-      else if (f.dataType == IntegerType && vs.forall(parses(LongType, _)))
-        f.copy(dataType = LongType)
-      else f.copy(dataType = StringType)
+      if (vs.forall(v => Cast(Literal(v), f.dataType, Some("UTC"), EvalMode.TRY).eval(null) != null)) f
+      else f.copy(dataType =
+        GraftPartitionShim.widerPartitionType(f.dataType, found(physicalName(f)).dataType))
     }
     if (fields.sameElements(declared.fields)) declared else StructType(fields)
   }
@@ -2911,18 +2929,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def tableExists(ident: Identifier): Boolean = isStore(pathOf(ident))
 
   private def tableAt(path: String, asOf: Option[Long]): Table = {
-    val spark = SparkSession.active
     // props at the REQUESTED version: they are per-manifest, so a time
     // travel reads the era's declared schema (pre-ALTER columns live)
-    val props = asOf.map(v => StoreLog.read(path, v))
-      .orElse(StoreLog.latest(path)).map(_.props).getOrElse(Map.empty)
-    // the declared schema (recorded at CREATE) is the catalog contract —
-    // partition-value INFERENCE could silently narrow a declared LONG
-    // uid to INT; fall back to inference only for adopted stores that
-    // predate the catalog
-    val schema = props.get(GraftTable.SchemaProp)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .getOrElse(GraftTable.resolveSchema(spark, path, asOf))
+    val props = asOf.orElse(StoreLog.latestVersion(path))
+      .map(StoreLog.propsAt(path, _)).getOrElse(Map.empty)
+    val schema = GraftTable.resolveSchema(SparkSession.active, path, asOf)
     val uids = props.get(GraftTable.UidsProp)
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(GraftTable.partCols(path))
@@ -3060,9 +3071,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!isStore(p)) throw new NoSuchTableException(ident)
     val cur = StoreLog.latest(p).getOrElse(throw new NoSuchTableException(ident))
     val spark = SparkSession.active
-    var schema = cur.props.get(GraftTable.SchemaProp)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .getOrElse(GraftTable.resolveSchema(spark, p, None))
+    var schema = GraftTable.resolveSchema(spark, p, Some(cur.version))
     val tsCol = cur.props.getOrElse(GraftTable.TsColProp, "ts")
     val uids = cur.props.get(GraftTable.UidsProp)
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)

@@ -1472,9 +1472,11 @@ object StoreLog {
     * both writers list the same committed files (staging dirs are
     * hidden), so the loser just adopts the winner's identical v1.
     * Adopting files DECLARES the store's schema
-    * ([[GraftTable.SchemaProp]], unless `props` carries one): the
-    * schema a parquet read of the files infers, inferred this once so
-    * no later read has to.
+    * ([[GraftTable.SchemaProp]], unless `props` carries one): files
+    * graft did not write have no frame to declare from, so this is
+    * where their schema is inferred ([[GraftTable.inferSchema]]) —
+    * once, so no later read has to. A path with no files gets no
+    * declaration; the commit adding its first files declares it.
     */
   def ensure(path: String,
              checkpointInterval: Int = CheckpointInterval,

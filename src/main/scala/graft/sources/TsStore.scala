@@ -313,23 +313,14 @@ object TsStore {
       } else log.warn(msg)
     }
     if (mode == SaveMode.Overwrite) {
-      // an overwrite is a NEW store. It declares the schema a parquet
-      // read of the staged files infers (partition types from directory
-      // names), or the frame's own when no row was written
-      val schema =
-        try {
-          if (staged.written.files.nonEmpty)
-            GraftTable.inferSchema(dfW.sparkSession, staged.staging,
-              staged.written.files)
-          else org.apache.spark.sql.types.StructType(
-            (dfW.schema.filterNot(f => uidCols.contains(f.name)) ++
-              uidCols.map(dfW.schema(_))).map(_.copy(nullable = true)))
-        } catch {
-          case t: Throwable => StoreLog.deleteStaging(staged.staging); throw t
-        }
-      // The old log and data go only now, with the new files staged and
-      // their schema known: a refused write (a null ts fails its task)
-      // or a failed inference leaves the old store intact
+      // an overwrite is a NEW store: it declares the frame it wrote,
+      // partition columns last, typed by the staged directory names
+      val schema = GraftTable.declare(org.apache.spark.sql.types.StructType(
+        dfW.schema.filterNot(f => uidCols.contains(f.name)) ++ uidCols.map(dfW.schema(_))),
+        staged.written.files)
+      // The old log and data go only now, with the new files staged: a
+      // refused write (a null ts fails its task) leaves the old store
+      // intact
       StoreLog.clearExcept(path, staged.staging)
       val moved = staged.adopt()
       // the creating commit, while provenance is known: every file just
@@ -379,8 +370,8 @@ object TsStore {
                 removeFiles = Nil, addFiles = moved.files,
                 addStats = moved.stats, addSizes = moved.sizes,
                 tag = commitTag,
-                setProps = GraftTable.widenedSchemaProp(path, curProps, dfW.schema,
-                  moved.files, StoreLog.read(path, curV).files ++ moved.files))
+                setProps = GraftTable.widenedSchemaProp(path, curV, curProps, dfW.schema,
+                  moved.files))
             else {
               // REF-AWARE base: under an active branch the tip's file
               // list may be the OTHER ref's view — resolve the target
@@ -393,9 +384,8 @@ object TsStore {
                 addSizes = carrySizes ++ moved.sizes,
                 tag = commitTag,
                 resetDvs = dvReset,
-                setProps =
-                  GraftTable.widenedSchemaProp(path, cur.props, dfW.schema, moved.files,
-                    (cur.files ++ baseFiles ++ moved.files).distinct) ++ refProps)
+                setProps = GraftTable.widenedSchemaProp(path, cur.version, cur.props,
+                  dfW.schema, moved.files) ++ refProps)
             }
             committed = true
           } catch {
@@ -428,11 +418,7 @@ object TsStore {
     * the new files' values.
     */
   private def physRenames(path: String): Map[String, String] =
-    StoreLog.latestVersion(path).map(v => StoreLog.propsAt(path, v))
-      .flatMap(_.get(GraftTable.SchemaProp))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .filter(GraftTable.hasRenames)
+    GraftTable.latestDeclared(path).filter(GraftTable.hasRenames)
       .map(d => GraftTable.physMap(d).filter { case (l, p) => l != p })
       .getOrElse(Map.empty)
 
@@ -600,9 +586,7 @@ object TsStore {
           addStats = moved.stats, addSizes = moved.sizes, addDvs = addDvs,
           tag = tag,
           setProps = schemaForWiden.fold(Map.empty[String, String])(sc =>
-            GraftTable.widenedSchemaProp(path, props, sc, moved.files,
-              StoreLog.read(path, expectedV).files.filterNot(removed.toSet) ++
-                moved.files)) ++
+            GraftTable.widenedSchemaProp(path, expectedV, props, sc, moved.files)) ++
             extraProps)
       } catch {
         case c: StoreLog.CommitConflict =>
@@ -1118,6 +1102,38 @@ object TsStore {
     deleteVectorsBy(spark, path, base, candidates, _.filter(pred), branch)
   }
 
+  /** The keyed takedowns' find base at `baseV` and its candidate files
+    * for the key frame `k`, pruned at manifest level: by the keys'
+    * [min, max] extent (single-column keys; effective when the key
+    * correlates with the chunk sort order — one Spark job) AND by the
+    * per-file distinct-value digest probe (the SCATTERED-key accelerant
+    * — a layout-uncorrelated key set keeps everything past the extent,
+    * but a digest-carrying file admits the takedown only if it may
+    * actually hold a key). Past the lazy threshold both gates also
+    * SCOPE the resolution itself. A composite key probes on EVERY
+    * digestable component (a file missing ANY component value cannot
+    * hold the composite tuple).
+    */
+  private def takedownCandidates(path: String, baseV: Long, k: DataFrame,
+      keyCols: Seq[String]): (StoreLog.Snapshot, Seq[String]) = {
+    val probe = keyProbe(k, keyCols)
+    val dKeep = digestKeep(probe) _
+    val extent = Option.when(keyCols.sizeIs == 1) {
+      val ext = k.agg(min(col(keyCols.head)).as("lo"),
+        max(col(keyCols.head)).as("hi")).first()
+      col(keyCols.head).between(lit(ext.get(0)), lit(ext.get(1)))
+    }
+    val base = extent match {
+      case Some(e) => scopedBase(path, baseV, e, extraKeep = dKeep)
+      case None if probe.nonEmpty &&
+          StoreLog.liveFileCount(path, baseV) >= StoreLog.LazySnapshotThreshold =>
+        StoreLog.readFiltered(path, baseV)(e => dKeep(e.stats))
+      case None => StoreLog.read(path, baseV)
+    }
+    val extPruned = extent.fold(base.files)(FileStats.prune(base.files, base.stats, _))
+    (base, extPruned.filter(f => dKeep(base.stats.get(f))))
+  }
+
   /** KEYED merge-on-read takedown — [[deleteKeys]]' deletion-vector
     * twin and [[deleteVectors]]' join-based one: remove every stored
     * row whose merge key appears in `keys` with `versionCol <=` that
@@ -1147,39 +1163,8 @@ object TsStore {
       .agg(max(col(deleteVersionCol)).as("__del_v"))
       .localCheckpoint() // evaluated by the extent probe and the find
     if (k.isEmpty) return baseV
-    // manifest-level prune of the find scan: the keys' [min,max]
-    // extent (effective when the key correlates with the chunk sort
-    // order) AND the per-file distinct-value digest probe (the
-    // SCATTERED-key accelerant — a layout-uncorrelated key set keeps
-    // everything past the extent, but a digest-carrying file admits
-    // the takedown only if it may actually hold a key). Past the lazy
-    // threshold both gates also SCOPE the resolution itself. A
-    // composite key probes on EVERY digestable component (a file
-    // missing ANY component value cannot hold the composite tuple).
-    val probe = keyProbe(k, keyCols)
-    val dKeep = digestKeep(probe) _
-    val base =
-      if (keyCols.sizeIs == 1) {
-        val ext = k.agg(min(col(keyCols.head)).as("lo"),
-          max(col(keyCols.head)).as("hi")).first()
-        scopedBase(path, baseV,
-          col(keyCols.head).between(lit(ext.get(0)), lit(ext.get(1))),
-          extraKeep = dKeep)
-      } else if (probe.nonEmpty &&
-          StoreLog.liveFileCount(path, baseV) >= StoreLog.LazySnapshotThreshold)
-        StoreLog.readFiltered(path, baseV)(e => dKeep(e.stats))
-      else StoreLog.read(path, baseV)
+    val (base, candidates) = takedownCandidates(path, baseV, k, keyCols)
     if (base.files.isEmpty) return base.version
-    val candidates = {
-      val extPruned =
-        if (keyCols.sizeIs == 1) {
-          val ext = k.agg(min(col(keyCols.head)).as("lo"),
-            max(col(keyCols.head)).as("hi")).first()
-          FileStats.prune(base.files, base.stats,
-            col(keyCols.head).between(lit(ext.get(0)), lit(ext.get(1))))
-        } else base.files
-      extPruned.filter(f => dKeep(base.stats.get(f)))
-    }
     lastTakedownCandidates = candidates.size
     if (candidates.isEmpty) return base.version
     deleteVectorsBy(spark, path, base, candidates, { df =>
@@ -1525,34 +1510,8 @@ object TsStore {
       .agg(max(col(deleteVersionCol)).as("__del_v"))
       .localCheckpoint() // evaluated 3× below (extent, find, rewrite)
     if (k.isEmpty) return baseV
-    // manifest-level prune of the FIND scan: keys' extent (sort-order-
-    // correlated feeds) + per-file digest probe (scattered feeds) —
-    // same gates as the dv twin, scoping the resolution itself past
-    // the lazy threshold
-    val probe = keyProbe(k, keyCols)
-    val dKeep = digestKeep(probe) _
-    val base =
-      if (keyCols.sizeIs == 1) {
-        val ext = k.agg(min(col(keyCols.head)).as("lo"),
-          max(col(keyCols.head)).as("hi")).first()
-        scopedBase(path, baseV,
-          col(keyCols.head).between(lit(ext.get(0)), lit(ext.get(1))),
-          extraKeep = dKeep)
-      } else if (probe.nonEmpty &&
-          StoreLog.liveFileCount(path, baseV) >= StoreLog.LazySnapshotThreshold)
-        StoreLog.readFiltered(path, baseV)(e => dKeep(e.stats))
-      else StoreLog.read(path, baseV)
+    val (base, candidates) = takedownCandidates(path, baseV, k, keyCols)
     if (base.files.isEmpty) return base.version
-    val candidates = {
-      val extPruned =
-        if (keyCols.sizeIs == 1) {
-          val ext = k.agg(min(col(keyCols.head)).as("lo"),
-            max(col(keyCols.head)).as("hi")).first()
-          FileStats.prune(base.files, base.stats,
-            col(keyCols.head).between(lit(ext.get(0)), lit(ext.get(1))))
-        } else base.files
-      extPruned.filter(f => dKeep(base.stats.get(f)))
-    }
     lastTakedownCandidates = candidates.size
     if (candidates.isEmpty) return base.version
     val affected = affectedFiles(candidates,
@@ -2475,9 +2434,9 @@ object TsStore {
     * restricted to `files`, so the snapshot's DELETION VECTORS filter
     * column batches (a vectored row can never resurrect through a
     * rewrite, a CDC diff, or a maintenance pass) and filters on the
-    * frame prune files and row groups. The schema is `snap`'s declared
-    * one — its era's columns; files lacking one read it as null (an
-    * undeclared manifest infers it over all of `snap`'s live files).
+    * frame prune files and row groups. The schema is `snap`'s version's
+    * ([[GraftTable.resolveSchema]]) — its era's columns; files lacking
+    * one read it as null.
     * `keepMeta` adds the scan's store-relative `_file` and the row's
     * parquet `_pos`: the file and row identities the delete verbs act on.
     */
@@ -2485,8 +2444,7 @@ object TsStore {
       snap: StoreLog.Snapshot, files: Seq[String],
       keepMeta: Boolean = false): DataFrame =
     scanFrame(spark, path, snap.version,
-      GraftTable.declaredIn(snap.props).getOrElse(GraftTable.inferSchema(spark, path,
-        if (snap.filtered) StoreLog.read(path, snap.version).files else snap.files)),
+      GraftTable.resolveSchema(spark, path, Some(snap.version)),
       Some(snap.copy(files = files)), keepMeta)
 
   /** The store at version `v` as a DSv2 relation over [[GraftScan]] (an
@@ -2741,8 +2699,7 @@ object TsStore {
           addSizes = carrySizes ++ moved.sizes,
           addDvs = addDvs, resetDvs = dvReset,
           setProps = schemaForWiden.fold(Map.empty[String, String])(sc =>
-            GraftTable.widenedSchemaProp(path, cur.props, sc, moved.files,
-              (cur.files ++ newFiles).distinct)) +
+            GraftTable.widenedSchemaProp(path, cur.version, cur.props, sc, moved.files)) +
             (StoreLog.BranchPropPrefix + b -> (cur.version + 1).toString) +
             // branch activity: advance the age-expiry touch stamp
             (StoreLog.BranchTouchPrefix + b ->

@@ -266,8 +266,7 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
                     addStats = moved.stats, addSizes = moved.sizes,
                     tag = Some(tag),
                     setProps = graft.sources.GraftTable
-                      .widenedSchemaProp(path, curProps, writeSchema, moved.files,
-                        StoreLog.read(path, curV).files ++ moved.files) +
+                      .widenedSchemaProp(path, curV, curProps, writeSchema, moved.files) +
                       (graft.sources.GraftTable.LayoutSortedProp -> "false"))
                 else {
                   val cur = StoreLog.read(path, curV)
@@ -291,8 +290,8 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
                     resetDvs = dvReset,
                     tag = if (replaceAll) None else Some(tag),
                     setProps = graft.sources.GraftTable
-                      .widenedSchemaProp(path, cur.props, writeSchema, moved.files,
-                        (if (replaceAll) files else cur.files ++ files).distinct) ++
+                      .widenedSchemaProp(path, cur.version, cur.props, writeSchema,
+                        moved.files) ++
                       refProps +
                       // the hashed epoch writer lands rows in ARRIVAL
                       // order — the store's layout-order contract is gone

@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * classic converters (`classic.ExpressionUtils`) are `private[sql]` — so,
   * like every library shipping custom expressions (the established pattern
   * of frameless / deequ / spark-extensions), we expose the two converters
-  * from inside the `org.apache.spark.sql` package. This file is the ONLY
-  * private-API touchpoint in the codebase; everything else is public API.
+  * from inside the `org.apache.spark.sql` package. This file and
+  * `execution.datasources.GraftPartitionShim` are the only private-API
+  * touchpoints in the codebase; everything else is public API.
   */
 object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

@@ -88,7 +88,7 @@ object ParquetReadOptionsGuardSpec {
     * opener inside one (`src/main` has none) would blank code up to the
     * next block comment's end.
     */
-  private def blankComments(src: String): String =
+  def blankComments(src: String): String =
     """(?s)/\*.*?\*/|//[^\n]*""".r.replaceAllIn(src, m =>
       scala.util.matching.Regex.quoteReplacement(m.matched.replaceAll("[^\n]", " ")))
 }

@@ -342,6 +342,18 @@ class TsStoreSpec extends AnyFunSuite {
       .forall(f => f.startsWith("uid=7203/") || f.startsWith("uid=AAPL/")))
     assert(TsStore.read(spark, dir, uid = Some("uid" -> "7203")).select("value")
       .as[Double].collect().toSeq === Seq(1.0))
+    // a declared int that meets a decimal-looking uid goes to double,
+    // the type Spark's partition discovery gives the two together
+    val dbl = Files.createTempDirectory("graft_uidwiden_dbl").toString
+    TsStore.write(df("7203", "2024-01-01 10:00:00", 1.0), dbl,
+      tsCol = "ts", uidCols = Seq("uid"))
+    TsStore.write(df("1.5", "2024-01-01 10:00:00", 4.0), dbl, tsCol = "ts",
+      uidCols = Seq("uid"), mode = org.apache.spark.sql.SaveMode.Append,
+      overlapPolicy = TsStore.OverlapPolicy.Error)
+    val dblBack = TsStore.load(spark, dbl)
+    assert(dblBack.schema("uid").dataType === org.apache.spark.sql.types.DoubleType)
+    assert(dblBack.select("uid", "value").as[(Double, Double)].collect().toSet ===
+      Set((7203.0, 1.0), (1.5, 4.0)))
   }
 
   test("changes classifies insert/update/delete by key and cancels carried-over survivors") {
