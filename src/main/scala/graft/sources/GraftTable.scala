@@ -307,16 +307,19 @@ object GraftTable {
     * [[inferSchema]] over the version's live files.
     */
   private[sources] def resolveSchema(spark: SparkSession, path: String,
-                                     asOf: Option[Long]): StructType = {
-    // the declared schema lives in RAW manifest props — resolving it
-    // must never decode a million-file checkpoint sidecar
+                                     asOf: Option[Long]): StructType =
     asOf.orElse(StoreLog.mainVersion(path)) match {
-      case Some(v) =>
-        declaredIn(StoreLog.propsAt(path, v))
-          .getOrElse(inferSchema(spark, path, StoreLog.read(path, v).files))
+      case Some(v) => resolveSchema(spark, new StoreLog.Manifests(path), v)
       case _ => spark.read.parquet(path).schema
     }
-  }
+
+  /** [[resolveSchema]] of logged version `v`, read through `log`. */
+  private[sources] def resolveSchema(spark: SparkSession, log: StoreLog.Manifests,
+                                     v: Long): StructType =
+    // the declared schema lives in RAW manifest props — resolving it
+    // must never decode a million-file checkpoint sidecar
+    declaredIn(log.props(v))
+      .getOrElse(inferSchema(spark, log.path, log.read(v).files))
 
   /** The schema of foreign parquet: the union of `files`' footers plus
     * the partition columns their directory values imply (the types a
@@ -445,24 +448,26 @@ object GraftTable {
     * read through format("graft") would treat its partition columns as
     * data columns and surface them as null).
     */
-  private[sources] def partCols(path: String): Seq[String] = {
-    // raw-manifest probes only — a million-file store's scan build must
-    // not pay a full snapshot resolution to learn the column NAMES
-    // (partitioning is immutable per store, so any historical path is
-    // an exact layout hint)
+  private[sources] def partCols(path: String): Seq[String] =
     StoreLog.latestVersion(path) match {
-      case Some(v) =>
-        StoreLog.sampleFilePath(path, v) match {
-          case Some(f) => StoreChangeSource.partitionColsOf(f)
-          case None =>
-            StoreLog.propsAt(path, v).get(UidsProp).toSeq
-              .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
-        }
+      case Some(v) => partColsAt(new StoreLog.Manifests(path), v)
       case None =>
         StoreLog.listDataFiles(path).headOption
           .map(StoreChangeSource.partitionColsOf).getOrElse(Seq.empty)
     }
-  }
+
+  /** [[partCols]] of a logged store whose latest version is `tip`. */
+  private[sources] def partColsAt(log: StoreLog.Manifests, tip: Long): Seq[String] =
+    // raw-manifest probes only — a million-file store's scan build must
+    // not pay a full snapshot resolution to learn the column NAMES
+    // (partitioning is immutable per store, so any historical path is
+    // an exact layout hint)
+    log.sampleFilePath(tip) match {
+      case Some(f) => StoreChangeSource.partitionColsOf(f)
+      case None =>
+        log.props(tip).get(UidsProp).toSeq
+          .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
+    }
 
   /** Catalyst-INTERNAL literal values → external: the analyzer's own
     * pushed filters carry external types, but RUNTIME filters (DPP's
@@ -785,11 +790,14 @@ private[sources] object PartPredEval {
   * `pinned` fixes the snapshot every scan of the table reads — the
   * internal reads of [[TsStore.readFilesDv]] name an exact (possibly
   * file-restricted) snapshot instead of a version to resolve.
+  * `manifests` is the log handle of the one read that built the table
+  * (each manifest parsed once across its scan build).
   */
 class GraftTable(val path: String, asOf: Option[Long],
                  declaredSchema: StructType, declaredParts: Seq[String],
                  tsCol: String, startingVersion: Long = 1L,
-                 pinned: Option[StoreLog.Snapshot] = None)
+                 pinned: Option[StoreLog.Snapshot] = None,
+                 manifests: Option[StoreLog.Manifests] = None)
   extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDeleteV2
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -971,10 +979,8 @@ class GraftTable(val path: String, asOf: Option[Long],
 
   override def schema(): StructType = declaredSchema
 
-  override def partitioning(): Array[Transform] = {
-    val ps = if (declaredParts.nonEmpty) declaredParts else GraftTable.partCols(path)
-    ps.map(Expressions.identity).toArray
-  }
+  override def partitioning(): Array[Transform] =
+    effectiveParts.map(Expressions.identity).toArray
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
@@ -982,7 +988,8 @@ class GraftTable(val path: String, asOf: Option[Long],
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(SparkSession.active, path, asOf, declaredSchema,
-      startingVersion, pinned = pinned)
+      startingVersion, pinned = pinned, parts = Some(effectiveParts),
+      manifests = manifests)
 
   /** The NATIVE batch write ([[GraftBatchWrite]]):
     * `RequiresDistributionAndOrdering` makes Spark range-partition +
@@ -1000,10 +1007,7 @@ class GraftTable(val path: String, asOf: Option[Long],
       private var overwrite = false
       override def truncate(): WriteBuilder = { overwrite = true; this }
       override def build(): Write = {
-        val uids =
-          if (declaredParts.nonEmpty) declaredParts
-          else GraftTable.partCols(path)
-        new GraftBatchWrite(path, info.schema(), uids, tsCol,
+        new GraftBatchWrite(path, info.schema(), effectiveParts, tsCol,
           truncate = overwrite)
       }
     }
@@ -1031,7 +1035,9 @@ class GraftScanBuilder(spark: SparkSession, path: String, asOf: Option[Long],
                        fullSchema: StructType, startingVersion: Long = 1L,
                        rowLevel: Boolean = false,
                        rowLevelDelta: Boolean = false,
-                       pinned: Option[StoreLog.Snapshot] = None)
+                       pinned: Option[StoreLog.Snapshot] = None,
+                       parts: Option[Seq[String]] = None,
+                       manifests: Option[StoreLog.Manifests] = None)
   extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
@@ -1064,9 +1070,10 @@ class GraftScanBuilder(spark: SparkSession, path: String, asOf: Option[Long],
   private lazy val bigStore: Boolean =
     pinned.isEmpty && {
       val vOpt = asOf.orElse(StoreLog.mainVersion(path))
-      vOpt.exists(v =>
-        StoreLog.liveFileCount(path, v) >= StoreLog.LazySnapshotThreshold)
+      vOpt.exists(v => log.liveFileCount(v) >= StoreLog.LazySnapshotThreshold)
     }
+
+  private val log = manifests.getOrElse(new StoreLog.Manifests(path))
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(f => GraftTable.filterColumn(f).isDefined)
@@ -1148,13 +1155,13 @@ class GraftScanBuilder(spark: SparkSession, path: String, asOf: Option[Long],
   // ----------------------------------------------------- agg pushdown
 
   private lazy val aggSnap: Option[StoreLog.Snapshot] =
-    pinned.orElse(
-      asOf.orElse(StoreLog.mainVersion(path)).map(v => StoreLog.read(path, v)))
+    pinned.orElse(asOf.orElse(StoreLog.mainVersion(path)).map(log.read))
       // renamed columns: stats are recorded under PHYSICAL names —
       // re-key to the declared names every agg lookup below uses
       .map(s => GraftTable.logicalSnap(s, fullSchema))
 
-  private lazy val partColNames: Seq[String] = GraftTable.partCols(path)
+  private lazy val partColNames: Seq[String] =
+    parts.getOrElse(GraftTable.partCols(path))
 
   // ONE O(files x partCols) path-parse pass per builder, shared by the
   // servability checks, the per-aggregate answers, and the grouping —
@@ -1722,7 +1729,8 @@ class GraftScanBuilder(spark: SparkSession, path: String, asOf: Option[Long],
         // snapshot the acceptance was judged on (a newer commit could
         // hold files the filter cannot decide) — snapshot isolation the
         // plan wants anyway
-        pinnedSnap = pinned.orElse(if (exactPart.nonEmpty) aggSnap else None))
+        pinnedSnap = pinned.orElse(if (exactPart.nonEmpty) aggSnap else None),
+        parts = Some(partColNames), manifests = Some(log))
   }
 }
 
@@ -1790,7 +1798,9 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
                 fileOnlyFilters: Boolean = false,
                 exactFilters: Array[Filter] = Array.empty,
                 pinnedSnap: Option[StoreLog.Snapshot] = None,
-                deltaPushFilters: Boolean = false)
+                deltaPushFilters: Boolean = false,
+                parts: Option[Seq[String]] = None,
+                manifests: Option[StoreLog.Manifests] = None)
   extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
@@ -1835,10 +1845,10 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
           // bounded UPDATE/DELETE/MERGE against a million-file store
           // plans (and later commits) O(its footprint).
           if (pushed.nonEmpty &&
-              StoreLog.liveFileCount(path, v) >= StoreLog.LazySnapshotThreshold) {
+              log.liveFileCount(v) >= StoreLog.LazySnapshotThreshold) {
             val (keep, summarySkip) = lazyPredicates
             StoreLog.readFiltered(path, v, skipCheckpoint = summarySkip)(keep)
-          } else StoreLog.read(path, v)
+          } else log.read(v)
       }
     }, fullSchema)
 
@@ -1899,7 +1909,8 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
     */
   private[sources] def snapshot: StoreLog.Snapshot = snap
 
-  private val partColNames: Seq[String] = GraftTable.partCols(path)
+  private lazy val log = manifests.getOrElse(new StoreLog.Manifests(path))
+  private val partColNames: Seq[String] = parts.getOrElse(GraftTable.partCols(path))
   private val partSchema = StructType(
     fullSchema.fields.filter(f => partColNames.contains(f.name)))
   private val dataSchema = StructType(
@@ -2366,7 +2377,16 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
+  /** Built once per scan: Spark asks twice per query — the planner's
+    * `BatchScanExec` (for `supportsColumnar`) and the copy
+    * `QueryExecution` makes of it for the executed plan, whose lazy
+    * factory is fresh — and both hold this scan. Runtime (DPP) filters
+    * only narrow [[plannedFiles]], so `anyDv` judged before them is
+    * conservative, never wrong.
+    */
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  private lazy val readerFactory: PartitionReaderFactory = {
     // only data-column filters reach the parquet reader (partition
     // columns aren't in the data pages); row-group stats + the store's
     // bloom filters both engage underneath
@@ -2401,19 +2421,14 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
     // face must not cost a row-materialization the path it replaces
     // never paid. Nested/map projections take the row path.
     val columnar = !wantsPos && fmt.supportBatch(spark, readSchema())
-    // the session conf, built once per call. ParquetFileFormat writes
-    // its requested schema into the conf it is handed and broadcasts that
-    // same object (in local mode a later build's schema would reach an
-    // earlier reader), so `readerFunc` takes this one and every further
-    // reader build a plain copy; the dv factories read only sidecars
-    // through it
-    val hadoopConf = org.apache.spark.sql.GraftShim.sessionHadoopConf(spark)
-    def readerConf() = new org.apache.hadoop.conf.Configuration(hadoopConf)
-    lazy val readerFunc = fmt
-      .buildReaderWithPartitionValues(spark, physData, readerPartSchema, physRequiredData,
-        dataFilters,
-        Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> columnar.toString),
-        hadoopConf)
+    // Spark's parquet reader over `readData` (+ partition values); the
+    // session conf rides one broadcast shared by every scan of the same
+    // conf content and requested schema
+    def parquet(readData: StructType) =
+      org.apache.spark.sql.GraftShim.parquetReaderFactory(
+        spark, physData, readData, readerPartSchema, dataFilters)
+    lazy val plain = parquet(physRequiredData)
+    lazy val readerFunc = ParquetFileReads(plain, columnar)
     val anyDv = plannedFiles.exists(snap.dvs.contains)
     if (!wantsPos && !anyDv) {
       // permutation from the reader's (data ++ part) layout back to the
@@ -2439,10 +2454,7 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
       val idxField = StructField(
         PFF.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true)
       val dvRequired = StructType(physRequiredData.fields :+ idxField)
-      val dvBatchFunc = fmt.buildReaderWithPartitionValues(spark, physData,
-        readerPartSchema, dvRequired, dataFilters,
-        Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "true"),
-        readerConf())
+      val dvBatchFunc = ParquetFileReads(parquet(dvRequired), batches = true)
       val idxOrdinal = requiredData.length
       val cleanPerm: Array[Int] = required.fieldNames.map(parquetOut.fieldIndex)
       // vectored batches' layout: requiredData ++ [rowIdx] ++ partitions
@@ -2451,8 +2463,7 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
         if (i < requiredData.length) i else i + 1 // skip the idx slot
       }
       new GraftDvColumnarReaderFactory(readerFunc, dvBatchFunc, idxOrdinal,
-        cleanPerm, dvPerm, required,
-        new org.apache.spark.util.SerializableConfiguration(hadoopConf))
+        cleanPerm, dvPerm, required, plain.broadcastedConf)
     } else {
       // ROW-path deletion-vectored read — only for the shapes the
       // columnar dv branch above refuses: `_pos`-requesting row-level
@@ -2465,10 +2476,8 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
       val idxField = StructField(
         PFF.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true)
       val dvRequired = StructType(physRequiredData.fields :+ idxField)
-      val dvFunc = fmt.buildReaderWithPartitionValues(spark, physData,
-        readerPartSchema, dvRequired, dataFilters,
-        Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        readerConf())
+      val dvReader = parquet(dvRequired)
+      val dvFunc = ParquetFileReads(dvReader, batches = false)
       // the dv reader's layout: requiredData ++ [rowIdx] ++ partitions
       val idxOrdinal = requiredData.length
       val dvOut = StructType(
@@ -2486,19 +2495,12 @@ class GraftScan(spark: SparkSession, path: String, asOf: Option[Long],
       val plainRow =
         if (wantsPos) null
         else {
-          val base =
-            if (columnar)
-              fmt.buildReaderWithPartitionValues(spark, physData, readerPartSchema,
-                physRequiredData, dataFilters,
-                Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-                readerConf())
-            else readerFunc
           val perm: Array[Int] = required.fieldNames.map(parquetOut.fieldIndex)
-          GraftColumnarReaderFactory.permuteRows(base, perm, parquetOut)
+          GraftColumnarReaderFactory.permuteRows(
+            ParquetFileReads(plain, batches = false), perm, parquetOut)
         }
       new GraftDvReaderFactory(plainRow, dvFunc, idxOrdinal, dvPerm, dvOut,
-        new org.apache.spark.util.SerializableConfiguration(hadoopConf),
-        cleanViaIdx = wantsPos)
+        dvReader.broadcastedConf, cleanViaIdx = wantsPos)
     }
   }
 
@@ -2573,7 +2575,7 @@ private[sources] class GraftKeyedFilePartition(
   * shuffle per batch, zero data movement.
   */
 private[sources] class GraftColumnarReaderFactory(
-    readerFunc: PartitionedFile => Iterator[org.apache.spark.sql.catalyst.InternalRow],
+    val readerFunc: PartitionedFile => Iterator[org.apache.spark.sql.catalyst.InternalRow],
     perm: Array[Int])
   extends PartitionReaderFactory {
   import org.apache.spark.sql.catalyst.InternalRow
@@ -2639,6 +2641,37 @@ private[sources] object GraftColumnarReaderFactory {
   }
 }
 
+/** One file's rows — or, with `batches`, its ColumnarBatches, erased
+  * to the same element type — from Spark's DSv2 parquet reader
+  * `factory`. The file's reader closes when the iterator runs dry, and
+  * at task end if it never does.
+  */
+private[sources] final case class ParquetFileReads(
+    factory: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory,
+    batches: Boolean)
+  extends (PartitionedFile => Iterator[org.apache.spark.sql.catalyst.InternalRow]) {
+  override def apply(file: PartitionedFile): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    val r: org.apache.spark.sql.connector.read.PartitionReader[_ <: AnyRef] =
+      if (batches) factory.buildColumnarReader(file) else factory.buildReader(file)
+    var closed = false
+    def close(): Unit = if (!closed) { closed = true; r.close() }
+    Option(org.apache.spark.TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => close()))
+    new Iterator[AnyRef] {
+      private var ready = false
+      override def hasNext: Boolean = {
+        if (!ready && !closed) { ready = r.next(); if (!ready) close() }
+        ready
+      }
+      override def next(): AnyRef = {
+        if (!hasNext) throw new NoSuchElementException("end of parquet file")
+        ready = false
+        r.get()
+      }
+    }.asInstanceOf[Iterator[org.apache.spark.sql.catalyst.InternalRow]]
+  }
+}
+
 /** Reader factory for a scan whose planned files include DELETION
   * VECTORS. Dispatch is per task-constant metadata
   * ([[GraftScan.DvMetaKey]] on the [[PartitionedFile]]): a clean file
@@ -2663,7 +2696,7 @@ private[sources] class GraftDvReaderFactory(
     plainRowFunc: PartitionedFile => Iterator[org.apache.spark.sql.catalyst.InternalRow],
     dvFunc: PartitionedFile => Iterator[org.apache.spark.sql.catalyst.InternalRow],
     idxOrdinal: Int, dvPerm: Array[Int], dvOut: StructType,
-    sconf: org.apache.spark.util.SerializableConfiguration,
+    sconf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration],
     cleanViaIdx: Boolean = false)
   extends PartitionReaderFactory {
   import org.apache.spark.sql.catalyst.InternalRow
@@ -2694,7 +2727,7 @@ private[sources] class GraftDvReaderFactory(
           case None if !cleanViaIdx => plainRowFunc(f)
           case None => dvFunc(f).map(idxProj()) // `_pos` requested: index read, no filter
           case Some(dvAbs) =>
-            val deleted = Dv.read(sconf.value, dvAbs)
+            val deleted = Dv.read(sconf.value.value, dvAbs)
             val proj = idxProj()
             dvFunc(f)
               .filterNot(r => Dv.contains(deleted, r.getLong(idxOrdinal)))
@@ -2788,7 +2821,7 @@ private[sources] class GraftDvColumnarReaderFactory(
     dvFunc: PartitionedFile => Iterator[org.apache.spark.sql.catalyst.InternalRow],
     idxOrdinal: Int, cleanPerm: Array[Int], dvPerm: Array[Int],
     outSchema: StructType,
-    sconf: org.apache.spark.util.SerializableConfiguration)
+    sconf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration])
   extends PartitionReaderFactory {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.connector.read.PartitionReader
@@ -2812,7 +2845,7 @@ private[sources] class GraftDvColumnarReaderFactory(
             cleanFunc(f).asInstanceOf[Iterator[ColumnarBatch]]
               .map(b => (null: Array[Long], b))
           case Some(dvAbs) =>
-            val deleted = Dv.read(sconf.value, dvAbs)
+            val deleted = Dv.read(sconf.value.value, dvAbs)
             dvFunc(f).asInstanceOf[Iterator[ColumnarBatch]]
               .map(b => (deleted, b))
         }

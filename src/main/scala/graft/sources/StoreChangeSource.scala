@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
@@ -19,7 +17,6 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** The store as a STREAMING SOURCE — `readStream.format("graft-store-
   * changes").load(path)` tails a [[StoreLog]]-logged store one micro-batch
@@ -294,16 +291,14 @@ private[sources] class StoreChangeStream(spark: SparkSession, schema: StructType
   override def createReaderFactory(): PartitionReaderFactory = {
     // Spark's own parquet reader (vectorized, codegen'd schema
     // conversion, partition values appended) — built once on the driver,
-    // serialized to executors; the same machinery FileSourceScanExec
-    // ships, so the stream's per-file read path is identical to a batch
-    // scan's.
-    // returning_batch=false: rows, not ColumnarBatches (the vectorized
-    // reader still runs underneath; its batch iterator is row-unwrapped)
-    val readerFunc = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .buildReaderWithPartitionValues(spark, dataSchema, partSchema, dataSchema,
-        Seq.empty,
-        Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        org.apache.spark.sql.GraftShim.sessionHadoopConf(spark))
+    // serialized to executors; the same machinery a batch scan ships, so
+    // the stream's per-file read path is identical to a batch scan's.
+    // Rows, not ColumnarBatches (the vectorized reader still runs
+    // underneath)
+    val readerFunc = ParquetFileReads(
+      org.apache.spark.sql.GraftShim.parquetReaderFactory(
+        spark, dataSchema, dataSchema, partSchema, Seq.empty),
+      batches = false)
     // the reader emits (data ++ partition); permute back to the DECLARED
     // schema order — a catalog table may declare its partition column
     // mid-schema, and the stream's rows must match the schema it claims
@@ -332,15 +327,9 @@ private[sources] class StoreChangeReaderFactory(
     readerFunc: PartitionedFile => Iterator[InternalRow])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    // the reader yields ColumnarBatch (erased) when the vectorized path
-    // decides to return batches — unwrap to rows either way; a batch
-    // FilePartition concatenates its files'/splits' readers
+    // a batch FilePartition concatenates its files'/splits' readers
     val rows: Iterator[InternalRow] =
-      GraftColumnarReaderFactory.filesOf(partition).iterator
-        .flatMap(f => readerFunc(f).asInstanceOf[Iterator[Any]]).flatMap {
-        case b: ColumnarBatch => b.rowIterator().asScala
-        case r: InternalRow => Iterator.single(r)
-      }
+      GraftColumnarReaderFactory.filesOf(partition).iterator.flatMap(readerFunc)
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _
       override def next(): Boolean =

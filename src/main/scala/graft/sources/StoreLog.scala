@@ -286,20 +286,44 @@ object StoreLog {
     mapper.readTree(io(path).readBytes(f))
   }
 
-  def read(path: String, version: Long): Snapshot = {
-    // one retry: a concurrent vacuum may delete a delta's checkpoint
-    // ancestor, but only AFTER atomically rewriting the oldest retained
-    // version as a checkpoint — so re-walking from the requested
-    // version sees the rewritten (now self-contained) manifest. Reads
-    // of versions vacuum actually DROPPED still fail, as they should.
-    // IOException is retried too: a checksummed local-FS reader racing
-    // the checkpoint rewrite can transiently see a manifest/crc
-    // mismatch (ChecksumException) or a mid-swap read failure.
-    try readResolve(path, version)
-    catch {
-      case _: IllegalArgumentException | _: java.io.IOException |
-           _: java.io.UncheckedIOException => readResolve(path, version)
-    }
+  def read(path: String, version: Long): Snapshot = new Manifests(path).read(version)
+
+  /** One read's view of the log: each manifest version it touches is
+    * opened and parsed once, however many of the read's lookups (props,
+    * layout sample, live-file count, snapshot) ask for it. A committed
+    * version does not change under its reader, so the handle is held by
+    * the table, scan builder and scan of ONE read; it never lists the
+    * log.
+    */
+  final class Manifests(val path: String) {
+    private val raws = scala.collection.mutable.HashMap.empty[Long, JsonNode]
+
+    private def raw(v: Long): JsonNode =
+      raws.synchronized(raws.getOrElseUpdate(v, readRaw(path, v)))
+
+    def props(v: Long): Map[String, String] = propsOf(raw(v))
+    /** The main view's version as of `v` ([[mainVersionAt]]). */
+    def mainAt(v: Long): Long =
+      props(v).get(MainRefProp).flatMap(_.toLongOption).getOrElse(v)
+    def sampleFilePath(v: Long): Option[String] = sampleIn(path, v, raw)
+    def liveFileCount(v: Long): Long = liveCountIn(v, raw)
+
+    def read(v: Long): Snapshot =
+      // one retry: a concurrent vacuum may delete a delta's checkpoint
+      // ancestor, but only AFTER atomically rewriting the oldest retained
+      // version as a checkpoint — so re-walking from the requested
+      // version sees the rewritten (now self-contained) manifest. Reads
+      // of versions vacuum actually DROPPED still fail, as they should.
+      // IOException is retried too: a checksummed local-FS reader racing
+      // the checkpoint rewrite can transiently see a manifest/crc
+      // mismatch (ChecksumException) or a mid-swap read failure.
+      try readResolve(path, v, raw)
+      catch {
+        case _: IllegalArgumentException | _: java.io.IOException |
+             _: java.io.UncheckedIOException =>
+          raws.synchronized(raws.clear())
+          readResolve(path, v, raw)
+      }
   }
 
   private def statsOf(n: JsonNode): Map[String, FileStats.FileStatsMap] =
@@ -393,8 +417,9 @@ object StoreLog {
         io(path).readBytes(s"${logDir(path)}/${n.get("filesRef").asText()}"))
     else (strings(n.get("files")), statsOf(n), sizesOf(n), dvsOf(n))
 
-  private def readResolve(path: String, version: Long): Snapshot = {
-    val root = readRaw(path, version)
+  private def readResolve(path: String, version: Long,
+                          raw: Long => JsonNode): Snapshot = {
+    val root = raw(version)
     val (files, stats, sizes, dvs) =
       if (isCheckpointNode(root)) checkpointOf(path, root)
       else {
@@ -406,11 +431,11 @@ object StoreLog {
         // entries stay absent — stat-less files are legal).
         var v = version - 1
         var deltas = List(root) // newest-last after the walk below
-        var node = readRaw(path, v)
+        var node = raw(v)
         while (!isCheckpointNode(node)) {
           deltas ::= node
           v -= 1
-          node = readRaw(path, v)
+          node = raw(v)
         }
         val (bFiles, bStats, bSizes, bDvs) = checkpointOf(path, node)
         val acc = scala.collection.mutable.Set[String](bFiles: _*)
@@ -476,11 +501,14 @@ object StoreLog {
     * adjust by their disjoint add/remove list sizes). The O(1) gate
     * the scan path uses to decide lazy vs full resolution.
     */
-  def liveFileCount(path: String, version: Long): Long = {
+  def liveFileCount(path: String, version: Long): Long =
+    liveCountIn(version, readRaw(path, _))
+
+  private def liveCountIn(version: Long, raw: Long => JsonNode): Long = {
     var v = version
     var delta = 0L
     while (true) {
-      val n = readRaw(path, v)
+      val n = raw(v)
       if (n.has("filesRef")) return n.get("fileCount").asLong + delta
       if (n.has("files")) return n.get("files").size.toLong + delta
       delta += n.get("add").size.toLong - n.get("remove").size.toLong
@@ -706,10 +734,11 @@ object StoreLog {
     * first (a delta's add list answers without touching the sidecar);
     * only a delta-less columnar checkpoint decodes — one row.
     */
-  def sampleFilePath(path: String, version: Long): Option[String] = {
+  private def sampleIn(path: String, version: Long,
+                       raw: Long => JsonNode): Option[String] = {
     var v = version
     while (v >= 1) {
-      val n = readRaw(path, v)
+      val n = raw(v)
       if (n.has("add") && n.get("add").size() > 0)
         return Some(n.get("add").get(0).asText())
       if (n.has("files"))
@@ -817,8 +846,10 @@ object StoreLog {
     * metadata-only lookups (tags) on million-file stores, where a full
     * Snapshot resolution pays the sidecar decode.
     */
-  def propsAt(path: String, version: Long): Map[String, String] = {
-    val root = readRaw(path, version)
+  def propsAt(path: String, version: Long): Map[String, String] =
+    propsOf(readRaw(path, version))
+
+  private def propsOf(root: JsonNode): Map[String, String] = {
     if (root.has("props"))
       root.get("props").properties().asScala
         .map(e => e.getKey -> e.getValue.asText()).toMap
@@ -872,15 +903,12 @@ object StoreLog {
     * a branch is active, the tip itself otherwise. Raw-JSON reads only.
     */
   def mainVersion(path: String): Option[Long] =
-    latestVersion(path).map { v =>
-      propsAt(path, v).get(MainRefProp).flatMap(_.toLongOption).getOrElse(v)
-    }
+    latestVersion(path).map(mainVersionAt(path, _))
 
   /** The main-view version AS OF manifest version `v` — what a main
     * reader (or the change feed) saw right after `v` committed.
     */
-  def mainVersionAt(path: String, v: Long): Long =
-    propsAt(path, v).get(MainRefProp).flatMap(_.toLongOption).getOrElse(v)
+  def mainVersionAt(path: String, v: Long): Long = new Manifests(path).mainAt(v)
 
   /** A branch's head version, from the latest manifest's props. */
   def branchVersion(path: String, name: String): Option[Long] =

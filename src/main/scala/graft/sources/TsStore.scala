@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2442,34 +2443,37 @@ object TsStore {
     */
   private[graft] def readFilesDv(spark: SparkSession, path: String,
       snap: StoreLog.Snapshot, files: Seq[String],
-      keepMeta: Boolean = false): DataFrame =
-    scanFrame(spark, path, snap.version,
-      GraftTable.resolveSchema(spark, path, Some(snap.version)),
-      Some(snap.copy(files = files)), keepMeta)
+      keepMeta: Boolean = false): DataFrame = {
+    val log = new StoreLog.Manifests(path)
+    org.apache.spark.sql.GraftShim.ofRows(spark, scanPlan(spark, log, snap.version,
+      GraftTable.resolveSchema(spark, log, snap.version), GraftTable.partCols(path),
+      Some(snap.copy(files = files)), keepMeta))
+  }
 
   /** The store at version `v` as a DSv2 relation over [[GraftScan]] (an
     * exact `pinned` snapshot, or `v` resolved at planning — stripe-lazily
-    * under filters on a million-file store). Columns come back as a
-    * parquet read of the store infers them: data columns, then
-    * partition columns, under their PHYSICAL names — internal rewrites
-    * of a renamed store write back what they read.
+    * under filters on a million-file store), unanalyzed. Columns come
+    * back as a parquet read of the store infers them: data columns, then
+    * partition columns (`parts`), under their PHYSICAL names — internal
+    * rewrites of a renamed store write back what they read.
     */
-  private def scanFrame(spark: SparkSession, path: String, v: Long,
-      schema: org.apache.spark.sql.types.StructType,
-      pinned: Option[StoreLog.Snapshot], keepMeta: Boolean): DataFrame = {
+  private def scanPlan(spark: SparkSession, log: StoreLog.Manifests, v: Long,
+      schema: org.apache.spark.sql.types.StructType, parts: Seq[String],
+      pinned: Option[StoreLog.Snapshot], keepMeta: Boolean): LogicalPlan = {
     val rel = org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
-      new GraftTable(path, Some(v), schema, Nil, "ts", pinned = pinned), None, None)
-    val parts = GraftTable.partCols(path).toSet
-    val (partFields, dataFields) = schema.fields.toSeq.partition(f => parts(f.name))
+      new GraftTable(log.path, Some(v), schema, parts, "ts", pinned = pinned,
+        manifests = Some(log)), None, None)
+    val (partFields, dataFields) = schema.fields.toSeq.partition(f => parts.contains(f.name))
     def ref(n: String) = col(s"`${n.replace("`", "``")}`")
     val meta =
       if (keepMeta) Seq(col(GraftTable.FileColName), col(GraftTable.PosColName)) else Nil
-    org.apache.spark.sql.GraftShim.ofRows(spark, rel).select((dataFields ++ partFields)
-      .map(f => ref(f.name).as(GraftTable.physicalName(f))) ++ meta: _*)
+    Project(((dataFields ++ partFields)
+      .map(f => ref(f.name).as(GraftTable.physicalName(f))) ++ meta)
+      .map(org.apache.spark.sql.GraftShim.named(spark, _)), rel)
   }
 
   /** The store as a DataFrame: the live (or `asOf`-versioned) snapshot
-    * through [[scanFrame]] under that version's declared schema, so
+    * through [[scanPlan]] under that version's declared schema, so
     * filters on the frame prune partitions, manifest stats and row
     * groups before a footer opens. The one adapter for a directory
     * graft never wrote (no log yet; its first write adopts it): a plain
@@ -2482,13 +2486,26 @@ object TsStore {
     * refused ([[CommitIo.forPath]]).
     */
   def load(spark: SparkSession, path: String,
-           asOf: Option[Long] = None): DataFrame = {
-    asOf.orElse(StoreLog.mainVersion(path)) match {
-      case Some(v) => scanFrame(spark, path, v,
-        GraftTable.resolveSchema(spark, path, Some(v)), pinned = None, keepMeta = false)
-      case None => spark.read.parquet(path)
+           asOf: Option[Long] = None): DataFrame =
+    org.apache.spark.sql.GraftShim.ofRows(spark, loadPlan(spark, path, asOf))
+
+  /** [[load]]'s plan, unanalyzed. One listing of the log names the tip;
+    * each manifest the read touches after that is parsed once (one
+    * [[StoreLog.Manifests]] serves the schema, the layout and the scan).
+    */
+  private def loadPlan(spark: SparkSession, path: String,
+                       asOf: Option[Long]): LogicalPlan =
+    StoreLog.latestVersion(path) match {
+      case None if asOf.isEmpty =>
+        org.apache.spark.sql.GraftShim.logicalPlan(spark.read.parquet(path))
+      case tip =>
+        val log = new StoreLog.Manifests(path)
+        val v = asOf.getOrElse(log.mainAt(tip.get))
+        val schema = GraftTable.resolveSchema(spark, log, v)
+        scanPlan(spark, log, v, schema,
+          tip.fold(Seq.empty[String])(GraftTable.partColsAt(log, _)),
+          pinned = None, keepMeta = false)
     }
-  }
 
   /** Committed manifest versions of the store (empty before its first
     * write).
@@ -2964,11 +2981,15 @@ object TsStore {
     // the same predicates prune FILES in the scan via the manifest's
     // recorded bounds (a ts-slice on a many-file store opens only
     // time-overlapping files) and then filter ROWS on what remains;
-    // one filter over their conjunction analyzes once, and optimizes to
-    // the plan one filter per predicate would
-    val stored = load(spark, path, asOf)
-    val df = preds.reduceOption(_ && _).fold(stored)(stored.filter)
-    if (columns.nonEmpty) df.select(columns.map(col): _*) else df
+    // one filter over their conjunction optimizes to the plan one filter
+    // per predicate would, and the whole read is one plan, analyzed once
+    val stored = loadPlan(spark, path, asOf)
+    val filtered = preds.reduceOption(_ && _)
+      .fold(stored)(p => Filter(org.apache.spark.sql.GraftShim.expression(spark, p), stored))
+    org.apache.spark.sql.GraftShim.ofRows(spark,
+      if (columns.nonEmpty)
+        Project(columns.map(c => org.apache.spark.sql.GraftShim.named(spark, col(c))), filtered)
+      else filtered)
   }
 
   /** Catalog listing ≙ `Corintick.list_uids` (Mongo $group aggregation):

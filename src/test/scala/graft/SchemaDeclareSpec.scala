@@ -164,6 +164,23 @@ class SchemaDeclareSpec extends AnyFunSuite {
     n.get
   }
 
+  test("a store whose partition column is declared void reads, and widens on a later append") {
+    val dir = tmp("graft_decl_void")
+    def day(d: Int) = base.withColumn("ts", col("ts") + expr(s"INTERVAL $d DAYS"))
+    TsStore.write(day(0).withColumn("p", lit(null).cast("string")), dir, uidCols = Seq("p"))
+    assert(partType(GraftTable.latestDeclared(dir).get) === NullType)
+    assert(TsStore.load(spark, dir).count() === 4L)
+    TsStore.write(day(1).withColumn("p", lit(null).cast("string")), dir, uidCols = Seq("p"),
+      mode = SaveMode.Append)
+    TsStore.write(day(2).withColumn("p", lit("A")), dir, uidCols = Seq("p"),
+      mode = SaveMode.Append)
+    assert(partType(GraftTable.latestDeclared(dir).get) === StringType)
+    val back = TsStore.load(spark, dir)
+    assert(back.count() === 12L)
+    assert(back.filter(col("p").isNull).count() === 8L)
+    assert(back.filter(col("p") === "A").count() === 4L)
+  }
+
   test("an Overwrite and a fresh-path Append run only their stage's jobs") {
     val df = base.withColumn("p", (col("id") % 2).cast("string")).localCheckpoint()
     // the stage's jobs (the range partitioning's two and the write's

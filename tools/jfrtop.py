@@ -3,7 +3,7 @@
 
     python3 tools/jfrtop.py REC.jfr [--thread PREFIX] [--root FRAME]
                             [--during FRAME] [--match TEXT] [--top N]
-                            [--callers FRAME]
+                            [--callers FRAME] [--native]
 
 Reads the recording's `jdk.ExecutionSample` events through the JDK's `jfr`
 tool and prints, for each frame (`package.Class.method`), the number and
@@ -28,6 +28,18 @@ share of samples whose stack holds it at least once: its inclusive share.
                    how many samples each chain of FRAME's nearest callers
                    accounts for; Guava cache, Scala closure and lambda
                    frames between them are skipped
+  --native         read `jdk.NativeMethodSample` events in place of
+                   execution samples (every option then applies to them,
+                   the --during window too)
+
+Why --native: JFR's execution sampler skips a thread while it runs native
+code, so time spent in a JNI call is invisible to the default view. A
+broadcast of the Hadoop conf spends most of its time in `Deflater`'s
+native compression; in a `tick_read` recording the execution samples put
+it at about 4 % of `main`, while timing it directly gave about 30 % of
+the read's wall time. The native sampler records exactly those threads,
+at a lower rate (20 ms under `settings=profile`), so compare shares
+within one view, not counts across the two.
 
 A frame argument matches a frame name exactly or as its suffix, so
 `FileStats.ofFile` names `graft.sources.FileStats$.ofFile`'s frame once
@@ -98,11 +110,11 @@ def callers(frames, frame):
     return " < ".join(out[:CALLER_DEPTH]) or "(root)"
 
 
-def samples(path):
+def samples(path, event="jdk.ExecutionSample"):
     """(epoch seconds, thread name, [frame names, leaf first]) per sample."""
     # `jfr print` keeps 5 frames of each stack unless told otherwise
     out = subprocess.run(["jfr", "print", "--json", "--stack-depth", "4096",
-                          "--events", "jdk.ExecutionSample", path],
+                          "--events", event, path],
                          capture_output=True, text=True, check=True).stdout
     for e in json.loads(out)["recording"]["events"]:
         v = e["values"]
@@ -127,9 +139,11 @@ def main(argv):
     ap.add_argument("--match")
     ap.add_argument("--top", type=int, default=40)
     ap.add_argument("--callers")
+    ap.add_argument("--native", action="store_true")
     a = ap.parse_args(argv[1:])
 
-    recs = list(samples(a.recording))
+    recs = list(samples(a.recording,
+                        "jdk.NativeMethodSample" if a.native else "jdk.ExecutionSample"))
     lo, hi = float("-inf"), float("inf")
     if a.during:
         ts = [t for t, th, fr in recs
